@@ -210,7 +210,7 @@ object ScaleProbe {
   def measure(spark: SparkSession, dir: String, names: Seq[String]): Map[String, (Double, Double, Double, Long)] = {
     val shufRead = new java.util.concurrent.atomic.AtomicLong()
     val spilled = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+    val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
         if (m != null) {
@@ -218,7 +218,8 @@ object ScaleProbe {
           spilled.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
         }
       }
-    })
+    }
+    spark.sparkContext.addSparkListener(listener)
     def drain(): Unit = org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
     def release(): Unit = {
       spark.catalog.clearCache()
@@ -231,7 +232,10 @@ object ScaleProbe {
       // released query keeps the cleaner ahead
       System.gc()
     }
-    names.map { n =>
+    // the listener is this call's own: removed on every exit, so repeated
+    // measures in one session (the probe's scales, a suite) never stack
+    // task-end listeners on the bus
+    try names.map { n =>
       // progress + failure isolation (round 14: a 60-minute probe run
       // died without a trace — the last queries in a long-lived probe
       // JVM are the likeliest to hit transient executor faults, and one
@@ -269,6 +273,7 @@ object ScaleProbe {
       release()
       res
     }.toMap
+    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Second measurement rung (VERDICT r8 #2): the three plans whose

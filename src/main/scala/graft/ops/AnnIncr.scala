@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables, U}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * shape: index build amortized over days, per-query cost ∝ bucket
   * collisions, never a corpus scan.
   */
-object AnnIncr {
+object AnnIncr extends IncrMember.SliceFold {
 
   private[ops] def codesTable(prefix: String) = s"${prefix}_codes"
   private[ops] def vecsTable(prefix: String) = s"${prefix}_vecs"
@@ -147,17 +147,23 @@ object AnnIncr {
   private def tombTable(prefix: String): IncrState.StateTable =
     IncrState.StateTable(delTable(prefix), "vec_id", Seq("vec_id", "src_day"))
 
-  /** Every table the lifecycle rewrites (tombstones compact alongside
-    * the state they retract from). */
-  private def allTables(prefix: String): Seq[IncrState.StateTable] =
-    stateTables(prefix) :+ tombTable(prefix)
+  /** Sizing reads the VECTOR store, not the codes: a width re-code
+    * legitimately collapses the codes table to one epoch, while the vecs
+    * layout always carries the full day history — so vecs is the honest
+    * compaction trigger. */
+  protected def sizingTable(prefix: String): String = vecsTable(prefix)
+  override protected def tombstones(prefix: String): Option[IncrMember.Tombstones] =
+    Some(IncrMember.Tombstones(tombTable(prefix), Seq("vec_id"), stateTables(prefix)))
 
-  /** The tombstoned vec_ids, when any delete ever ran (None = the
-    * pure-append path, which keeps its tombstone-free plans — the
-    * AnnIncrSuite exchange pins stay untouched unless a delete lands). */
-  private def tombstones(s: SparkSession, prefix: String): Option[DataFrame] =
-    if (!s.catalog.tableExists(delTable(prefix))) None
-    else Some(s.table(delTable(prefix)).select(col("vec_id")).distinct())
+  /** The SQL top-k view, re-registered at the k it was registered with. */
+  override protected def viewName(prefix: String): String = IncrViews.topkViewName(prefix)
+  override protected def registerView: Option[IncrMember.View] = Some((s, prefix, wh) =>
+    IncrViews.registerAnnTopK(s, prefix, wh, IncrViews.registeredK(s, prefix, wh)))
+
+  private[graft] def fold(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                          nb: Int): Unit = runDay(s, in, p, wh, day, nb)
+  private[graft] def retract(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                             nb: Int): Unit = deleteDay(s, in, p, wh, day, nb)
 
   /** Int64-scale a slice of the embeddings table (same 1e7 floor scheme
     * as the rest of the vector family — bit-exact cross-engine). */
@@ -207,10 +213,9 @@ object AnnIncr {
         Dedup.lshBucketsN(fresh.select($"vec_id", $"v"), ft, fb).withColumn("day", lit(day)),
         codesT, warehouse, day, nBuckets)
     }
-    IncrState.writeLastDay(s, warehouse, day, prefix)
-    // keep the SQL top-k view's baked planes/config current across a
-    // width migration (no-op catalog probe unless registerAnnTopK ran)
-    IncrViews.refreshAnnTopK(s, prefix, warehouse)
+    // keeps the SQL top-k view's baked planes/config current across a
+    // width migration
+    dayDone(s, prefix, warehouse, day)
   }
 
   /** Width migration (the bits-boundary re-code epoch): rebuild the
@@ -249,15 +254,6 @@ object AnnIncr {
     }
     fs.delete(new org.apache.hadoop.fs.Path(s"$warehouse/${recodeMarker(prefix)}"), false)
   }
-
-  /** Highest day ever folded into this warehouse; -1 when none. */
-  def lastDay(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.lastDay(s, warehouse, prefix)
-
-  /** Path-based twin for the suite's input-bytes test. */
-  def runDayPath(s: SparkSession, slicePath: String, prefix: String,
-                 warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    runDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Exact-reranked top-k over the persisted index for the given query
     * vectors (`(q_id, qv, qn)` rows). Candidate recall is one bucket
@@ -345,32 +341,11 @@ object AnnIncr {
   private[graft] def vecStore(s: SparkSession, prefix: String): DataFrame =
     s.table(vecsTable(prefix))
 
-  /** Lifecycle accessors + hook (IncrState). Sizing reads the VECTOR
-    * store, not the codes: a width re-code legitimately collapses the
-    * codes table to one epoch, while the vecs layout always carries the
-    * full day history — so vecs is the honest compaction trigger. */
-  def deltaDays(s: SparkSession, prefix: String, warehouse: String): Seq[Int] =
-    IncrState.deltaDays(s, vecsTable(prefix), warehouse)
-  def maxFilesPerBucket(s: SparkSession, prefix: String, warehouse: String): Int =
+  /** Max files per bucket over BOTH stores: the vecs table drives
+    * sizing, but a width re-code rewrites the codes table on its own. */
+  override def maxFilesPerBucket(s: SparkSession, prefix: String, warehouse: String): Int =
     math.max(IncrState.maxFilesPerBucket(s, vecsTable(prefix), warehouse),
       IncrState.maxFilesPerBucket(s, codesTable(prefix), warehouse))
-  def epochSizes(s: SparkSession, prefix: String, warehouse: String): Map[Int, Long] =
-    IncrState.epochSizes(s, vecsTable(prefix), warehouse)
-  def maybeCompact(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32, maxDeltaDays: Int = 8): Boolean =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.sizeTieredCompact(s, warehouse, allTables(prefix),
-        vecsTable(prefix), nBuckets, maxDeltaDays)
-    }
-  def compactState(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.compactAll(s, warehouse, allTables(prefix), nBuckets)
-    }
-
-  def dropState(s: SparkSession, prefix: String): Unit =
-    Seq(codesTable(prefix), vecsTable(prefix), delTable(prefix)).foreach(t =>
-      s.sql(s"DROP TABLE IF EXISTS $t"))
 
   /** Retraction (VERDICT r13 #1, round 14): fold a takedown set OUT of
     * the ANN index — by vec_id alone. The delete lands as tombstones
@@ -438,28 +413,9 @@ object AnnIncr {
         () => netMarker(),
         () => purgeDeleted(s, prefix, warehouse, nBuckets)))
     else netMarker()
-    IncrState.writeLastDay(s, warehouse, day, prefix)
     // first delete swaps the SQL top-k view to its tombstone-aware form
-    IncrViews.refreshAnnTopK(s, prefix, warehouse)
+    dayDone(s, prefix, warehouse, day)
   }
-
-  /** Path-based delete twin for the suite's input-bytes test. */
-  def deleteDayPath(s: SparkSession, slicePath: String, prefix: String,
-                    warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    deleteDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
-
-  /** Physically drop retracted rows from both state tables — the DELETE
-    * EPOCH (IncrState.compactAllWhere): one filtered state rewrite,
-    * O(state), never the raw corpus. The tombstones themselves are KEPT
-    * so delete-wins survives the purge. */
-  def purgeDeleted(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      tombstones(s, prefix).foreach { tomb =>
-        IncrState.compactAllWhere(s, warehouse, stateTables(prefix), nBuckets,
-          _ => df => df.join(broadcast(tomb), Seq("vec_id"), "left_anti"))
-      }
-    }
 
   /** Serving read-view of the vector store: a day replayed AFTER an
     * earlier compaction folded it re-lands identical rows under `day=N`
@@ -478,8 +434,7 @@ object AnnIncr {
     // query set, the rerank join, and any re-code) — a broadcast anti
     // join on the dimension-sized takedown set, present ONLY when a
     // delete ever ran
-    tombstones(s, prefix).fold(live)(t =>
-      live.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    minusTombstones(s, prefix, live)
   }
 
   /** The store-resident query set of the `q_ann_lsh` contract (every
@@ -501,23 +456,13 @@ object AnnIncr {
   /** Daily loop over `days` slices (vec_id mod days) + top-3 serving —
     * the oracle is the full-corpus LSH recompute (`q_ann_lsh`'s SQL
     * verbatim: bucket codes are pure functions of the vectors, so the
-    * folded index answers identically). The result lands in the
-    * warehouse and is read back so state tables can drop before the
-    * caller consumes the (lazy) frame. */
-  def incremental(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val prefix = "ann_incr_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDay(s, emb.filter(pmod(col("vec_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+    * folded index answers identically). */
+  def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "ann_incr", col("q_id"), col("rk")) { (prefix, wh) =>
+      val emb = Tables.embeddings(s, dir)
+      (0 until days).foreach(d => foldSlice(s, emb, col("vec_id"), prefix, wh, days, d, d))
+      topK(s, prefix, wh, storeQueries(s, prefix), 3)
     }
-    topK(s, prefix, wh, storeQueries(s, prefix), 3)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("q_id", "rk")
-  }
 
   /** Fold all but the last slice, RETRACT the vectors with
     * vec_id % 7 == 3 (including not-yet-arrived ids — a block-list),
@@ -526,24 +471,15 @@ object AnnIncr {
     * the takedown set excluded): the equality proves the tombstone
     * view-filter (query set AND answer set shrink), purge harmlessness,
     * and that post-delete folds of tombstoned ids stay invisible. */
-  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val prefix = "ann_del_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days - 1).foreach { day =>
-      runDay(s, emb.filter(pmod(col("vec_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "ann_del", col("q_id"), col("rk")) { (prefix, wh) =>
+      val emb = Tables.embeddings(s, dir)
+      (0 until days - 1).foreach(d => foldSlice(s, emb, col("vec_id"), prefix, wh, days, d, d))
+      deleteDay(s, emb.filter(pmod(col("vec_id"), lit(7L)) === 3)
+        .select(col("vec_id")), prefix, wh, days, nBuckets = 8, alsoPurge = true)
+      foldSlice(s, emb, col("vec_id"), prefix, wh, days, days - 1, days + 1)
+      topK(s, prefix, wh, storeQueries(s, prefix), 3)
     }
-    deleteDay(s, emb.filter(pmod(col("vec_id"), lit(7L)) === 3)
-      .select(col("vec_id")), prefix, wh, days, nBuckets = 8, alsoPurge = true)
-    runDay(s, emb.filter(pmod(col("vec_id"), lit(days.toLong)) === days - 1),
-      prefix, wh, days + 1, nBuckets = 8)
-    topK(s, prefix, wh, storeQueries(s, prefix), 3)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("q_id", "rk")
-  }
 
   val qs: Map[String, Q] = Map(
     "q_ann_incr" -> ((s, d) => incremental(s, d, 3)),

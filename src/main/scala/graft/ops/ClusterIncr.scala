@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * at ~1e7 scale, all sims computed dot/(√n2·√cn2) in double from
   * int64-exact inputs (the q_cluster_kmeans cross-engine recipe).
   */
-object ClusterIncr {
+object ClusterIncr extends IncrMember.SliceFold {
 
   /** Cluster count of the exhibit (matches q_cluster_kmeans' 8). */
   val K = 8
@@ -66,7 +66,7 @@ object ClusterIncr {
   private def centMarker(prefix: String) = s"_${prefix}_centroids"
   private def pendingMarker(prefix: String) = s"_${prefix}_reassign_pending"
 
-  private def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
+  private[ops] def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
     IncrState.StateTable(vecsTable(prefix), "vec_id", Seq("vec_id", "src_day")),
     IncrState.StateTable(cpartTable(prefix), "cl", Seq("cl", "src_day")),
     IncrState.StateTable(asgTable(prefix), "vec_id", Seq("vec_id", "src_day")))
@@ -80,20 +80,27 @@ object ClusterIncr {
   private def tombTable(prefix: String): IncrState.StateTable =
     IncrState.StateTable(delTable(prefix), "vec_id", Seq("vec_id"))
 
-  private def allTables(prefix: String): Seq[IncrState.StateTable] =
-    stateTables(prefix) :+ tombTable(prefix)
+  /** The vector table drives sizing. The centroid-partial table needs no
+    * purge (its retraction is the signed netting). */
+  protected def sizingTable(prefix: String): String = vecsTable(prefix)
+  override protected def tombstones(prefix: String): Option[IncrMember.Tombstones] = {
+    val Seq(vecsT, _, asgT) = stateTables(prefix)
+    Some(IncrMember.Tombstones(tombTable(prefix), Seq("vec_id"), Seq(vecsT, asgT)))
+  }
 
-  /** The tombstoned vec_ids, when any delete ever ran (None = the
-    * pure-append path, whose plans stay tombstone-free). */
-  private def tombstones(s: SparkSession, prefix: String): Option[DataFrame] =
-    if (!s.catalog.tableExists(delTable(prefix))) None
-    else Some(s.table(delTable(prefix)).select(col("vec_id")).distinct())
+  override protected def registerView: Option[IncrMember.View] =
+    Some(IncrViews.registerCluster(_, _, _))
 
-  /** Anti-join a state read against the tombstones (identity when no
-    * delete ever ran — the suite's exchange pins stay untouched). */
-  private def minusTomb(s: SparkSession, prefix: String, df: DataFrame): DataFrame =
-    tombstones(s, prefix).fold(df)(t =>
-      df.join(broadcast(t), Seq("vec_id"), "left_anti"))
+  private[graft] def fold(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                          nb: Int): Unit = runDay(s, in, p, wh, day, nb)
+  private[graft] def retract(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                             nb: Int): Unit = deleteDay(s, in, p, wh, day, nb)
+
+  /** The drives' drift check after every fold and delete. */
+  override private[graft] def afterStep(s: SparkSession, prefix: String, warehouse: String,
+                                        nBuckets: Int): Unit = {
+    maybeReassign(s, prefix, warehouse, nBuckets = nBuckets); ()
+  }
 
   /** (cl, cvec, cn2) rows for a driver-held centroid set — the K-row
     * broadcast side of every assignment. */
@@ -188,14 +195,9 @@ object ClusterIncr {
           vecsT, warehouse, day, nBuckets),
         () => IncrState.writeDay(s, parts, cpartT, warehouse, day, nBuckets),
         () => IncrState.writeDay(s, asg, asgT, warehouse, day, nBuckets)))
-      IncrState.writeLastDay(s, warehouse, day, prefix)
+      dayDone(s, prefix, warehouse, day)
     } finally { m.unpersist(); () }
   }
-
-  /** Path-based twin for the suite's input-bytes test. */
-  def runDayPath(s: SparkSession, slicePath: String, prefix: String,
-                 warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    runDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Retraction (VERDICT r13 #1, round 14): fold one day's DELETED
     * embedding rows OUT of the clustering state. The state algebra
@@ -245,31 +247,11 @@ object ClusterIncr {
           () => writeParts(),
           () => purgeDeleted(s, prefix, warehouse, nBuckets)))
       } else IncrState.concurrently(Seq(() => writeTomb(), () => writeParts()))
-      IncrState.writeLastDay(s, warehouse, day, prefix)
-      // the first delete creates the vec tombstone table — swap the SQL
-      // report view to its tombstone-aware form (no-op unless registered)
-      IncrViews.refreshCluster(s, prefix, warehouse)
+      // the first delete creates the vec tombstone table — swaps the SQL
+      // report view to its tombstone-aware form
+      dayDone(s, prefix, warehouse, day)
     } finally { m.unpersist(); () }
   }
-
-  /** Path-based delete twin for the suite's input-bytes test. */
-  def deleteDayPath(s: SparkSession, slicePath: String, prefix: String,
-                    warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    deleteDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
-
-  /** Physically drop retracted rows from the vector/assignment state —
-    * the DELETE EPOCH (IncrState.compactAllWhere); the centroid-partial
-    * table needs no purge (its retraction is the signed netting) and
-    * the tombstones are KEPT so delete-wins survives the purge. */
-  def purgeDeleted(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      tombstones(s, prefix).foreach { tomb =>
-        val Seq(vecsT, _, asgT) = stateTables(prefix)
-        IncrState.compactAllWhere(s, warehouse, Seq(vecsT, asgT), nBuckets,
-          _ => df => df.join(broadcast(tomb), Seq("vec_id"), "left_anti"))
-      }
-    }
 
   /** Refined centroids from the persisted partials: merge the
     * per-(cl, src_day) sums and floor-average. The partial table is
@@ -336,7 +318,7 @@ object ClusterIncr {
     val existing = (IncrState.deltaDays(s, asgT.name, warehouse) ++
       IncrState.epochSizes(s, asgT.name, warehouse).keys).toSeq
     val newEpoch = math.min(IncrState.EpochDay, existing.minOption.getOrElse(0) - 1)
-    val vecs = minusTomb(s, prefix, s.table(vecsTable(prefix))
+    val vecs = minusTombstones(s, prefix, s.table(vecsTable(prefix))
       .select($"vec_id", $"v", $"n2", $"src_day")
       .dropDuplicates("vec_id", "src_day"))
     // each row KEEPS its original src_day (provenance); only the
@@ -383,7 +365,7 @@ object ClusterIncr {
     import s.implicits._
     IncrState.ensureRegistered(s, stateTables(prefix)(2), warehouse)
     IncrState.ensureRegistered(s, tombTable(prefix), warehouse)
-    minusTomb(s, prefix, s.table(asgTable(prefix))
+    minusTombstones(s, prefix, s.table(asgTable(prefix))
       .select($"vec_id", $"cl", $"sim_i", $"src_day")
       .dropDuplicates("vec_id", "src_day"))
       .groupBy($"cl".as("cluster"))
@@ -394,32 +376,6 @@ object ClusterIncr {
       .orderBy("cluster")
   }
 
-  /** Lifecycle accessors + hooks (IncrState; the vector table drives sizing). */
-  def deltaDays(s: SparkSession, prefix: String, warehouse: String): Seq[Int] =
-    IncrState.deltaDays(s, vecsTable(prefix), warehouse)
-  def maxFilesPerBucket(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.maxFilesPerBucket(s, vecsTable(prefix), warehouse)
-  def epochSizes(s: SparkSession, prefix: String, warehouse: String): Map[Int, Long] =
-    IncrState.epochSizes(s, vecsTable(prefix), warehouse)
-  def maybeCompact(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32, maxDeltaDays: Int = 8): Boolean =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.sizeTieredCompact(s, warehouse, allTables(prefix),
-        vecsTable(prefix), nBuckets, maxDeltaDays)
-    }
-  def compactState(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.compactAll(s, warehouse, allTables(prefix), nBuckets)
-    }
-
-  /** Highest day ever folded into this warehouse; -1 when none. */
-  def lastDay(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.lastDay(s, warehouse, prefix)
-
-  def dropState(s: SparkSession, prefix: String): Unit =
-    allTables(prefix).foreach(t => s.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-
   /** Daily loop over `days` slices (vec_id mod days) + the final
     * re-assign epoch + report — the oracle is the batch recompute (seed
     * argmax → one Lloyd refinement → reassignment, seed literals
@@ -427,21 +383,13 @@ object ClusterIncr {
     * of slicing: per-day assignments against interim epochs are the
     * serving fast path, the epoch reconciles them against the full
     * refined centroids. */
-  def incremental(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val prefix = "cluster_incr_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDay(s, emb.filter(pmod(col("vec_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+  def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "cluster_incr", col("cluster")) { (prefix, wh) =>
+      val emb = Tables.embeddings(s, dir)
+      (0 until days).foreach(d => foldSlice(s, emb, col("vec_id"), prefix, wh, days, d, d))
+      reassign(s, prefix, wh, nBuckets = 8)
+      report(s, prefix, wh)
     }
-    reassign(s, prefix, wh, nBuckets = 8)
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("cluster")
-  }
 
   /** Fold `days` slices, RETRACT the embedding rows with
     * vec_id % 7 == 3 (a takedown set spanning every fold day) as delete
@@ -451,23 +399,15 @@ object ClusterIncr {
     * corpus's) AND the tombstone filter (retracted vectors leave the
     * re-assign and the report) land exactly on
     * batch-on-reduced-corpus. */
-  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val prefix = "cluster_del_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDay(s, emb.filter(pmod(col("vec_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "cluster_del", col("cluster")) { (prefix, wh) =>
+      val emb = Tables.embeddings(s, dir)
+      (0 until days).foreach(d => foldSlice(s, emb, col("vec_id"), prefix, wh, days, d, d))
+      deleteDay(s, emb.filter(pmod(col("vec_id"), lit(7L)) === 3),
+        prefix, wh, days, nBuckets = 8, alsoPurge = true)
+      reassign(s, prefix, wh, nBuckets = 8)
+      report(s, prefix, wh)
     }
-    deleteDay(s, emb.filter(pmod(col("vec_id"), lit(7L)) === 3),
-      prefix, wh, days, nBuckets = 8, alsoPurge = true)
-    reassign(s, prefix, wh, nBuckets = 8)
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("cluster")
-  }
 
   val qs: Map[String, Q] = Map(
     "q_cluster_incr" -> ((s, d) => incremental(s, d, 3)),

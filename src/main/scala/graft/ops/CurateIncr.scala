@@ -30,26 +30,11 @@ import org.apache.spark.sql.functions._
   * report is a handful of small aggregates over the state tables
   * (keeper-table-sized, not corpus-sized).
   */
-object CurateIncr {
+object CurateIncr extends IncrMember.SliceFold {
 
-  /** Per-run state root, removed on JVM exit (results read lazily from
-    * parquet, so cleanup must not race the consumer). */
-  private lazy val stateRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_curate_incr_")
-    sys.addShutdownHook {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(root)) {
-        val s = Files.walk(root)
-        try s.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-        finally s.close()
-      }
-    }
-    root
-  }
-
-  def newStateDir(): String =
-    stateRoot.resolve(java.util.UUID.randomUUID().toString).toString
+  /** A fresh state dir for the v<N> backend (IncrState's per-run root,
+    * removed on JVM exit). */
+  def newStateDir(): String = IncrState.newWarehouse()
 
   /** Deterministic train/valid/test split of a doc_id (same convention
     * as q_pipeline_curate2: portable h64 of "split:<id>" mod 1000). */
@@ -69,10 +54,6 @@ object CurateIncr {
         expr("n_distinct * 1000000 div n_toks") >= 300000)
       .withColumn("n_lines", expr("(n_toks + 2) div 3"))
       .withColumn("split", splitOf(col("doc_id")))
-
-  /** One day slice → the three partial tables (flattened schemas). */
-  def dayPartials(slice: DataFrame): (DataFrame, DataFrame, DataFrame) =
-    dayPartialsOf(gated(slice))
 
   private def dayPartialsOf(g: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val md5P = g
@@ -207,154 +188,10 @@ object CurateIncr {
       .orderBy("split", "lang")
   }
 
-  // ---------- bucketed-state backend ----------
-  //
-  // The parquet backend's daily merge is union + re-aggregate: correct,
-  // but it RE-SHUFFLES THE WHOLE STATE every day, and at 100 TB the
-  // line-keeper state is the largest table in the pipeline — a daily
-  // full state shuffle would dominate the whole job. This backend keeps
-  // each state table as a BUCKETED catalog table (hash-bucketed on its
-  // merge key, the BucketingSuite lever) and merges via a full-outer
-  // join instead: the bucketed state scan already satisfies the join's
-  // required partitioning, so the only exchange in the daily merge is
-  // the day slice's own partials — state bytes never cross the wire.
-  // least() on the keeper structs skips the null side of the full-outer
-  // join, which is exactly min-merge; tf adds coalesced counts. The
-  // suite pins result-equality with the parquet backend AND the
-  // single-exchange plan shape.
-
-  private def structMd5(df: DataFrame): DataFrame =
-    df.select(col("k_md5"),
-      struct(col("doc_id"), col("lang"), col("n_toks"), col("n_lines")).as("k"))
-  private def structLine(df: DataFrame): DataFrame =
-    df.select(col("line"),
-      struct(col("doc_id"), col("idx"), col("lang"), col("len")).as("k"))
-
-  private def tableName(prefix: String, kind: String, day: Int) =
-    s"${prefix}_${kind}_v$day"
-
-  /** Restart half of the bucketed backend (the IncrState.ensureRegistered
-    * contract for these NON-partitioned versioned tables): the in-memory
-    * catalog dies with the JVM but the warehouse dirs survive — if the
-    * table is missing from the catalog and a `_graft_buckets` marker
-    * (written at create: "<n> <col,col>") identifies the physical
-    * layout, re-register it with the exact original bucket spec so the
-    * exchange-free merge keeps standing after a process restart. */
-  private def ensureRegisteredFlat(s: SparkSession, table: String,
-                                   warehouse: String): Unit =
-    if (!s.catalog.tableExists(table)) {
-      val path = s"$warehouse/$table"
-      val m = new org.apache.hadoop.fs.Path(s"$path/_graft_buckets")
-      val fs = m.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(m)) {
-        val in = fs.open(m)
-        val txt = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
-        txt.trim.split(' ') match {
-          case Array(n, cols) if n.toIntOption.isDefined =>
-            val ddlCols = s.read.parquet(path).schema.fields
-              .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-            s.sql(
-              s"""CREATE TABLE $table ($ddlCols)
-                 |USING PARQUET
-                 |CLUSTERED BY (${cols.split(',').mkString(", ")}) INTO ${n.toInt} BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-          case _ => ()
-        }
-      }
-    }
-
-  /** The three day-N merged state DataFrames against the bucketed
-    * v(N−1) tables (exposed so the suite can pin the plan shape). Pass
-    * `warehouse` to make the read restart-safe (re-registration). */
-  def mergedBucketed(s: SparkSession, prefix: String, day: Int,
-                     partials: (DataFrame, DataFrame, DataFrame),
-                     warehouse: Option[String] = None)
-      : (DataFrame, DataFrame, DataFrame) = {
-    warehouse.foreach(w => Seq("md5", "line", "tf").foreach(k =>
-      ensureRegisteredFlat(s, tableName(prefix, k, day - 1), w)))
-    val (md5D, lineD, tfD) = partials
-    val md5M = s.table(tableName(prefix, "md5", day - 1)).as("s")
-      .join(structMd5(md5D).as("d"), Seq("k_md5"), "full_outer")
-      .select(col("k_md5"), least(col("s.k"), col("d.k")).as("k"))
-    val lineM = s.table(tableName(prefix, "line", day - 1)).as("s")
-      .join(structLine(lineD).as("d"), Seq("line"), "full_outer")
-      .select(col("line"), least(col("s.k"), col("d.k")).as("k"))
-    val tfM = s.table(tableName(prefix, "tf", day - 1)).as("s")
-      .join(tfD.as("d"), Seq("split", "lang", "tok"), "full_outer")
-      .select(col("split"), col("lang"), col("tok"),
-        (coalesce(col("s.c"), lit(0L)) + coalesce(col("d.c"), lit(0L))).as("c"))
-    (md5M, lineM, tfM)
-  }
-
-  /** Fold one day into bucketed-catalog state (tables
-    * `{prefix}_{md5,line,tf}_v{day}` under `warehouse`). */
-  def runDayBucketed(s: SparkSession, slice: DataFrame, prefix: String,
-                     warehouse: String, day: Int, nBuckets: Int = 8): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-    val g = gated(slice).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val (md5D, lineD, tfD) = dayPartialsOf(g)
-    val (md5M, lineM, tfM) =
-      if (day == 0) (structMd5(md5D), structLine(lineD), tfD)
-      else mergedBucketed(s, prefix, day, (md5D, lineD, tfD), Some(warehouse))
-    def writeB(df: DataFrame, kind: String, cols: Seq[String]): Unit = {
-      val t = tableName(prefix, kind, day)
-      // repartition on the bucket key first (same Murmur3-pmod as the
-      // bucketizer): each task then holds exactly one bucket, so the
-      // write emits nBuckets files instead of tasks × buckets tiny ones
-      df.repartition(nBuckets, cols.map(col): _*).write.mode("overwrite")
-        .bucketBy(nBuckets, cols.head, cols.tail: _*)
-        .option("path", s"$warehouse/$t")
-        .saveAsTable(t)
-      // record the physical bucket spec beside the data so a JVM restart
-      // can re-register the table exactly (ensureRegisteredFlat)
-      val m = new org.apache.hadoop.fs.Path(s"$warehouse/$t/_graft_buckets")
-      val out = m.getFileSystem(s.sparkContext.hadoopConfiguration).create(m, true)
-      try out.write(s"$nBuckets ${cols.mkString(",")}".getBytes("UTF-8"))
-      finally out.close()
-    }
-    writeB(md5M, "md5", Seq("k_md5"))
-    writeB(lineM, "line", Seq("line"))
-    writeB(tfM, "tf", Seq("split", "lang", "tok"))
-    g.unpersist(blocking = false)
-    // retention: drop v(≤ day−2) tables AND their external files (same
-    // replay contract as gcVersions — exactly one prior version kept)
-    (0 to day - 2).foreach { n =>
-      Seq("md5", "line", "tf").foreach { k =>
-        val t = tableName(prefix, k, n)
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = java.nio.file.Paths.get(s"$warehouse/$t")
-        if (java.nio.file.Files.exists(p)) {
-          val w = java.nio.file.Files.walk(p)
-          try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(q => java.nio.file.Files.deleteIfExists(q))
-          finally w.close()
-        }
-      }
-    }
-  }
-
-  def reportBucketed(s: SparkSession, prefix: String, day: Int,
-                     warehouse: Option[String] = None): DataFrame = {
-    warehouse.foreach(w => Seq("md5", "line", "tf").foreach(k =>
-      ensureRegisteredFlat(s, tableName(prefix, k, day), w)))
-    reportFrom(
-      s.table(tableName(prefix, "md5", day)).select(col("k_md5"), col("k.*")),
-      s.table(tableName(prefix, "line", day)).select(col("line"), col("k.*")),
-      s.table(tableName(prefix, "tf", day)))
-  }
-
-  def dropBucketedState(s: SparkSession, prefix: String, upToDay: Int): Unit =
-    (0 to upToDay).foreach { n =>
-      Seq("md5", "line", "tf").foreach(k =>
-        s.sql(s"DROP TABLE IF EXISTS ${tableName(prefix, k, n)}"))
-    }
-
   // ---------- retractable member-level backend ----------
   //
-  // RETRACTION (VERDICT r13 #1, round 14). The two append-only backends
-  // above compress each keeper group to its MIN on the way in — the
+  // RETRACTION (VERDICT r13 #1, round 14). The append-only v<N> backend
+  // above compresses each keeper group to its MIN on the way in — the
   // cheapest possible state, but min() is lossy: when the keeper doc of
   // a group is taken down, the surviving members it displaced are gone
   // from the state, so no algebra can promote the next keeper. Exact
@@ -363,7 +200,7 @@ object CurateIncr {
   // never the text) with the keeper re-derived at read — and because
   // the member tables are bucketed on the GROUP key, that re-derive is
   // a bucket-local min with NO exchange, so serving keeps the same
-  // shuffle shape as the compressed backends. The trade is state size:
+  // shuffle shape as the compressed backend. The trade is state size:
   // member rows ∝ gated corpus instead of ∝ distinct keys — the price
   // of takedown support, paid only by deployments that opt into this
   // backend (the reference's overwrite-a-day semantics, src/main.py:
@@ -378,7 +215,7 @@ object CurateIncr {
   private[ops] def tfmTable(prefix: String) = s"${prefix}_tfm"
   private[ops] def delmTable(prefix: String) = s"${prefix}_del"
 
-  private def retractableTables(prefix: String): Seq[IncrState.StateTable] = Seq(
+  private[ops] def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
     IncrState.StateTable(md5mTable(prefix), "k_md5", Seq("k_md5", "doc_id")),
     IncrState.StateTable(linemTable(prefix), "line", Seq("line", "doc_id", "idx")),
     IncrState.StateTable(tfmTable(prefix), "tok", Seq("split", "lang", "tok", "src_day")))
@@ -386,16 +223,22 @@ object CurateIncr {
   private def tombMTable(prefix: String): IncrState.StateTable =
     IncrState.StateTable(delmTable(prefix), "doc_id", Seq("doc_id"))
 
-  private def allRetractableTables(prefix: String): Seq[IncrState.StateTable] =
-    retractableTables(prefix) :+ tombMTable(prefix)
+  /** The member contract covers the retractable backend: its tables
+    * (the line member table — the largest — drives sizing), the keeper
+    * tombstones (the tf table's retraction is the signed netting), the
+    * SQL view, and 8 buckets by default. */
+  override def DefaultBuckets: Int = 8
+  protected def sizingTable(prefix: String): String = linemTable(prefix)
+  override protected def tombstones(prefix: String): Option[IncrMember.Tombstones] =
+    Some(IncrMember.Tombstones(tombMTable(prefix), Seq("doc_id"), stateTables(prefix).take(2)))
 
-  private def tombstonesM(s: SparkSession, prefix: String): Option[DataFrame] =
-    if (!s.catalog.tableExists(delmTable(prefix))) None
-    else Some(s.table(delmTable(prefix)).select(col("doc_id")).distinct())
+  override protected def registerView: Option[IncrMember.View] =
+    Some(IncrViews.registerCurate(_, _, _))
 
-  private def minusTombM(s: SparkSession, prefix: String, df: DataFrame): DataFrame =
-    tombstonesM(s, prefix).fold(df)(t =>
-      df.join(broadcast(t), Seq("doc_id"), "left_anti"))
+  private[graft] def fold(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                          nb: Int): Unit = runDayRetractable(s, in, p, wh, day, nb)
+  private[graft] def retract(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                             nb: Int): Unit = deleteDayRetractable(s, in, p, wh, day, nb)
 
   /** The member-level partials of one gated slice: per-doc md5 metadata
     * rows, per-(line, doc) occurrence rows, per-day tf counts. */
@@ -421,7 +264,7 @@ object CurateIncr {
   def runDayRetractable(s: SparkSession, slice: DataFrame, prefix: String,
                         warehouse: String, day: Int, nBuckets: Int = 8): Unit =
     IncrState.withLease(s, warehouse, prefix) {
-    val Seq(md5T, lineT, tfT) = retractableTables(prefix)
+    val Seq(md5T, lineT, tfT) = stateTables(prefix)
     val g = gated(slice).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       val (md5M, lineM, tfM) = memberPartialsOf(g)
@@ -438,14 +281,9 @@ object CurateIncr {
           .withColumn("day", lit(day)), lineT, warehouse, day, nBuckets),
         () => IncrState.writeDay(s, tfM.withColumn("src_day", lit(day))
           .withColumn("day", lit(day)), tfT, warehouse, day, nBuckets)))
-      IncrState.writeLastDay(s, warehouse, day, prefix)
+      dayDone(s, prefix, warehouse, day)
     } finally { g.unpersist(blocking = false); () }
   }
-
-  /** Path-based twin for the suite's input-bytes test. */
-  def runDayRetractablePath(s: SparkSession, slicePath: String, prefix: String,
-                            warehouse: String, day: Int, nBuckets: Int = 8): Unit =
-    runDayRetractable(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Retract one day's DELETED documents: tombstones by doc_id for the
     * member keepers (the read-side anti-join re-derives every affected
@@ -457,7 +295,7 @@ object CurateIncr {
                            warehouse: String, day: Int, nBuckets: Int = 8,
                            alsoPurge: Boolean = false): Unit =
     IncrState.withLease(s, warehouse, prefix) {
-    val Seq(_, _, tfT) = retractableTables(prefix)
+    val Seq(_, _, tfT) = stateTables(prefix)
     val g = gated(deleted).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       val tfNeg = g
@@ -481,45 +319,28 @@ object CurateIncr {
         writeTomb()
         IncrState.concurrently(Seq(
           () => writeTfNeg(),
-          () => purgeDeletedRetractable(s, prefix, warehouse, nBuckets)))
+          () => purgeDeleted(s, prefix, warehouse, nBuckets)))
       } else IncrState.concurrently(Seq(() => writeTomb(), () => writeTfNeg()))
-      IncrState.writeLastDay(s, warehouse, day, prefix)
-      // first delete creates the keeper tombstone table — swap the SQL
-      // report view to its tombstone-aware form (no-op unless registered)
-      IncrViews.refreshCurate(s, prefix, warehouse)
+      // first delete creates the keeper tombstone table — swaps the SQL
+      // report view to its tombstone-aware form
+      dayDone(s, prefix, warehouse, day)
     } finally { g.unpersist(blocking = false); () }
   }
-
-  /** Path-based delete twin for the suite's input-bytes test. */
-  def deleteDayRetractablePath(s: SparkSession, slicePath: String, prefix: String,
-                               warehouse: String, day: Int, nBuckets: Int = 8): Unit =
-    deleteDayRetractable(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
-
-  /** Physical delete epoch for the member keepers (the tf table's
-    * retraction is the signed netting; tombstones are KEPT). */
-  def purgeDeletedRetractable(s: SparkSession, prefix: String, warehouse: String,
-                              nBuckets: Int = 8): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      tombstonesM(s, prefix).foreach { tomb =>
-        IncrState.compactAllWhere(s, warehouse, retractableTables(prefix).take(2),
-          nBuckets, _ => df => df.join(broadcast(tomb), Seq("doc_id"), "left_anti"))
-      }
-    }
 
   /** Serving report off the retractable state — identical output to the
     * other backends. Keepers re-derive per group over the bucketed
     * member scans (replay dedup + min, both bucket-local, NO exchange);
     * tf nets the signed partials and drops fully-retracted rows. */
   def reportRetractable(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
-    allRetractableTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
-    val md5P = minusTombM(s, prefix,
+    allTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
+    val md5P = minusTombstones(s, prefix,
       s.table(md5mTable(prefix))
         .select(col("k_md5"), col("doc_id"), col("lang"), col("n_toks"), col("n_lines"))
         .dropDuplicates("k_md5", "doc_id"))
       .groupBy(col("k_md5"))
       .agg(min(struct(col("doc_id"), col("lang"), col("n_toks"), col("n_lines"))).as("k"))
       .select(col("k_md5"), col("k.doc_id"), col("k.lang"), col("k.n_toks"), col("k.n_lines"))
-    val lineP = minusTombM(s, prefix,
+    val lineP = minusTombstones(s, prefix,
       s.table(linemTable(prefix))
         .select(col("line"), col("doc_id"), col("idx"), col("lang"), col("len"))
         .dropDuplicates("line", "doc_id", "idx"))
@@ -535,35 +356,18 @@ object CurateIncr {
     reportFrom(md5P, lineP, tfP)
   }
 
-  /** Lifecycle hooks for the retractable backend (IncrState; the line
-    * member table — the largest — drives sizing). */
-  def maybeCompactRetractable(s: SparkSession, prefix: String, warehouse: String,
-                              nBuckets: Int = 8, maxDeltaDays: Int = 8): Boolean =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.sizeTieredCompact(s, warehouse, allRetractableTables(prefix),
-        linemTable(prefix), nBuckets, maxDeltaDays)
-    }
-  def compactRetractable(s: SparkSession, prefix: String, warehouse: String,
-                         nBuckets: Int = 8): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.compactAll(s, warehouse, allRetractableTables(prefix), nBuckets)
-    }
-
-  def dropRetractableState(s: SparkSession, prefix: String): Unit =
-    allRetractableTables(prefix).foreach(t => s.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-
   /** Run the full daily loop over `days` slices (doc_id mod days) and
     * finalize. The day split is arbitrary — the suite proves the report
     * is invariant to slice order and count, and the oracle (a full
     * recompute over all documents at once) proves the merge lossless. */
-  def incremental(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val state = newStateDir()
-    (0 until days).foreach { day =>
-      runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day), state, day)
+  def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "curate_incr", col("split"), col("lang")) { (_, state) =>
+      val docs = Tables.documents(s, dir)
+      (0 until days).foreach { day =>
+        runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day), state, day)
+      }
+      report(s, state, days - 1)
     }
-    report(s, state, days - 1)
-  }
 
   /** Retractable-backend exhibit: fold `days` slices at member level,
     * RETRACT the documents with doc_id % 7 == 3 (spanning every fold
@@ -571,22 +375,14 @@ object CurateIncr {
     * REDUCED corpus, proving keeper re-derive (a taken-down keeper's
     * group falls to its surviving min), tf netting, and purge
     * harmlessness land exactly on batch-on-reduced-corpus. */
-  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val prefix = "curate_del_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDayRetractable(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day),
-        prefix, wh, day)
+  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "curate_del", col("split"), col("lang")) { (prefix, wh) =>
+      val docs = Tables.documents(s, dir)
+      (0 until days).foreach(d => foldSlice(s, docs, col("doc_id"), prefix, wh, days, d, d))
+      deleteDayRetractable(s, docs.filter(pmod(col("doc_id"), lit(7L)) === 3),
+        prefix, wh, days, alsoPurge = true)
+      reportRetractable(s, prefix, wh)
     }
-    deleteDayRetractable(s, docs.filter(pmod(col("doc_id"), lit(7L)) === 3),
-      prefix, wh, days, alsoPurge = true)
-    reportRetractable(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropRetractableState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("split", "lang")
-  }
 
   val qs: Map[String, Q] = Map(
     "q_pipeline_curate_incr" -> ((s, d) => incremental(s, d, 3)),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables, U}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * (history parquet never re-read), (c) the band join's state side
   * exchange-free under the bucketed scan.
   */
-object DedupIncr {
+object DedupIncr extends IncrMember.SliceFold {
 
   val JaccardThreshold = 0.2
 
@@ -73,24 +73,24 @@ object DedupIncr {
   private def tombTable(prefix: String): IncrState.StateTable =
     IncrState.StateTable(delTable(prefix), "doc_id", Seq("doc_id"))
 
-  /** Every table the lifecycle rewrites — the tombstone set compacts
-    * alongside the state it retracts from. */
-  private def allTables(prefix: String): Seq[IncrState.StateTable] =
-    stateTables(prefix) :+ tombTable(prefix)
+  /** The band store drives sizing. */
+  protected def sizingTable(prefix: String): String = bandsTable(prefix)
+  override protected def tombstones(prefix: String): Option[IncrMember.Tombstones] =
+    Some(IncrMember.Tombstones(tombTable(prefix), Seq("doc_id"), stateTables(prefix)))
+
+  private[graft] def fold(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                          nb: Int): Unit = runDay(s, in, p, wh, day, nb)
+  private[graft] def retract(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                             nb: Int): Unit = deleteDay(s, in, p, wh, day, nb)
 
   /** The tombstoned doc_ids, when any delete ever ran (None = the
-    * pure-append path, which must keep its tombstone-free plans). */
-  private def tombstones(s: SparkSession, prefix: String,
-                         warehouse: String): Option[DataFrame] = {
+    * pure-append path, which must keep its tombstone-free plans); the
+    * tombstone table is re-registered first after a restart. */
+  private def registeredTombs(s: SparkSession, prefix: String,
+                              warehouse: String): Option[DataFrame] = {
     IncrState.ensureRegistered(s, tombTable(prefix), warehouse)
-    if (!s.catalog.tableExists(delTable(prefix))) None
-    else Some(s.table(delTable(prefix)).select(col("doc_id")).distinct())
+    tombstoneKeys(s, prefix)
   }
-
-  /** Epoch sentinel partition value: compaction folds all settled day
-    * partitions into `day = EpochDay`, which no real fold day (≥ 0)
-    * ever collides with, so fresh-side pruning is untouched. */
-  val EpochDay: Int = IncrState.EpochDay
 
   /** Fold one day's slice into the band store and land the day's
     * verified near-dup pairs in the ledger. Reads ONLY the slice plus
@@ -144,7 +144,7 @@ object DedupIncr {
     // to the corpus, so these are broadcast anti-joins on the
     // candidate-sized set — never a reshuffle of the band store, whose
     // retracted rows stay physically present until purgeDeleted)
-    val cand = tombstones(s, prefix, warehouse).fold(cand0) { tomb =>
+    val cand = registeredTombs(s, prefix, warehouse).fold(cand0) { tomb =>
       cand0
         .join(broadcast(tomb.select($"doc_id".as("d1"))), Seq("d1"), "left_anti")
         .join(broadcast(tomb.select($"doc_id".as("d2"))), Seq("d2"), "left_anti")
@@ -171,22 +171,8 @@ object DedupIncr {
     verified.withColumn("day", lit(day))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("day").parquet(pairsPath(warehouse, prefix))
-    // high-water marker: compaction folds day partitions into the epoch,
-    // so the partition layout alone cannot answer "what was the last
-    // fold?" after a quiet restart — a one-line marker can (idempotent:
-    // a replayed day N only ever rewrites the same or a lower value)
-    IncrState.writeLastDay(s, warehouse, day, prefix)
+    dayDone(s, prefix, warehouse, day)
   }
-
-  /** Highest day ever folded into this warehouse; -1 when none. */
-  def lastDay(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.lastDay(s, warehouse, prefix)
-
-  /** Path-based twin for the suite's input-bytes test (the day's inputs
-    * are, by construction, one slice dir + the state tables). */
-  def runDayPath(s: SparkSession, slicePath: String, prefix: String,
-                 warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    runDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Retraction (VERDICT r13 #1, round 14): fold a takedown set OUT of
     * the near-dup state — by doc_id ALONE, no text needed (unlike the
@@ -230,13 +216,8 @@ object DedupIncr {
         () => retractLedger(s, prefix, warehouse),
         () => purgeDeleted(s, prefix, warehouse, nBuckets)))
     else retractLedger(s, prefix, warehouse)
-    IncrState.writeLastDay(s, warehouse, day, prefix)
+    dayDone(s, prefix, warehouse, day)
   }
-
-  /** Path-based delete twin for the suite's input-bytes test. */
-  def deleteDayPath(s: SparkSession, slicePath: String, prefix: String,
-                    warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    deleteDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Drop every ledger pair touching a tombstoned doc_id — the same
     * stage→swap ordering as compactLedger, preserving the existing day
@@ -249,7 +230,7 @@ object DedupIncr {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
-    val tomb = tombstones(s, prefix, warehouse).getOrElse(return)
+    val tomb = registeredTombs(s, prefix, warehouse).getOrElse(return)
     val existing = fs.listStatus(root).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.startsWith("day="))
       .flatMap(_.drop(4).toIntOption)
@@ -270,23 +251,6 @@ object DedupIncr {
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
   }
 
-  /** Physically drop retracted rows from the band/shingle state — the
-    * DELETE EPOCH: a full compaction whose merge transform anti-joins
-    * the tombstone set (IncrState.compactAllWhere), so the purge costs
-    * exactly one state rewrite (O(state), never the raw corpus) and
-    * inherits the compaction's stage→swap crash ordering. Correctness
-    * never depends on it (the candidate anti-filter is the gate; the
-    * tombstones themselves are KEPT so delete-wins survives the purge) —
-    * run it when retracted bytes are worth reclaiming. */
-  def purgeDeleted(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      tombstones(s, prefix, warehouse).foreach { tomb =>
-        IncrState.compactAllWhere(s, warehouse, stateTables(prefix), nBuckets,
-          _ => df => df.join(broadcast(tomb), Seq("doc_id"), "left_anti"))
-      }
-    }
-
   /** Ledger schema, declared explicitly on every read: a day whose fold
     * finds NO pairs writes an empty partitioned frame — no data files,
     * no partition dirs — and schema INFERENCE over such a ledger throws
@@ -304,39 +268,6 @@ object DedupIncr {
     s.read.schema(pairsSchema).parquet(pairsPath(warehouse, prefix))
       .select("d1", "d2", "jac").distinct().orderBy("d1", "d2")
 
-  def dropState(s: SparkSession, prefix: String): Unit =
-    Seq(bandsTable(prefix), docsTable(prefix), delTable(prefix)).foreach(t =>
-      s.sql(s"DROP TABLE IF EXISTS $t"))
-
-  /** Non-epoch day partitions currently in the band store — the
-    * compaction trigger's input (metadata-only, IncrState). */
-  def deltaDays(s: SparkSession, prefix: String, warehouse: String): Seq[Int] =
-    IncrState.deltaDays(s, bandsTable(prefix), warehouse)
-
-  /** Max parquet files sharing one bucket id in the band store — the
-    * file-growth number the lifecycle bounds (again metadata-only). */
-  def maxFilesPerBucket(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.maxFilesPerBucket(s, bandsTable(prefix), warehouse)
-
-  /** Epoch partitions (day < 0) currently in the band store, with their
-    * on-disk bytes — the size-tiering input (metadata-only listing). */
-  def epochSizes(s: SparkSession, prefix: String, warehouse: String): Map[Int, Long] =
-    IncrState.epochSizes(s, bandsTable(prefix), warehouse)
-
-  /** STATE LIFECYCLE (VERDICT r11 #4). The state tables are append-only
-    * with one partition and one file-set per bucket per day — at daily
-    * cadence that is 365 partitions/year/table and unbounded file
-    * counts. `compactState` is the FULL merge: every partition (settled
-    * days and prior epochs alike) folds into one epoch, one file per
-    * bucket (IncrState.compactAll). Correctness is layout-independent:
-    * the candidate join reads the whole store and the fresh side prunes
-    * on the CURRENT day, which is never negative. */
-  def compactState(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.compactAll(s, warehouse, allTables(prefix), nBuckets)
-    }
-
   def compactLedger(s: SparkSession, prefix: String, warehouse: String,
                     retainFromDay: Option[Int] = None): Unit =
     IncrState.withLease(s, warehouse, prefix) {
@@ -350,7 +281,7 @@ object DedupIncr {
       .map(_.getPath.getName).filter(_.startsWith("day="))
       .flatMap(_.drop(4).toIntOption)
     if (existing.isEmpty) return
-    val newEpoch = math.min(EpochDay, existing.min - 1)
+    val newEpoch = math.min(IncrState.EpochDay, existing.min - 1)
     val cur = s.read.schema(pairsSchema).parquet(path)
     retainFromDay.fold(cur)(d => cur.filter(col("day") >= d || col("day") < 0))
       .withColumn("day", lit(newEpoch))
@@ -403,7 +334,7 @@ object DedupIncr {
       .map(_.getPath.getName).filter(_.startsWith("day="))
       .flatMap(_.drop(4).toIntOption)
     if (existing.isEmpty) return
-    val newEpoch = math.min(EpochDay, existing.min - 1)
+    val newEpoch = math.min(IncrState.EpochDay, existing.min - 1)
     s.conf.set("spark.sql.catalog.graft_merge",
       classOf[graft.sources.merge.MergeCatalog].getName)
     val tbl = s"graft_merge.ledger.pairs_$prefix"
@@ -446,50 +377,29 @@ object DedupIncr {
     s.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
-  /** Daily-cadence lifecycle hook: IncrState's size-tiered compaction
-    * over the band/doc group (see IncrState.sizeTieredCompact for the
-    * LSM scheme and its O(N log N) write-traffic bound). The ledger gets
-    * its single-partition rewrite alongside (pairs ≪ corpus — near-dup
-    * output, not state — so a full ledger rewrite is cheap and keeps
-    * provenance queries one-partition simple); `viaSql` routes that
-    * rewrite through the row-level statement path (compactLedgerSql) —
-    * the default stays the parquet rewrite in this sandbox because the
-    * statement catalog is an in-JVM buffer, not a durable store.
-    * Returns true when a compaction ran; metadata-only otherwise. */
-  def maybeCompact(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32, maxDeltaDays: Int = 8,
-                   retainFromDay: Option[Int] = None,
-                   viaSql: Boolean = false): Boolean =
+  /** Daily-cadence lifecycle hook: the member's size-tiered compaction
+    * over the band/doc group, plus the ledger's single-partition rewrite
+    * whenever a compaction ran (pairs ≪ corpus — near-dup output, not
+    * state — so a full ledger rewrite is cheap and keeps provenance
+    * queries one-partition simple). `compactLedgerSql` is the row-level
+    * statement variant of that rewrite. */
+  override def maybeCompact(s: SparkSession, prefix: String, warehouse: String,
+                            nBuckets: Int, maxDeltaDays: Int): Boolean =
     IncrState.withLease(s, warehouse, prefix) {
-    val ran = IncrState.sizeTieredCompact(s, warehouse, allTables(prefix),
-      bandsTable(prefix), nBuckets, maxDeltaDays)
-    if (ran) {
-      if (viaSql) compactLedgerSql(s, prefix, warehouse, retainFromDay)
-      else compactLedger(s, prefix, warehouse, retainFromDay)
+      val ran = super.maybeCompact(s, prefix, warehouse, nBuckets, maxDeltaDays)
+      if (ran) compactLedger(s, prefix, warehouse)
+      ran
     }
-    ran
-  }
 
   /** Daily loop over `days` slices (doc_id mod days) + final ledger —
     * the oracle is the full-corpus MinHash recompute (q_dedup_minhash's
     * SQL verbatim), which the suite also cross-checks at other slicings. */
-  def incremental(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val prefix = "dedup_incr_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = newWarehouse()
-    // bucket count is the deployment's scale knob (hundreds at crawl
-    // scale, sized so one bucket ≈ one task's worth of band rows); 8
-    // keeps the per-day file count sane at bench scale
-    (0 until days).foreach { day =>
-      runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+  def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "dedup_incr", col("d1"), col("d2")) { (prefix, wh) =>
+      val docs = Tables.documents(s, dir)
+      (0 until days).foreach(d => foldSlice(s, docs, col("doc_id"), prefix, wh, days, d, d))
+      pairs(s, prefix, wh)
     }
-    // the ledger is plain parquet — the state tables can drop now (DROP
-    // on the external tables leaves the files; JVM-exit cleanup owns them)
-    dropState(s, prefix)
-    pairs(s, prefix, wh)
-  }
 
   /** Fold all but the last slice, RETRACT the documents with
     * doc_id % 7 == 3 (the takedown set — including ids that have not
@@ -499,22 +409,15 @@ object DedupIncr {
     * mechanisms at once: the ledger rewrite (pairs already found), the
     * candidate anti-filter (the post-delete fold must not pair with any
     * tombstoned doc — past OR newly arriving), and purge harmlessness. */
-  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val prefix = "dedup_del_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = newWarehouse()
-    (0 until days - 1).foreach { day =>
-      runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "dedup_del", col("d1"), col("d2")) { (prefix, wh) =>
+      val docs = Tables.documents(s, dir)
+      (0 until days - 1).foreach(d => foldSlice(s, docs, col("doc_id"), prefix, wh, days, d, d))
+      deleteDay(s, docs.filter(pmod(col("doc_id"), lit(7L)) === 3)
+        .select(col("doc_id")), prefix, wh, days, nBuckets = 8, alsoPurge = true)
+      foldSlice(s, docs, col("doc_id"), prefix, wh, days, days - 1, days + 1)
+      pairs(s, prefix, wh)
     }
-    deleteDay(s, docs.filter(pmod(col("doc_id"), lit(7L)) === 3)
-      .select(col("doc_id")), prefix, wh, days, nBuckets = 8, alsoPurge = true)
-    runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === days - 1),
-      prefix, wh, days + 1, nBuckets = 8)
-    dropState(s, prefix)
-    pairs(s, prefix, wh)
-  }
 
   val qs: Map[String, Q] = Map(
     "q_dedup_incr" -> ((s, d) => incremental(s, d, 3)),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables, U}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,12 +40,21 @@ import org.apache.spark.sql.functions._
   * days, and the language set per domain is the union of the per-day
   * sets.
   */
-object DomainsIncr {
+object DomainsIncr extends IncrMember.SliceFold {
 
   private[ops] def dlTable(prefix: String) = s"${prefix}_dl"
 
-  private def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
+  private[ops] def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
     IncrState.StateTable(dlTable(prefix), "domain", Seq("domain", "lang", "src_day")))
+  protected def sizingTable(prefix: String): String = dlTable(prefix)
+
+  override protected def registerView: Option[IncrMember.View] =
+    Some(IncrViews.registerDomains(_, _, _))
+
+  private[graft] def fold(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                          nb: Int): Unit = runDay(s, in, p, wh, day, nb)
+  private[graft] def retract(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                             nb: Int): Unit = deleteDay(s, in, p, wh, day, nb)
 
   /** The deny-list dimension — a broadcast dim at real scale, inline
     * here (identical to the batch query's, ops/TextAnalysis.scala L25). */
@@ -72,13 +81,8 @@ object DomainsIncr {
         .withColumn("src_day", lit(day))
         .withColumn("day", lit(day))
       IncrState.writeDay(s, part, dlT, warehouse, day, nBuckets)
-      IncrState.writeLastDay(s, warehouse, day, prefix)
+      dayDone(s, prefix, warehouse, day)
     }
-
-  /** Path-based twin for the suite's input-bytes test. */
-  def runDayPath(s: SparkSession, slicePath: String, prefix: String,
-                 warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    runDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Retraction (VERDICT r13 #1): fold one day's DELETED documents OUT
     * of the statistics state — the takedown/GDPR path. The state is
@@ -105,13 +109,8 @@ object DomainsIncr {
         .withColumn("src_day", lit(day))
         .withColumn("day", lit(day))
       IncrState.writeDay(s, part, dlT, warehouse, day, nBuckets)
-      IncrState.writeLastDay(s, warehouse, day, prefix)
+      dayDone(s, prefix, warehouse, day)
     }
-
-  /** Path-based delete twin for the suite's input-bytes test. */
-  def deleteDayPath(s: SparkSession, slicePath: String, prefix: String,
-                    warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    deleteDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** The full domain report off the persisted state — output identical
     * to `q_url_domains`. Replay dedup → SIGNED partial net per
@@ -124,7 +123,7 @@ object DomainsIncr {
     * shuffle, identical to the batch plan's). */
   def report(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
     import s.implicits._
-    stateTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
+    allTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
     s.table(dlTable(prefix))
       .select($"domain", $"lang", $"src_day", $"n_part")
       .dropDuplicates("domain", "lang", "src_day")
@@ -138,50 +137,15 @@ object DomainsIncr {
       .orderBy("domain")
   }
 
-  /** Lifecycle accessors + hooks (IncrState; the one table drives sizing). */
-  def deltaDays(s: SparkSession, prefix: String, warehouse: String): Seq[Int] =
-    IncrState.deltaDays(s, dlTable(prefix), warehouse)
-  def maxFilesPerBucket(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.maxFilesPerBucket(s, dlTable(prefix), warehouse)
-  def epochSizes(s: SparkSession, prefix: String, warehouse: String): Map[Int, Long] =
-    IncrState.epochSizes(s, dlTable(prefix), warehouse)
-  def maybeCompact(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32, maxDeltaDays: Int = 8): Boolean =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.sizeTieredCompact(s, warehouse, stateTables(prefix),
-        dlTable(prefix), nBuckets, maxDeltaDays)
-    }
-  def compactState(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.compactAll(s, warehouse, stateTables(prefix), nBuckets)
-    }
-
-  /** Highest day ever folded into this warehouse; -1 when none. */
-  def lastDay(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.lastDay(s, warehouse, prefix)
-
-  def dropState(s: SparkSession, prefix: String): Unit =
-    s.sql(s"DROP TABLE IF EXISTS ${dlTable(prefix)}")
-
   /** Daily loop over `days` slices (doc_id mod days) + report — the
     * oracle is the full-corpus recompute (`q_url_domains`'s SQL
-    * verbatim). The result lands in the warehouse and is read back so
-    * state tables can drop before the caller consumes the lazy frame. */
-  def incremental(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val prefix = "domains_incr_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+    * verbatim). */
+  def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "domains_incr", col("domain")) { (prefix, wh) =>
+      val docs = Tables.documents(s, dir)
+      (0 until days).foreach(d => foldSlice(s, docs, col("doc_id"), prefix, wh, days, d, d))
+      report(s, prefix, wh)
     }
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("domain")
-  }
 
   /** Fold `days` slices, then RETRACT the documents with
     * doc_id % 7 == 3 (a deterministic takedown set spanning every fold
@@ -189,22 +153,14 @@ object DomainsIncr {
     * the REDUCED corpus (`q_url_domains`'s SQL with the takedown set
     * excluded), proving fold(deletes) == batch-on-reduced-corpus via
     * pure negative partials. */
-  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val prefix = "domains_del_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "domains_del", col("domain")) { (prefix, wh) =>
+      val docs = Tables.documents(s, dir)
+      (0 until days).foreach(d => foldSlice(s, docs, col("doc_id"), prefix, wh, days, d, d))
+      deleteDay(s, docs.filter(pmod(col("doc_id"), lit(7L)) === 3),
+        prefix, wh, days, nBuckets = 8)
+      report(s, prefix, wh)
     }
-    deleteDay(s, docs.filter(pmod(col("doc_id"), lit(7L)) === 3),
-      prefix, wh, days, nBuckets = 8)
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("domain")
-  }
 
   val qs: Map[String, Q] = Map(
     "q_domains_incr" -> ((s, d) => incremental(s, d, 3)),

@@ -17,14 +17,14 @@ import org.apache.spark.sql.SparkSession
   *   - MARKER SCALARS (TF-IDF's n_docs, quality's four counters) live
   *     in warehouse marker files, which Spark's file listing cannot see
   *     (underscore-prefixed = hidden). They are baked into the view SQL
-  *     as LITERALS at registration — and kept fresh by a refresh hook
-  *     at the end of every fold/delete (`refreshIfRegistered`: a no-op
+  *     as LITERALS at registration — and kept fresh by the member
+  *     contract's fold/delete epilogue (IncrMember.dayDone: a no-op
   *     catalog probe unless the view exists, then a CREATE OR REPLACE
   *     with the new literal — pure catalog ops, no jobs).
   *   - CONDITIONAL STATE (quality/triangle tombstone tables exist only
   *     once a delete ran): the SQL is generated against the tables
-  *     present at registration, and the delete path's refresh hook
-  *     swaps in the tombstone-aware form the moment it first matters.
+  *     present at registration, and the delete's epilogue swaps in the
+  *     tombstone-aware form the moment it first matters.
   *
   * Views use ONLY built-in functions (the house rule of
   * Catalog.operatorViews: a permanent view cannot reference a
@@ -52,14 +52,10 @@ object IncrViews {
     v
   }
 
-  private def refreshIfRegistered(s: SparkSession, prefix: String)
-                                 (register: => Unit): Unit =
-    if (s.catalog.tableExists(viewName(prefix))) register
-
   // ---- L46 incremental TF-IDF -------------------------------------
 
   /** n_docs is a literal from the `_doc_counts` marker — re-baked by
-    * the fold/delete refresh hooks so the view never goes stale.
+    * every fold/delete's re-registration so the view never goes stale.
     *
     * ROW SET equals the Scala report's; its final ORDER BY doc_id, rk is
     * intentionally OMITTED here (ADVICE r15): that ordering is pure
@@ -91,15 +87,11 @@ object IncrViews {
          |WHERE rk <= 3""".stripMargin)
   }
 
-  private[ops] def refreshTfidf(s: SparkSession, prefix: String,
-                                warehouse: String): Unit =
-    refreshIfRegistered(s, prefix) { registerTfidf(s, prefix, warehouse); () }
-
   // ---- L47 incremental domain stats --------------------------------
 
   /** Fully static (no marker scalars, single always-present state
-    * table) — register once, never needs a refresh. The deny list is
-    * the same inline dimension as the batch query's
+    * table) — the fold/delete re-registration replaces it unchanged. The
+    * deny list is the same inline dimension as the batch query's
     * (ops/TextAnalysis.scala L25), as VALUES. */
   def registerDomains(s: SparkSession, prefix: String, warehouse: String): String =
     create(s, prefix,
@@ -158,10 +150,6 @@ object IncrViews {
          |FROM nd""".stripMargin)
   }
 
-  private[ops] def refreshQuality(s: SparkSession, prefix: String,
-                                  warehouse: String): Unit =
-    refreshIfRegistered(s, prefix) { registerQuality(s, prefix, warehouse); () }
-
   // ---- L55 incremental triangles ------------------------------------
 
   /** No marker scalars; the only registration-time dependence is
@@ -197,10 +185,6 @@ object IncrViews {
          |ORDER BY tri DESC, part_key LIMIT 20""".stripMargin)
   }
 
-  private[ops] def refreshTriangles(s: SparkSession, prefix: String,
-                                    warehouse: String): Unit =
-    refreshIfRegistered(s, prefix) { registerTriangles(s, prefix, warehouse); () }
-
   // ---- L51 incremental k-means ---------------------------------------
 
   /** No marker scalars; the only registration-time dependence is the
@@ -228,10 +212,6 @@ object IncrViews {
          |             / (1000000.0 * CAST(COUNT(1) AS DOUBLE)), 6) AS mean_sim
          |FROM live GROUP BY cl""".stripMargin)
   }
-
-  private[ops] def refreshCluster(s: SparkSession, prefix: String,
-                                  warehouse: String): Unit =
-    refreshIfRegistered(s, prefix) { registerCluster(s, prefix, warehouse); () }
 
   // ---- L53 retractable curation (member-level keeper backend) ---------
 
@@ -294,10 +274,6 @@ object IncrViews {
          |        FULL OUTER JOIN d3 USING (split, lang)""".stripMargin)
   }
 
-  private[ops] def refreshCurate(s: SparkSession, prefix: String,
-                                 warehouse: String): Unit =
-    refreshIfRegistered(s, prefix) { registerCurate(s, prefix, warehouse); () }
-
   // ---- L45 incremental ANN top-k (VERDICT r15 #4) ---------------------
 
   def topkViewName(prefix: String): String = s"v_${prefix}_topk"
@@ -316,8 +292,8 @@ object IncrViews {
     *     only (q_id, qv);
     *   - the hyperplane sign bits bake the SAME `Dedup.planesFor(tables,
     *     bits)` literals the fold used (read from the warehouse's
-    *     `_ann_conf` marker at registration; the fold/delete refresh
-    *     hooks re-bake after a width migration), with `DotL.dot`
+    *     `_ann_conf` marker at registration; every fold/delete
+    *     re-bakes them after a width migration), with `DotL.dot`
     *     replaced by its built-in `aggregate(zip_with(...))` spelling
     *     (exact: both are wraparound int64 sums);
     *   - candidate recall, replay dedup, tombstone anti-join (present
@@ -327,7 +303,7 @@ object IncrViews {
     *     broadcast.
     *
     * k is fixed at registration (a view has no parameters) and recorded
-    * in the `_ann_topk_k` marker so refresh hooks re-register at the
+    * in the `_ann_topk_k` marker so fold/delete re-register at the
     * same k. Output matches `topK(s, prefix, wh, queries, k)` row-for-row
     * on the same landed queries (IncrViewsSuite pins fresh-session
     * equality and the ≤4-state-side-exchange plan). */
@@ -422,13 +398,11 @@ object IncrViews {
     v
   }
 
-  private[ops] def refreshAnnTopK(s: SparkSession, prefix: String,
-                                  warehouse: String): Unit =
-    if (s.catalog.tableExists(topkViewName(prefix))) {
-      val k = IncrState.readMarker(s, warehouse, s"_ann_topk_k.$prefix")
-        .flatMap(_.trim.toIntOption).getOrElse(3)
-      registerAnnTopK(s, prefix, warehouse, k); ()
-    }
+  /** The k the top-k view was last registered at (3 when unrecorded) —
+    * what the member's fold/delete re-registration reuses. */
+  private[ops] def registeredK(s: SparkSession, prefix: String, warehouse: String): Int =
+    IncrState.readMarker(s, warehouse, s"_ann_topk_k.$prefix")
+      .flatMap(_.trim.toIntOption).getOrElse(3)
 
   /** Drop a previously registered report view (member dropState twins). */
   def dropView(s: SparkSession, prefix: String): Unit = {

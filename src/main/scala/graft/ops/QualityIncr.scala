@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables, U}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * it needs a fresh state prefix. Oracle = the batch recompute on the
   * reduced corpus (`q_quality_del`).
   */
-object QualityIncr {
+object QualityIncr extends IncrMember {
 
   private[ops] def pkTable(prefix: String) = s"${prefix}_pk"
   private[ops] def tombTable(prefix: String) = s"${prefix}_pk_del"
@@ -59,9 +59,13 @@ object QualityIncr {
   // to Spark's directory listings
   private def countsMarker(prefix: String) = s"_${prefix}_qc_counts"
 
-  private def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
+  private[ops] def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
     IncrState.StateTable(pkTable(prefix), "bkt", Seq("bkt", "src_day")),
     IncrState.StateTable(tombTable(prefix), "bkt", Seq("bkt", "src_day")))
+  protected def sizingTable(prefix: String): String = pkTable(prefix)
+
+  override protected def registerView: Option[IncrMember.View] =
+    Some(IncrViews.registerQuality(_, _, _))
 
   /** The batch query's planted-dirt transform (deterministic in
     * event_id, so slicing commutes with it): null/orphan uids, negated
@@ -156,10 +160,8 @@ object QualityIncr {
       () => IncrState.writeDay(s, sliceBitmaps(d, day), pkT, warehouse, day, nBuckets)))
     writeCounts(s, warehouse, prefix,
       readCounts(s, warehouse, prefix) + (day -> vals))
-    IncrState.writeLastDay(s, warehouse, day, prefix)
-    // keep the SQL report view's baked counter literals current (no-op
-    // unless IncrViews.registerQuality ever ran)
-    IncrViews.refreshQuality(s, prefix, warehouse)
+    // keeps the SQL report view's baked counter literals current
+    dayDone(s, prefix, warehouse, day)
   }
 
   /** Retraction (VERDICT r13 #1): fold one day's DELETED events out of
@@ -198,8 +200,7 @@ object QualityIncr {
       () => IncrState.writeDay(s, sliceBitmaps(d, day), tombT, warehouse, day, nBuckets)))
     writeCounts(s, warehouse, prefix,
       readCounts(s, warehouse, prefix) + (day -> vals))
-    IncrState.writeLastDay(s, warehouse, day, prefix)
-    IncrViews.refreshQuality(s, prefix, warehouse)
+    dayDone(s, prefix, warehouse, day)
   }
 
   /** Path-based delete twin for the suite's input-bytes test. */
@@ -223,7 +224,7 @@ object QualityIncr {
     * the `bkt` bucketing). */
   def report(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
     import s.implicits._
-    stateTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
+    allTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
     val sums = readCounts(s, warehouse, prefix).values
       .foldLeft(Seq(0L, 0L, 0L, 0L))((a, b) => a.zip(b).map(t => t._1 + t._2))
     val Seq(rc, nulls, negs, orph) = sums
@@ -261,51 +262,25 @@ object QualityIncr {
       .orderBy("check_name")
   }
 
-  /** Lifecycle accessors + hooks (IncrState; the one table drives sizing). */
-  def deltaDays(s: SparkSession, prefix: String, warehouse: String): Seq[Int] =
-    IncrState.deltaDays(s, pkTable(prefix), warehouse)
-  def maxFilesPerBucket(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.maxFilesPerBucket(s, pkTable(prefix), warehouse)
-  def epochSizes(s: SparkSession, prefix: String, warehouse: String): Map[Int, Long] =
-    IncrState.epochSizes(s, pkTable(prefix), warehouse)
-  def maybeCompact(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32, maxDeltaDays: Int = 8): Boolean =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.sizeTieredCompact(s, warehouse, stateTables(prefix),
-        pkTable(prefix), nBuckets, maxDeltaDays)
-    }
-  def compactState(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.compactAll(s, warehouse, stateTables(prefix), nBuckets)
-    }
-
-  /** Highest day ever folded into this warehouse; -1 when none. */
-  def lastDay(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.lastDay(s, warehouse, prefix)
-
-  def dropState(s: SparkSession, prefix: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS ${pkTable(prefix)}")
-    s.sql(s"DROP TABLE IF EXISTS ${tombTable(prefix)}")
-  }
-
   /** Daily loop over `days` slices (event_id mod days) + report — the
     * oracle is the full-corpus recompute (`q_quality_report`'s SQL
     * verbatim). */
-  def incremental(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-    val cust = Tables.customer(s, dir)
-    val prefix = "quality_incr_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
+  def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "quality_incr", col("check_name")) { (prefix, wh) =>
+      foldDays(s, dir, prefix, wh, days)
+      report(s, prefix, wh)
+    }
+
+  private def events(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir).select(col("event_id"), col("user_id"), col("value"))
+
+  private def foldDays(s: SparkSession, dir: String, prefix: String, wh: String,
+                       days: Int): Unit = {
+    val (ev, cust) = (events(s, dir), Tables.customer(s, dir))
     (0 until days).foreach { day =>
       runDay(s, ev.filter(pmod(col("event_id"), lit(days.toLong)) === day),
         cust, prefix, wh, day, nBuckets = 8)
     }
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("check_name")
   }
 
   /** Fold `days` slices, then RETRACT the events with
@@ -316,23 +291,13 @@ object QualityIncr {
     * pass proves fold(deletes) == batch-on-reduced-corpus exactly:
     * additive counters via negated marker lines, the distinct-PK term
     * via the tombstone and-not. */
-  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-    val cust = Tables.customer(s, dir)
-    val prefix = "quality_del_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDay(s, ev.filter(pmod(col("event_id"), lit(days.toLong)) === day),
-        cust, prefix, wh, day, nBuckets = 8)
+  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "quality_del", col("check_name")) { (prefix, wh) =>
+      foldDays(s, dir, prefix, wh, days)
+      deleteDay(s, events(s, dir).filter(pmod(col("event_id"), lit(7L)) === 3),
+        Tables.customer(s, dir), prefix, wh, days, nBuckets = 8)
+      report(s, prefix, wh)
     }
-    deleteDay(s, ev.filter(pmod(col("event_id"), lit(7L)) === 3),
-      cust, prefix, wh, days, nBuckets = 8)
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("check_name")
-  }
 
   val qs: Map[String, Q] = Map(
     "q_quality_incr" -> ((s, d) => incremental(s, d, 3)),

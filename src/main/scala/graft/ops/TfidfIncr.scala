@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables, U}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   * verbatim: summed per-day df partials equal the full-corpus df
   * because doc sets are disjoint across days.
   */
-object TfidfIncr {
+object TfidfIncr extends IncrMember.SliceFold {
 
   private[ops] def tfTable(prefix: String) = s"${prefix}_tf"
   private[ops] def dfTable(prefix: String) = s"${prefix}_df"
@@ -57,9 +57,20 @@ object TfidfIncr {
     * their n_docs. */
   private def docCountsMarker(prefix: String) = s"_doc_counts.$prefix"
 
-  private def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
+  private[ops] def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
     IncrState.StateTable(tfTable(prefix), "tok", Seq("doc_id", "tok", "src_day")),
     IncrState.StateTable(dfTable(prefix), "tok", Seq("tok", "src_day")))
+
+  /** The tf table drives sizing. */
+  protected def sizingTable(prefix: String): String = tfTable(prefix)
+
+  override protected def registerView: Option[IncrMember.View] =
+    Some(IncrViews.registerTfidf(_, _, _))
+
+  private[graft] def fold(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                          nb: Int): Unit = runDay(s, in, p, wh, day, nb)
+  private[graft] def retract(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                             nb: Int): Unit = deleteDay(s, in, p, wh, day, nb)
 
   /** Fold one day's documents into the statistics state. Reads ONLY the
     * slice (once, for the tf build) plus the fresh tf partition it just
@@ -93,16 +104,9 @@ object TfidfIncr {
       () => nDay = freshTf.select($"doc_id").distinct().count()))
     IncrState.writeDayCounts(s, warehouse, docCountsMarker(prefix),
       IncrState.readDayCounts(s, warehouse, docCountsMarker(prefix)) + (day -> nDay))
-    IncrState.writeLastDay(s, warehouse, day, prefix)
-    // keep the SQL report view's baked n_docs literal current (no-op
-    // catalog probe unless IncrViews.registerTfidf ever ran)
-    IncrViews.refreshTfidf(s, prefix, warehouse)
+    // keeps the SQL report view's baked n_docs literal current
+    dayDone(s, prefix, warehouse, day)
   }
-
-  /** Path-based twin for the suite's input-bytes test. */
-  def runDayPath(s: SparkSession, slicePath: String, prefix: String,
-                 warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    runDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Retraction (VERDICT r13 #1, round 14): fold one day's DELETED
     * documents OUT of the statistics state — the takedown/GDPR path.
@@ -145,14 +149,8 @@ object TfidfIncr {
       () => nDel = freshTf.select($"doc_id").distinct().count()))
     IncrState.writeDayCounts(s, warehouse, docCountsMarker(prefix),
       IncrState.readDayCounts(s, warehouse, docCountsMarker(prefix)) + (day -> -nDel))
-    IncrState.writeLastDay(s, warehouse, day, prefix)
-    IncrViews.refreshTfidf(s, prefix, warehouse)
+    dayDone(s, prefix, warehouse, day)
   }
-
-  /** Path-based delete twin for the suite's input-bytes test. */
-  def deleteDayPath(s: SparkSession, slicePath: String, prefix: String,
-                    warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    deleteDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Serving read-views: dedup on the natural key over the tok-bucketed
     * scans (a day replayed after a compaction re-lands identical rows
@@ -189,7 +187,7 @@ object TfidfIncr {
 
   def report(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
     import s.implicits._
-    stateTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
+    allTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
     val nDocs = this.nDocs(s, prefix, warehouse)
     val w = Window.partitionBy($"doc_id").orderBy($"score".desc, $"tok")
     tfView(s, prefix).join(dfTotals(s, prefix), "tok")
@@ -201,51 +199,15 @@ object TfidfIncr {
       .orderBy("doc_id", "rk")
   }
 
-  /** Lifecycle accessors + hooks (IncrState; tf table drives sizing). */
-  def deltaDays(s: SparkSession, prefix: String, warehouse: String): Seq[Int] =
-    IncrState.deltaDays(s, tfTable(prefix), warehouse)
-  def maxFilesPerBucket(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.maxFilesPerBucket(s, tfTable(prefix), warehouse)
-  def epochSizes(s: SparkSession, prefix: String, warehouse: String): Map[Int, Long] =
-    IncrState.epochSizes(s, tfTable(prefix), warehouse)
-  def maybeCompact(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32, maxDeltaDays: Int = 8): Boolean =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.sizeTieredCompact(s, warehouse, stateTables(prefix),
-        tfTable(prefix), nBuckets, maxDeltaDays)
-    }
-  def compactState(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.compactAll(s, warehouse, stateTables(prefix), nBuckets)
-    }
-
-  /** Highest day ever folded into this warehouse; -1 when none. */
-  def lastDay(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.lastDay(s, warehouse, prefix)
-
-  def dropState(s: SparkSession, prefix: String): Unit =
-    Seq(tfTable(prefix), dfTable(prefix)).foreach(t =>
-      s.sql(s"DROP TABLE IF EXISTS $t"))
-
   /** Daily loop over `days` slices (doc_id mod days) + report — the
     * oracle is the full-corpus recompute (`q_text_tfidf`'s SQL
-    * verbatim). The result lands in the warehouse and is read back so
-    * state tables can drop before the caller consumes the lazy frame. */
-  def incremental(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val prefix = "tfidf_incr_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+    * verbatim). */
+  def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "tfidf_incr", col("doc_id"), col("rk")) { (prefix, wh) =>
+      val docs = Tables.documents(s, dir)
+      (0 until days).foreach(d => foldSlice(s, docs, col("doc_id"), prefix, wh, days, d, d))
+      report(s, prefix, wh)
     }
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("doc_id", "rk")
-  }
 
   /** Fold `days` slices, then RETRACT the documents with
     * doc_id % 7 == 3 (a deterministic takedown set spanning every fold
@@ -254,22 +216,14 @@ object TfidfIncr {
     * excluded), proving fold(deletes) == batch-on-reduced-corpus via
     * pure signed-partial netting on BOTH state tables plus the negated
     * doc-count marker line. */
-  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val prefix = "tfidf_del_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    (0 until days).foreach { day =>
-      runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = 8)
+  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "tfidf_del", col("doc_id"), col("rk")) { (prefix, wh) =>
+      val docs = Tables.documents(s, dir)
+      (0 until days).foreach(d => foldSlice(s, docs, col("doc_id"), prefix, wh, days, d, d))
+      deleteDay(s, docs.filter(pmod(col("doc_id"), lit(7L)) === 3),
+        prefix, wh, days, nBuckets = 8)
+      report(s, prefix, wh)
     }
-    deleteDay(s, docs.filter(pmod(col("doc_id"), lit(7L)) === 3),
-      prefix, wh, days, nBuckets = 8)
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy("doc_id", "rk")
-  }
 
   val qs: Map[String, Q] = Map(
     "q_tfidf_incr" -> ((s, d) => incremental(s, d, 3)),

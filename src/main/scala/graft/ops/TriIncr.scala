@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables, U}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,25 +47,32 @@ import org.apache.spark.sql.functions._
   * profile bit-for-bit); `q_tri_del` uses the same SQL on the reduced
   * edge set.
   */
-object TriIncr {
+object TriIncr extends IncrMember.SliceFold {
 
   private[ops] def adjTable(prefix: String) = s"${prefix}_adj"
   private[ops] def triTable(prefix: String) = s"${prefix}_tri"
   private[ops] def delTable(prefix: String) = s"${prefix}_del"
 
-  private def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
+  private[ops] def stateTables(prefix: String): Seq[IncrState.StateTable] = Seq(
     IncrState.StateTable(adjTable(prefix), "x", Seq("x", "y")),
     IncrState.StateTable(triTable(prefix), "node", Seq("node", "src_day")))
 
   private def tombTable(prefix: String): IncrState.StateTable =
     IncrState.StateTable(delTable(prefix), "x", Seq("x", "y"))
 
-  private def allTables(prefix: String): Seq[IncrState.StateTable] =
-    stateTables(prefix) :+ tombTable(prefix)
+  /** The adjacency drives sizing and is the one table the purge filters
+    * (the tri partials' retraction is the signed netting). */
+  protected def sizingTable(prefix: String): String = adjTable(prefix)
+  override protected def tombstones(prefix: String): Option[IncrMember.Tombstones] =
+    Some(IncrMember.Tombstones(tombTable(prefix), Seq("x", "y"), stateTables(prefix).take(1)))
 
-  private def tombstones(s: SparkSession, prefix: String): Option[DataFrame] =
-    if (!s.catalog.tableExists(delTable(prefix))) None
-    else Some(s.table(delTable(prefix)).select(col("x"), col("y")).distinct())
+  override protected def registerView: Option[IncrMember.View] =
+    Some(IncrViews.registerTriangles(_, _, _))
+
+  private[graft] def fold(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                          nb: Int): Unit = runDay(s, in, p, wh, day, nb)
+  private[graft] def retract(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
+                             nb: Int): Unit = deleteDay(s, in, p, wh, day, nb)
 
   /** The live undirected adjacency (both orientations): replay dedup on
     * the natural key (bucket-local) minus the tombstones (a broadcast
@@ -74,8 +81,7 @@ object TriIncr {
   private def liveAdj(s: SparkSession, prefix: String): DataFrame = {
     val a = s.table(adjTable(prefix)).select(col("x"), col("y"))
       .dropDuplicates("x", "y")
-    tombstones(s, prefix).fold(a)(t =>
-      a.join(broadcast(t), Seq("x", "y"), "left_anti"))
+    minusTombstones(s, prefix, a)
   }
 
   /** Both orientations of a canonical (u < v) edge frame — via explode,
@@ -195,7 +201,7 @@ object TriIncr {
       val prior = s.table(adjTable(prefix)).filter($"day" =!= day)
         .select($"x".as("u"), $"y".as("v"))
       val fresh0 = canon.join(prior, Seq("u", "v"), "left_anti")
-      val fresh = tombstones(s, prefix).fold(fresh0)(t =>
+      val fresh = tombstoneKeys(s, prefix).fold(fresh0)(t =>
         fresh0.join(broadcast(t.select($"x".as("u"), $"y".as("v"))),
           Seq("u", "v"), "left_anti"))
       withLive(s, prefix) { (live, deg) =>
@@ -206,13 +212,8 @@ object TriIncr {
         IncrState.writeDay(s, parts, triT, warehouse, day, nBuckets)
       }
     } finally { canon.unpersist(false); () }
-    IncrState.writeLastDay(s, warehouse, day, prefix)
+    dayDone(s, prefix, warehouse, day)
   }
-
-  /** Path-based twin for the suite's input-bytes test. */
-  def runDayPath(s: SparkSession, slicePath: String, prefix: String,
-                 warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    runDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
 
   /** Retraction: fold a set of canonical (u < v) edges OUT. The lost
     * triangles — triangles of the CURRENT graph containing ≥1 deleted
@@ -239,27 +240,10 @@ object TriIncr {
     }
     IncrState.writeDay(s, bothWays(canon).withColumn("day", lit(day)),
       tombTable(prefix), warehouse, day, nBuckets)
-    IncrState.writeLastDay(s, warehouse, day, prefix)
-    // the first delete creates the tombstone table — swap the SQL report
-    // view to its tombstone-aware form (no-op unless registered)
-    IncrViews.refreshTriangles(s, prefix, warehouse)
+    // the first delete creates the tombstone table — swaps the SQL
+    // report view to its tombstone-aware form
+    dayDone(s, prefix, warehouse, day)
   }
-
-  /** Path-based delete twin for the suite's input-bytes test. */
-  def deleteDayPath(s: SparkSession, slicePath: String, prefix: String,
-                    warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    deleteDay(s, s.read.parquet(slicePath), prefix, warehouse, day, nBuckets)
-
-  /** Physical delete epoch for the adjacency (tombstones kept; the tri
-    * partials need no purge — their retraction is the signed netting). */
-  def purgeDeleted(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      tombstones(s, prefix).foreach { tomb =>
-        IncrState.compactAllWhere(s, warehouse, stateTables(prefix).take(1), nBuckets,
-          _ => df => df.join(broadcast(tomb), Seq("x", "y"), "left_anti"))
-      }
-    }
 
   /** The per-vertex triangle profile off the persisted state — output
     * identical to `q_graph_triangles` (part_key, tri, degree, cc_ppm,
@@ -283,27 +267,6 @@ object TriIncr {
       .orderBy($"tri".desc, $"part_key")
       .limit(20)
   }
-
-  /** Lifecycle (IncrState; the adjacency drives sizing). */
-  def deltaDays(s: SparkSession, prefix: String, warehouse: String): Seq[Int] =
-    IncrState.deltaDays(s, adjTable(prefix), warehouse)
-  def maxFilesPerBucket(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.maxFilesPerBucket(s, adjTable(prefix), warehouse)
-  def maybeCompact(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32, maxDeltaDays: Int = 8): Boolean =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.sizeTieredCompact(s, warehouse, allTables(prefix),
-        adjTable(prefix), nBuckets, maxDeltaDays)
-    }
-  def compactState(s: SparkSession, prefix: String, warehouse: String,
-                   nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      IncrState.compactAll(s, warehouse, allTables(prefix), nBuckets)
-    }
-  def lastDay(s: SparkSession, prefix: String, warehouse: String): Int =
-    IncrState.lastDay(s, warehouse, prefix)
-  def dropState(s: SparkSession, prefix: String): Unit =
-    allTables(prefix).foreach(t => s.sql(s"DROP TABLE IF EXISTS ${t.name}"))
 
   /** The exhibit's edge set: the part co-occurrence graph of every
     * SIXTH order, canonical u < v (q_graph_triangles' derivation with
@@ -361,23 +324,18 @@ object TriIncr {
     math.max(8, math.min(cap, ((edges + 99999) / 100000).toInt))
   }
 
-  /** Daily loop over `days` edge slices ((u + v) mod days) + report —
-    * the oracle is `q_graph_triangles`' SQL verbatim. */
-  def incremental(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val prefix = "tri_incr_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    val e0 = landedEdges(s, dir, wh)
-    val nb = exhibitBuckets(s, e0.count())
-    (0 until days).foreach { day =>
-      runDay(s, e0.filter(pmod(col("u") + col("v"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = nb)
+  /** The exhibits' slicing key: an edge's day is (u + v) mod days. */
+  private def sliceKey = col("u") + col("v")
+
+  /** Daily loop over `days` edge slices + report — the oracle is
+    * `q_graph_triangles`' SQL verbatim. */
+  def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "tri_incr", col("tri").desc, col("part_key")) { (prefix, wh) =>
+      val e0 = landedEdges(s, dir, wh)
+      val nb = exhibitBuckets(s, e0.count())
+      (0 until days).foreach(d => foldSlice(s, e0, sliceKey, prefix, wh, days, d, d, nb))
+      report(s, prefix, wh)
     }
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy(col("tri").desc, col("part_key"))
-  }
 
   /** Fold all but the last slice, RETRACT the edges with
     * (u + v) % 7 == 3 (spanning folded and not-yet-folded days — a
@@ -386,26 +344,17 @@ object TriIncr {
     * lost-triangle enumeration, the degree shrink through the live
     * view, and the block-list filter land exactly on
     * batch-on-reduced-graph. */
-  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame = {
-    val prefix = "tri_del_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = IncrState.newWarehouse()
-    val e0 = landedEdges(s, dir, wh)
-    val nb = exhibitBuckets(s, e0.count())
-    (0 until days - 1).foreach { day =>
-      runDay(s, e0.filter(pmod(col("u") + col("v"), lit(days.toLong)) === day),
-        prefix, wh, day, nBuckets = nb)
+  def incrementalDel(s: SparkSession, dir: String, days: Int): DataFrame =
+    exhibit(s, "tri_del", col("tri").desc, col("part_key")) { (prefix, wh) =>
+      val e0 = landedEdges(s, dir, wh)
+      val nb = exhibitBuckets(s, e0.count())
+      (0 until days - 1).foreach(d => foldSlice(s, e0, sliceKey, prefix, wh, days, d, d, nb))
+      deleteDay(s, e0.filter(pmod(sliceKey, lit(7L)) === 3),
+        prefix, wh, days, nBuckets = nb)
+      purgeDeleted(s, prefix, wh, nBuckets = nb)
+      foldSlice(s, e0, sliceKey, prefix, wh, days, days - 1, days + 1, nb)
+      report(s, prefix, wh)
     }
-    deleteDay(s, e0.filter(pmod(col("u") + col("v"), lit(7L)) === 3),
-      prefix, wh, days, nBuckets = nb)
-    purgeDeleted(s, prefix, wh, nBuckets = nb)
-    runDay(s, e0.filter(pmod(col("u") + col("v"), lit(days.toLong)) === days - 1),
-      prefix, wh, days + 1, nBuckets = nb)
-    report(s, prefix, wh)
-      .write.mode("overwrite").parquet(s"$wh/result")
-    dropState(s, prefix)
-    s.read.parquet(s"$wh/result").orderBy(col("tri").desc, col("part_key"))
-  }
 
   // Exhibit tier (VERDICT r14 #7): 2 fold days on the every-sixth-order
   // graph. The day count is demonstration, not proof — each day's

@@ -1,63 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{FloatType, ArrayType, IntegerType, LongType, StructField, StructType}
 
-/** The incremental ANN index fold DRIVEN AS A STREAM — the L45 sibling
-  * of DedupIncrStream/CurateIncrStream (same daily contract, reference
-  * main.tf:217): a file-stream inbox where each arriving parquet slice
-  * is "a day" of embeddings, `Trigger.AvailableNow` +
-  * maxFilesPerTrigger=1 so each slice is one micro-batch, and
-  * `foreachBatch` folding slice N into the code/vector stores as day N.
-  *
-  * Exactly-once without a transactional sink: the fold day IS the batch
-  * id and `AnnIncr.runDay` is idempotent per day (dynamic partition
-  * overwrite of exactly `day=N`), so a failed/replayed micro-batch
-  * rewrites its own partitions byte-identically. The checkpoint keeps
-  * the slice→batch-id mapping stable across restarts; a restart after
-  * new slices land folds ONLY the new slices. The IncrState size-tiered
-  * compaction rides along after each fold. */
-object AnnIncrStream {
+/** The incremental ANN index fold DRIVEN AS A STREAM (L45) on the shared
+  * drive (see IncrInboxStream): each inbox slice of embeddings folds
+  * into the code/vector stores as one day; `AnnIncr.runDay` is
+  * idempotent per day (dynamic partition overwrite of exactly `day=N`).
+  * CDC delete events need only `vec_id` (payload columns null — the ANN
+  * tombstone is keyed, L52 form); this is what lets ANN share one
+  * embeddings CDC inbox with the k-means member in the composed day
+  * driver (DayDriverSuite). */
+object AnnIncrStream extends MemberStream(graft.ops.AnnIncr) {
 
   val embSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  /** Drain every slice currently in `inboxDir` (one micro-batch per
-    * file) into the AnnIncr state at `warehouse`; returns the highest
-    * day folded (-1 if the inbox was empty and no state exists).
-    * Idempotent under restart with the same `checkpointDir`. */
-  def drainInbox(spark: SparkSession, inboxDir: String, prefix: String,
-                 warehouse: String, checkpointDir: String,
-                 nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drain(spark, inboxDir, checkpointDir, embSchema) { (batch, day) =>
-      graft.ops.AnnIncr.runDay(batch.sparkSession, batch, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.AnnIncr.maybeCompact(batch.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    }(graft.ops.AnnIncr.lastDay(spark, prefix, warehouse))
-
-  /** The CDC drive (round 16, completing the family's surface — every
-    * other member already had one): ONE ordered add/delete event stream
-    * on the shared drainCdc loop. Delete events need only `vec_id`
-    * (payload columns null — the ANN tombstone is keyed, L52 form);
-    * adds fold as day 2b, deletes as day 2b+1, delete wins. This is
-    * what lets ANN share one embeddings CDC inbox with the k-means
-    * member in the composed day driver (DayDriverSuite). */
-  def drainCdc(spark: SparkSession, inboxDir: String, prefix: String,
-               warehouse: String, checkpointDir: String,
-               nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drainCdc(spark, inboxDir, checkpointDir, embSchema) { (adds, day) =>
-      graft.ops.AnnIncr.runDay(adds.sparkSession, adds, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.AnnIncr.maybeCompact(adds.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    } { (dels, day) =>
-      graft.ops.AnnIncr.deleteDay(dels.sparkSession,
-        dels.select(org.apache.spark.sql.functions.col("vec_id")), prefix,
-        warehouse, day, nBuckets)
-    }(graft.ops.AnnIncr.lastDay(spark, prefix, warehouse))
+  protected def inboxSchema: StructType = embSchema
 
   /** The CDC inbox schema: the embedding columns + the op discriminator. */
   val cdcSchema: StructType = IncrInboxStream.cdcSchema(embSchema)

@@ -1,56 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
-/** The incremental k-means fold DRIVEN AS A STREAM — the L51 sibling
-  * of the other IncrInboxStream drives (same daily contract, same
-  * exactly-once argument; see IncrInboxStream). Each drained slice
-  * folds vectors + centroid partials + serving assignments; the drift
-  * check runs after every micro-batch, so the re-assign epoch fires
-  * inside the drain exactly when the refined centroids move. */
-object ClusterIncrStream {
-
-  /** Drain every slice currently in `inboxDir` (one micro-batch per
-    * file) into the ClusterIncr state at `warehouse`; returns the
-    * highest day folded (-1 if the inbox was empty and no state
-    * exists). Idempotent under restart with the same `checkpointDir`. */
-  def drainInbox(spark: SparkSession, inboxDir: String, prefix: String,
-                 warehouse: String, checkpointDir: String,
-                 nBuckets: Int = 8, maxDeltaDays: Int = 8,
-                 driftPpm: Long = 10000L): Int =
-    IncrInboxStream.drain(spark, inboxDir, checkpointDir,
-      AnnIncrStream.embSchema) { (batch, day) =>
-      graft.ops.ClusterIncr.runDay(batch.sparkSession, batch, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.ClusterIncr.maybeReassign(batch.sparkSession, prefix,
-        warehouse, driftPpm, nBuckets)
-      graft.ops.ClusterIncr.maybeCompact(batch.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    }(graft.ops.ClusterIncr.lastDay(spark, prefix, warehouse))
-
-  /** The CDC form (VERDICT r14 #5): the HYBRID retraction algebra (L54)
-    * on the shared drainCdc loop — delete events must carry the
-    * embeddings as folded (negated centroid partials re-derive from the
-    * slice; vec/assignment tombstones are keyed). The drift check runs
-    * after adds AND deletes: a takedown that moves the refined
-    * centroids past the gate triggers the re-assign epoch inside the
-    * drain, exactly like a fold. */
-  def drainCdc(spark: SparkSession, inboxDir: String, prefix: String,
-               warehouse: String, checkpointDir: String,
-               nBuckets: Int = 8, maxDeltaDays: Int = 8,
-               driftPpm: Long = 10000L): Int =
-    IncrInboxStream.drainCdc(spark, inboxDir, checkpointDir,
-      AnnIncrStream.embSchema) { (adds, day) =>
-      graft.ops.ClusterIncr.runDay(adds.sparkSession, adds, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.ClusterIncr.maybeReassign(adds.sparkSession, prefix,
-        warehouse, driftPpm, nBuckets)
-      graft.ops.ClusterIncr.maybeCompact(adds.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    } { (dels, day) =>
-      graft.ops.ClusterIncr.deleteDay(dels.sparkSession, dels, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.ClusterIncr.maybeReassign(dels.sparkSession, prefix,
-        warehouse, driftPpm, nBuckets)
-    }(graft.ops.ClusterIncr.lastDay(spark, prefix, warehouse))
+/** The incremental k-means fold DRIVEN AS A STREAM (L51) on the shared
+  * drive (see IncrInboxStream). Each drained slice folds vectors +
+  * centroid partials + serving assignments; the member's drift check
+  * runs after every fold and every delete, so the re-assign epoch fires
+  * inside the drain exactly when the refined centroids move (a takedown
+  * that moves them past the gate triggers it like a fold). The CDC form
+  * is the HYBRID retraction algebra (L54): delete events must carry the
+  * embeddings as folded (negated centroid partials re-derive from the
+  * slice; vec/assignment tombstones are keyed). */
+object ClusterIncrStream extends MemberStream(graft.ops.ClusterIncr) {
+  protected def inboxSchema: StructType = AnnIncrStream.embSchema
 }

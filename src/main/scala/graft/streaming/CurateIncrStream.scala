@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.CurateIncr
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -98,10 +99,10 @@ object CurateIncrStream {
     * batch's shingle persist is released only after runDay's actions. */
   def foldBatch(batch: DataFrame, stateDir: String, batchId: Int,
                 decontam: Option[DecontamRef]): Unit = decontam match {
-    case None => graft.ops.CurateIncr.runDay(batch.sparkSession, batch, stateDir, batchId)
+    case None => CurateIncr.runDay(batch.sparkSession, batch, stateDir, batchId)
     case Some(r) =>
       val (slice, sh) = decontaminateKeepShingles(batch, r)
-      try graft.ops.CurateIncr.runDay(batch.sparkSession, slice, stateDir, batchId)
+      try CurateIncr.runDay(batch.sparkSession, slice, stateDir, batchId)
       finally { sh.unpersist(blocking = false); () }
   }
 
@@ -114,11 +115,11 @@ object CurateIncrStream {
   def drainInbox(spark: SparkSession, inboxDir: String, stateDir: String,
                  checkpointDir: String,
                  decontam: Option[DecontamRef] = None): Int =
-    IncrInboxStream.drain(spark, inboxDir, checkpointDir, docSchema) { (batch, day) =>
+    IncrInboxStream.drainForm(spark, inboxDir, checkpointDir, docSchema, "plain") { (batch, day) =>
       foldBatch(batch, stateDir, day, decontam)
     } {
       // a restart that found no new files: recover the current version
-      // from the state layout itself (CurateIncr predates the warehouse
+      // from the state layout itself (the v<N> backend keeps no
       // high-water marker; its v<N> dirs are the equivalent record)
       val d = new java.io.File(stateDir)
       val vs = Option(d.list()).getOrElse(Array.empty[String])
@@ -126,22 +127,16 @@ object CurateIncrStream {
       if (vs.isEmpty) -1 else vs.max
     }
 
-  /** The CDC form (VERDICT r14 #5): add/delete events on the shared
-    * drainCdc loop against the RETRACTABLE backend (L53 — the
-    * member-level keeper state; the v<N> backend above compresses
-    * keepers lossily and cannot retract). Delete events must carry the
-    * documents as folded (the negated tf partials re-derive from the
-    * slice; the keeper tombstones are keyed on doc_id). */
+  /** The CDC form: add/delete events on the shared drive against the
+    * RETRACTABLE backend (L53 — the member-level keeper state; the v<N>
+    * backend above compresses keepers lossily and cannot retract).
+    * Delete events must carry the documents as folded (the negated tf
+    * partials re-derive from the slice; the keeper tombstones are keyed
+    * on doc_id). */
   def drainCdc(spark: SparkSession, inboxDir: String, prefix: String,
                warehouse: String, checkpointDir: String,
                nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drainCdc(spark, inboxDir, checkpointDir, docSchema) { (adds, day) =>
-      graft.ops.CurateIncr.runDayRetractable(adds.sparkSession, adds, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.CurateIncr.maybeCompactRetractable(adds.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    } { (dels, day) =>
-      graft.ops.CurateIncr.deleteDayRetractable(dels.sparkSession, dels, prefix,
-        warehouse, day, nBuckets)
-    }(graft.ops.IncrState.lastDay(spark, warehouse, prefix))
+    IncrInboxStream.drainCdc(spark, CurateIncr, docSchema, inboxDir, prefix, warehouse,
+      checkpointDir, nBuckets, maxDeltaDays)(CurateIncr.fold(_, _, prefix, warehouse, _, nBuckets))(
+      CurateIncr.retract(_, _, prefix, warehouse, _, nBuckets))
 }

@@ -1,82 +1,29 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** The incremental NEAR-DUP band-store fold DRIVEN AS A STREAM — the
-  * L44 sibling of CurateIncrStream (VERDICT r11 #6): a file-stream
-  * inbox where each arriving parquet slice is "a day" of documents
-  * (reference main.tf:217 daily schedule), `Trigger.AvailableNow` +
-  * maxFilesPerTrigger=1 so each slice is one micro-batch, and
-  * `foreachBatch` folding slice N into the band store as day N.
+/** The incremental NEAR-DUP band-store fold DRIVEN AS A STREAM (L44) on
+  * the shared drive (see IncrInboxStream): each inbox slice of
+  * documents folds into the band store as one day. `DedupIncr.runDay`
+  * is idempotent per day — every day-N write (band rows, shingle sets,
+  * ledger pairs) is a dynamic partition overwrite of exactly `day=N`,
+  * so a replayed micro-batch rewrites its own partitions byte-identically
+  * (all randomness shared through U.h64).
   *
-  * Exactly-once without a transactional sink: the fold day IS the batch
-  * id, and `DedupIncr.runDay` is idempotent per day — every day-N write
-  * (band rows, shingle sets, ledger pairs) is a dynamic partition
-  * overwrite of exactly `day=N`, so a failed/replayed micro-batch
-  * rewrites its own partitions byte-identically (all randomness shared
-  * through U.h64) instead of appending duplicates. The checkpoint
-  * guarantees the slice→batch-id mapping is stable across restarts, so
-  * restart + replay converges to the same state, and restarting with
-  * the same checkpoint after new slices land processes ONLY the new
-  * slices.
-  *
-  * The state LIFECYCLE rides along (VERDICT r11 #4): after each fold,
+  * The state LIFECYCLE rides along: after each fold,
   * `DedupIncr.maybeCompact` — a metadata-only listing unless the
   * settled-day count passes `maxDeltaDays` — folds history into the
-  * epoch partition, bounding partitions and files-per-bucket while the
-  * inbox grows without bound. Compaction after the state write is
-  * replay-safe: a replayed batch N only overwrites `day=N`, which a
-  * prior compaction has already emptied into the epoch — the rewrite
-  * re-lands the same rows under day=N and the NEXT compaction merges
-  * them; the ledger pair set is keyed (d1,d2) either way, so the
-  * recompute equality the suite pins is unaffected. */
-object DedupIncrStream {
-
-  /** Drain every slice currently in `inboxDir` (one micro-batch per
-    * file) into the DedupIncr state at `warehouse`; returns the highest
-    * day folded (-1 if the inbox was empty and no state exists).
-    * Idempotent under restart with the same `checkpointDir`. */
-  def drainInbox(spark: SparkSession, inboxDir: String, prefix: String,
-                 warehouse: String, checkpointDir: String,
-                 nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drain(spark, inboxDir, checkpointDir,
-      CurateIncrStream.docSchema) { (batch, day) =>
-      graft.ops.DedupIncr.runDay(batch.sparkSession, batch, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.DedupIncr.maybeCompact(batch.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    }(graft.ops.DedupIncr.lastDay(spark, prefix, warehouse))
-
-  /** The CDC form (round 14): ONE ordered inbox of add/delete events —
-    * how a takedown feed actually arrives next to the crawl feed. Each
-    * parquet slice carries an `op` column ('add' | 'del'); delete rows
-    * need only `doc_id` populated (the keyed-tombstone contract — no
-    * text), other columns riding along null. Day ids split the batch-id
-    * space deterministically — adds fold as day 2·batch, deletes as day
-    * 2·batch+1 — so fold and delete events never collide, a slice
-    * carrying BOTH ops lands each under its own day, and a replayed
-    * micro-batch rewrites exactly its own partitions (the same
-    * byte-idempotence argument as drainInbox, now covering retraction).
-    * Ordering is the stream's: a doc added after its own takedown in a
-    * LATER slice stays retracted (delete wins — the tombstone
-    * anti-filter), while add+delete in ONE slice also nets to retracted
-    * because the delete day (2b+1) follows the add day (2b). Compaction
-    * rides along per batch, tombstone table included. */
-  def drainCdc(spark: SparkSession, inboxDir: String, prefix: String,
-               warehouse: String, checkpointDir: String,
-               nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drainCdc(spark, inboxDir, checkpointDir,
-      CurateIncrStream.docSchema) { (adds, day) =>
-      graft.ops.DedupIncr.runDay(adds.sparkSession, adds, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.DedupIncr.maybeCompact(adds.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    } { (dels, day) =>
-      graft.ops.DedupIncr.deleteDay(dels.sparkSession, dels.select(col("doc_id")),
-        prefix, warehouse, day, nBuckets)
-    }(graft.ops.DedupIncr.lastDay(spark, prefix, warehouse))
+  * epoch partition (and rewrites the pair ledger), bounding partitions
+  * and files-per-bucket while the inbox grows without bound. Compaction
+  * after the state write is replay-safe: a replayed batch N only
+  * overwrites `day=N`, which a prior compaction has already emptied into
+  * the epoch — the rewrite re-lands the same rows under day=N and the
+  * NEXT compaction merges them; the ledger pair set is keyed (d1,d2)
+  * either way. CDC delete rows need only `doc_id` populated (the
+  * keyed-tombstone contract — no text); a doc added after its own
+  * takedown in a LATER slice stays retracted (delete wins). */
+object DedupIncrStream extends MemberStream(graft.ops.DedupIncr) {
+  protected def inboxSchema: StructType = CurateIncrStream.docSchema
 
   /** The CDC inbox schema: the document columns + the op discriminator. */
   val cdcSchema: StructType = IncrInboxStream.cdcSchema(CurateIncrStream.docSchema)

@@ -1,44 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
-/** The incremental domain-statistics fold DRIVEN AS A STREAM — the L47
-  * sibling of the other IncrInboxStream drives (same daily contract,
-  * same exactly-once argument; see IncrInboxStream). */
-object DomainsIncrStream {
-
-  /** Drain every slice currently in `inboxDir` (one micro-batch per
-    * file) into the DomainsIncr state at `warehouse`; returns the
-    * highest day folded (-1 if the inbox was empty and no state
-    * exists). Idempotent under restart with the same `checkpointDir`. */
-  def drainInbox(spark: SparkSession, inboxDir: String, prefix: String,
-                 warehouse: String, checkpointDir: String,
-                 nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drain(spark, inboxDir, checkpointDir,
-      CurateIncrStream.docSchema) { (batch, day) =>
-      graft.ops.DomainsIncr.runDay(batch.sparkSession, batch, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.DomainsIncr.maybeCompact(batch.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    }(graft.ops.DomainsIncr.lastDay(spark, prefix, warehouse))
-
-  /** The CDC form (round 14): one ordered inbox of add/delete events —
-    * the ADDITIVE retraction algebra on the shared drainCdc loop.
-    * Delete events must carry the documents as folded (the negative
-    * partial re-derives the per-(domain, lang) counts from the slice,
-    * the L49 contract) — unlike the keyed-tombstone members, whose
-    * deletes are id-only. */
-  def drainCdc(spark: SparkSession, inboxDir: String, prefix: String,
-               warehouse: String, checkpointDir: String,
-               nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drainCdc(spark, inboxDir, checkpointDir,
-      CurateIncrStream.docSchema) { (adds, day) =>
-      graft.ops.DomainsIncr.runDay(adds.sparkSession, adds, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.DomainsIncr.maybeCompact(adds.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    } { (dels, day) =>
-      graft.ops.DomainsIncr.deleteDay(dels.sparkSession, dels, prefix,
-        warehouse, day, nBuckets)
-    }(graft.ops.DomainsIncr.lastDay(spark, prefix, warehouse))
+/** The incremental domain-statistics fold DRIVEN AS A STREAM (L47) on
+  * the shared drive (see IncrInboxStream). The CDC form is the ADDITIVE
+  * retraction algebra: delete events must carry the documents as folded
+  * (the negative partial re-derives the per-(domain, lang) counts from
+  * the slice, the L49 contract) — unlike the keyed-tombstone members,
+  * whose deletes are id-only. */
+object DomainsIncrStream extends MemberStream(graft.ops.DomainsIncr) {
+  protected def inboxSchema: StructType = CurateIncrStream.docSchema
 }

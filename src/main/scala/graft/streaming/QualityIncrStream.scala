@@ -1,14 +1,15 @@
 package graft.streaming
 
+import graft.Tables
+import graft.ops.QualityIncr
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-/** The incremental quality-report fold DRIVEN AS A STREAM — the L48
-  * sibling of the other IncrInboxStream drives (same daily contract,
-  * same exactly-once argument; see IncrInboxStream). The customer FK
-  * dimension is re-read per micro-batch from `custDir` (a tiny static
-  * dim — the read is a broadcast-sized scan, and re-reading keeps the
-  * fold correct if the dim is republished between drains). */
+/** The incremental quality-report fold DRIVEN AS A STREAM (L48) on the
+  * shared drive (see IncrInboxStream). The customer FK dimension is
+  * re-read per micro-batch from `custDir` (a tiny static dim — the read
+  * is a broadcast-sized scan, and re-reading keeps the fold correct if
+  * the dim is republished between drains). */
 object QualityIncrStream {
 
   val eventSchema: StructType = StructType(Seq(
@@ -16,38 +17,26 @@ object QualityIncrStream {
     StructField("user_id", LongType),
     StructField("value", DoubleType)))
 
-  /** Drain every slice currently in `inboxDir` (one micro-batch per
-    * file) into the QualityIncr state at `warehouse`; returns the
-    * highest day folded (-1 if the inbox was empty and no state
-    * exists). Idempotent under restart with the same `checkpointDir`. */
+  /** Drain every slice currently in `inboxDir` into the QualityIncr
+    * state at `warehouse`; returns the highest day folded (-1 if the
+    * inbox was empty and no state exists). */
   def drainInbox(spark: SparkSession, inboxDir: String, custDir: String,
                  prefix: String, warehouse: String, checkpointDir: String,
                  nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drain(spark, inboxDir, checkpointDir, eventSchema) { (batch, day) =>
-      graft.ops.QualityIncr.runDay(batch.sparkSession, batch,
-        graft.Tables.customer(batch.sparkSession, custDir), prefix,
-        warehouse, day, nBuckets)
-      graft.ops.QualityIncr.maybeCompact(batch.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    }(graft.ops.QualityIncr.lastDay(spark, prefix, warehouse))
+    IncrInboxStream.drain(spark, QualityIncr, eventSchema, inboxDir, prefix, warehouse,
+      checkpointDir, nBuckets, maxDeltaDays)((s, batch, day) =>
+      QualityIncr.runDay(s, batch, Tables.customer(s, custDir), prefix, warehouse, day, nBuckets))
 
-  /** The CDC form (VERDICT r14 #5): add events fold counters + pk
-    * bitmaps, delete events land NEGATED counter lines + tombstone
-    * bitmaps (the L50 bitmap-tombstone algebra) — on the shared
-    * drainCdc loop, with the customer dim re-read per micro-batch like
-    * the plain drain. */
+  /** The CDC form: add events fold counters + pk bitmaps, delete events
+    * land NEGATED counter lines + tombstone bitmaps (the L50
+    * bitmap-tombstone algebra), with the customer dim re-read per
+    * micro-batch like the plain drain. */
   def drainCdc(spark: SparkSession, inboxDir: String, custDir: String,
                prefix: String, warehouse: String, checkpointDir: String,
                nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drainCdc(spark, inboxDir, checkpointDir, eventSchema) { (adds, day) =>
-      graft.ops.QualityIncr.runDay(adds.sparkSession, adds,
-        graft.Tables.customer(adds.sparkSession, custDir), prefix,
-        warehouse, day, nBuckets)
-      graft.ops.QualityIncr.maybeCompact(adds.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    } { (dels, day) =>
-      graft.ops.QualityIncr.deleteDay(dels.sparkSession, dels,
-        graft.Tables.customer(dels.sparkSession, custDir), prefix,
-        warehouse, day, nBuckets)
-    }(graft.ops.QualityIncr.lastDay(spark, prefix, warehouse))
+    IncrInboxStream.drainCdc(spark, QualityIncr, eventSchema, inboxDir, prefix, warehouse,
+      checkpointDir, nBuckets, maxDeltaDays)((s, adds, day) =>
+      QualityIncr.runDay(s, adds, Tables.customer(s, custDir), prefix, warehouse, day, nBuckets))(
+      (s, dels, day) => QualityIncr.deleteDay(s, dels, Tables.customer(s, custDir),
+        prefix, warehouse, day, nBuckets))
 }

@@ -1,25 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** The incremental TF-IDF fold DRIVEN AS A STREAM — the L46 sibling of
-  * DedupIncrStream/AnnIncrStream/CurateIncrStream (same daily contract,
-  * reference main.tf:217): a file-stream inbox where each arriving
-  * parquet slice is "a day" of documents, `Trigger.AvailableNow` +
-  * maxFilesPerTrigger=1 so each slice is one micro-batch, and
-  * `foreachBatch` folding slice N into the tf/df state as day N.
-  *
-  * Exactly-once without a transactional sink: the fold day IS the batch
-  * id and `TfidfIncr.runDay` is idempotent per day (dynamic partition
-  * overwrite of exactly `day=N`, and the `_doc_counts` marker keyed by
-  * day), so a failed/replayed micro-batch rewrites its own partitions
-  * byte-identically. The checkpoint keeps the slice→batch-id mapping
-  * stable across restarts; a restart after new slices land folds ONLY
-  * the new slices — and thanks to IncrState's warehouse re-registration
-  * the restart may be a REAL process restart, not just a new query. The
-  * size-tiered compaction rides along after each fold. */
-object TfidfIncrStream {
+/** The incremental TF-IDF fold DRIVEN AS A STREAM (L46) on the shared
+  * drive (see IncrInboxStream): each inbox slice of documents folds
+  * into the tf/df state as one day; `TfidfIncr.runDay` is idempotent
+  * per day (dynamic partition overwrite of exactly `day=N`, and the
+  * `_doc_counts` marker keyed by day). The CDC form is the ADDITIVE
+  * retraction algebra (L49), so delete events must carry the documents
+  * as folded (the negative tf/df partials re-derive from the slice). */
+object TfidfIncrStream extends MemberStream(graft.ops.TfidfIncr) {
 
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -28,34 +18,5 @@ object TfidfIncrStream {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Drain every slice currently in `inboxDir` (one micro-batch per
-    * file) into the TfidfIncr state at `warehouse`; returns the highest
-    * day folded (-1 if the inbox was empty and no state exists).
-    * Idempotent under restart with the same `checkpointDir`. */
-  def drainInbox(spark: SparkSession, inboxDir: String, prefix: String,
-                 warehouse: String, checkpointDir: String,
-                 nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drain(spark, inboxDir, checkpointDir, docSchema) { (batch, day) =>
-      graft.ops.TfidfIncr.runDay(batch.sparkSession, batch, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.TfidfIncr.maybeCompact(batch.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    }(graft.ops.TfidfIncr.lastDay(spark, prefix, warehouse))
-
-  /** The CDC form (VERDICT r14 #5): one ordered inbox of add/delete
-    * events on the shared drainCdc loop — the ADDITIVE retraction
-    * algebra (L49), so delete events must carry the documents as folded
-    * (the negative tf/df partials re-derive from the slice). */
-  def drainCdc(spark: SparkSession, inboxDir: String, prefix: String,
-               warehouse: String, checkpointDir: String,
-               nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drainCdc(spark, inboxDir, checkpointDir, docSchema) { (adds, day) =>
-      graft.ops.TfidfIncr.runDay(adds.sparkSession, adds, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.TfidfIncr.maybeCompact(adds.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    } { (dels, day) =>
-      graft.ops.TfidfIncr.deleteDay(dels.sparkSession, dels, prefix,
-        warehouse, day, nBuckets)
-    }(graft.ops.TfidfIncr.lastDay(spark, prefix, warehouse))
+  protected def inboxSchema: StructType = docSchema
 }

@@ -1,50 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** The incremental triangle-count fold DRIVEN AS A STREAM — the L55
-  * sibling of the other IncrInboxStream drives (same daily contract,
-  * same exactly-once argument; see IncrInboxStream): each arriving
-  * parquet slice of canonical (u, v) edges is "a day", folded through
-  * `TriIncr.runDay` (idempotent per day — the effective-fresh anti-join
-  * makes a replayed slice count nothing twice, even after an epoch
-  * compaction). The CDC form drains one ordered inbox of add/delete
-  * edge events (the keyed-tombstone retraction algebra: delete events
-  * carry just the edge endpoints). */
-object TriIncrStream {
+/** The incremental triangle-count fold DRIVEN AS A STREAM (L55) on the
+  * shared drive (see IncrInboxStream): each arriving parquet slice of
+  * canonical (u, v) edges is "a day", folded through `TriIncr.runDay`
+  * (idempotent per day — the effective-fresh anti-join makes a replayed
+  * slice count nothing twice, even after an epoch compaction). The CDC
+  * form drains one ordered inbox of add/delete edge events (the
+  * keyed-tombstone retraction algebra: delete events carry just the
+  * edge endpoints). */
+object TriIncrStream extends MemberStream(graft.ops.TriIncr) {
 
   val edgeSchema: StructType = StructType(Seq(
     StructField("u", LongType), StructField("v", LongType)))
 
-  /** Drain every edge slice currently in `inboxDir` (one micro-batch
-    * per file) into the TriIncr state at `warehouse`; returns the
-    * highest day folded (-1 if the inbox was empty and no state
-    * exists). Idempotent under restart with the same `checkpointDir`. */
-  def drainInbox(spark: SparkSession, inboxDir: String, prefix: String,
-                 warehouse: String, checkpointDir: String,
-                 nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drain(spark, inboxDir, checkpointDir, edgeSchema) { (batch, day) =>
-      graft.ops.TriIncr.runDay(batch.sparkSession, batch, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.TriIncr.maybeCompact(batch.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    }(graft.ops.TriIncr.lastDay(spark, prefix, warehouse))
-
-  /** The CDC form: one ordered inbox of add/delete edge events (an `op`
-    * column; deletes carry the endpoints only — the keyed-tombstone
-    * contract). Day ids split as adds 2·batch / deletes 2·batch+1 via
-    * the shared drainCdc loop. */
-  def drainCdc(spark: SparkSession, inboxDir: String, prefix: String,
-               warehouse: String, checkpointDir: String,
-               nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drainCdc(spark, inboxDir, checkpointDir, edgeSchema) { (adds, day) =>
-      graft.ops.TriIncr.runDay(adds.sparkSession, adds, prefix,
-        warehouse, day, nBuckets)
-      graft.ops.TriIncr.maybeCompact(adds.sparkSession, prefix,
-        warehouse, nBuckets, maxDeltaDays)
-    } { (dels, day) =>
-      graft.ops.TriIncr.deleteDay(dels.sparkSession, dels, prefix,
-        warehouse, day, nBuckets)
-    }(graft.ops.TriIncr.lastDay(spark, prefix, warehouse))
+  protected def inboxSchema: StructType = edgeSchema
 }

@@ -51,4 +51,9 @@ object GraftShim {
   def drainListenerBus(spark: SparkSession): Unit =
     try spark.sparkContext.listenerBus.waitUntilEmpty()
     catch { case _: java.util.concurrent.TimeoutException => () }
+
+  /** Listeners currently registered on the context's listener bus — the
+    * probe a caller uses to check it removes what it adds. */
+  def listenerCount(spark: SparkSession): Int =
+    spark.sparkContext.listenerBus.listeners.size
 }

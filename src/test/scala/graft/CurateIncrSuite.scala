@@ -259,7 +259,7 @@ class CurateIncrSuite extends SparkSpec {
         "retraction != batch on reduced corpus (keeper promotion or tf netting broke)")
       assert(full != expected, "delete changed nothing — test is vacuous")
       // physical purge: tombstoned member rows gone, survivors intact
-      ops.CurateIncr.purgeDeletedRetractable(spark, pA, whA, nBuckets = 4)
+      ops.CurateIncr.purgeDeleted(spark, pA, whA, nBuckets = 4)
       val delSet = del.select($"doc_id").collect().map(_.getLong(0)).toSet
       Seq(s"${pA}_md5m", s"${pA}_linem").foreach { t =>
         assert(spark.table(t).filter($"doc_id".isin(delSet.toSeq.map(Long.box): _*))
@@ -270,9 +270,9 @@ class CurateIncrSuite extends SparkSpec {
       // replay of the delete day; compaction over all four tables
       ops.CurateIncr.deleteDayRetractable(spark, del, pA, whA, 3, nBuckets = 4)
       assert(rep() == expected, "delete replay not idempotent")
-      ops.CurateIncr.compactRetractable(spark, pA, whA, nBuckets = 4)
+      ops.CurateIncr.compactState(spark, pA, whA, nBuckets = 4)
       assert(rep() == expected, "compaction corrupted retraction state")
-    } finally ops.CurateIncr.dropRetractableState(spark, pA)
+    } finally ops.CurateIncr.dropState(spark, pA)
   }
 
   test("retractable delete reads only the delete slice (never fold history)") {
@@ -289,8 +289,8 @@ class CurateIncrSuite extends SparkSpec {
       U.h64Local(java.util.UUID.randomUUID().toString))
     val wh = s"$root/wh"
     try {
-      ops.CurateIncr.runDayRetractablePath(spark, s"$root/slice0", prefix, wh, 0)
-      ops.CurateIncr.runDayRetractablePath(spark, s"$root/slice1", prefix, wh, 1)
+      ops.CurateIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
+      ops.CurateIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
       def dirBytes(p: String): Long = {
         val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
         try s.filter(java.nio.file.Files.isRegularFile(_))
@@ -315,7 +315,7 @@ class CurateIncrSuite extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        ops.CurateIncr.deleteDayRetractablePath(spark, s"$root/del", prefix, wh, 2)
+        ops.CurateIncr.deleteDayPath(spark, s"$root/del", prefix, wh, 2)
         org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
       } finally spark.sparkContext.removeSparkListener(listener)
       val read = bytesRead.get()
@@ -325,63 +325,7 @@ class CurateIncrSuite extends SparkSpec {
       // hard claim is the functional proof: history is GONE
       assert(read <= 15L * delBytes + (64 << 10),
         s"retraction read $read bytes for a $delBytes-byte slice — it touched state it must not")
-    } finally ops.CurateIncr.dropRetractableState(spark, prefix)
-  }
-
-  test("bucketed state backend: same report, state side never re-shuffled") {
-    import spark.implicits._
-    val prefix = "curate_b_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val wh = java.nio.file.Files.createTempDirectory("curate_b_wh_").toString
-    val docs = Tables.documents(spark, sfDir)
-    try {
-      (0 until 3).foreach { day =>
-        ops.CurateIncr.runDayBucketed(spark,
-          docs.filter(pmod($"doc_id", lit(3L)) === day), prefix, wh, day)
-      }
-      // result parity with the parquet backend / full recompute
-      assert(canon(ops.CurateIncr.reportBucketed(spark, prefix, 2)) ==
-        canon(ops.CurateIncr.incremental(spark, sfDir, 1)))
-      // plan pin — THE point of the backend: in the day-3 merge the
-      // bucketed state scan already satisfies the join partitioning, so
-      // the ONLY hash exchange on the merge key belongs to the day
-      // slice's partials; a second one means state bytes crossed the
-      // wire (the daily full-state shuffle this backend exists to kill)
-      val dayP = ops.CurateIncr.dayPartials(
-        docs.filter(pmod($"doc_id", lit(3L)) === 0))
-      val (md5M, lineM, _) = ops.CurateIncr.mergedBucketed(spark, prefix, 3, dayP)
-      Seq("k_md5" -> md5M, "line" -> lineM).foreach { case (key, df) =>
-        val plan = df.queryExecution.executedPlan.toString
-        // the state table is the join's FIRST child: everything between
-        // the join node and its bucketed FileScan must be exchange-free
-        // (the day-partial side may shuffle — that's its own aggregation)
-        val lines = plan.linesIterator.toSeq
-        val joinIdx = lines.indexWhere(l =>
-          l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin"))
-        val scanIdx = lines.indexWhere(_.contains("Bucketed: true"))
-        assert(joinIdx >= 0 && scanIdx > joinIdx,
-          s"merge on $key lost its bucketed state scan:\n$plan")
-        assert(!lines.slice(joinIdx + 1, scanIdx).exists(_.contains("Exchange")),
-          s"state side re-shuffled on $key:\n$plan")
-      }
-      // restart: the in-memory catalog dies with the JVM, the warehouse
-      // survives — both the next day's fold (mergedBucketed reads
-      // v(N−1)) and the report must re-register from the _graft_buckets
-      // markers and keep going
-      val want = canon(ops.CurateIncr.reportBucketed(spark, prefix, 2))
-      Seq("md5", "line", "tf").foreach(k =>
-        spark.sql(s"DROP TABLE ${prefix}_${k}_v2"))
-      assert(canon(ops.CurateIncr.reportBucketed(spark, prefix, 2, Some(wh))) == want,
-        "report did not survive a catalog death")
-      Seq("md5", "line", "tf").foreach(k =>
-        spark.sql(s"DROP TABLE ${prefix}_${k}_v2"))
-      ops.CurateIncr.runDayBucketed(spark,
-        docs.filter(lit(false)), prefix, wh, 3)
-      // an empty day-3 fold right after the "restart" must re-register
-      // v2 for the merge and carry the state forward unchanged
-      assert(canon(ops.CurateIncr.reportBucketed(spark, prefix, 3, Some(wh))) == want,
-        "fold after a catalog death diverged")
-    } finally ops.CurateIncr.dropBucketedState(spark, prefix, 3)
+    } finally ops.CurateIncr.dropState(spark, prefix)
   }
 
   test("streaming CDC inbox: interleaved add/delete events == reduced-corpus recompute") {
@@ -431,7 +375,7 @@ class CurateIncrSuite extends SparkSpec {
         assert(canon(ops.CurateIncr.reportRetractable(spark, prefix, wh)) ==
           canon(ops.CurateIncr.reportRetractable(spark, pE, whE)),
           "CDC drain != batch recompute on the reduced corpus")
-      } finally ops.CurateIncr.dropRetractableState(spark, pE)
-    } finally ops.CurateIncr.dropRetractableState(spark, prefix)
+      } finally ops.CurateIncr.dropState(spark, pE)
+    } finally ops.CurateIncr.dropState(spark, prefix)
   }
 }

@@ -157,7 +157,7 @@ class IncrViewsSuite extends SparkSpec {
         "view missed the tombstone swap or mis-derived a keeper")
     } finally {
       ops.IncrViews.dropView(spark, prefix)
-      ops.CurateIncr.dropRetractableState(spark, prefix)
+      ops.CurateIncr.dropState(spark, prefix)
     }
   }
 

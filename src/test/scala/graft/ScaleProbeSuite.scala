@@ -62,6 +62,18 @@ class ScaleProbeSuite extends SparkSpec {
     assert(e.getMessage.contains("alias"), e.getMessage)
   }
 
+  test("measure removes the task-end listener it adds") {
+    import org.apache.spark.sql.graftshim.GraftShim
+    // a session's first queries register its lazily created listeners;
+    // count only what a later call leaves behind
+    ScaleProbe.measure(spark, sfDir, Seq("q_math_funcs"))
+    val before = GraftShim.listenerCount(spark)
+    val res = ScaleProbe.measure(spark, sfDir, Seq("q_math_funcs"))
+    assert(res("q_math_funcs")._1 >= 0.0, s"probe query failed: $res")
+    assert(GraftShim.listenerCount(spark) == before,
+      s"listener bus grew from $before to ${GraftShim.listenerCount(spark)} across one measure")
+  }
+
   test("probe queries scale ~linearly with zero spill and bounded driver heap") {
     ScaleProbe.generate(spark, sfDir, outDir, 10)
     def usedHeap(): Long = {
