@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * fully materialized (noop sink — sorts, projections and row rendering
@@ -10,7 +9,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // diagnostic subsetting: SPARK_GRAFT_ONLY=q_a,q_b times just those
     // queries in this JVM — isolates a query's cost from suite-order
     // interference (GC pressure, leaked persists) when a number regresses
@@ -38,49 +36,21 @@ object Bench {
         System.err.println(s"BENCH WARN: starting into a busy window after ${waitedSec}s wait " +
           s"(loadavg ${loadAvg().mkString("/")} on $cores0 cores) — expect fixed-cost inflation")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
     val loadStart = loadAvg()
     val wallStart = System.nanoTime()
     spark.range(1000).selectExpr("sum(id)").collect() // session/scheduler warm-up
     // Shuffle/spill telemetry per query: the number that says whether a
     // plan survives a 100x scale-up is not seconds, it's bytes through
-    // the shuffle. Listener events drain async, so values are advisory
-    // detail (bench_out.json only), not a gate.
-    val shufRead = new java.util.concurrent.atomic.AtomicLong()
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong()
-    val spilled = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spilled.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-        }
-      }
-    })
+    // the shuffle. Advisory detail (bench_out.json only), not a gate.
     val shuffles = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    def timeOnce(name: String, fn: Q): Double = {
-      val t0 = System.nanoTime()
-      try {
-        // noop data source: distributed full materialization of every
-        // output row (ordering included), zero driver/disk cost.
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+    def timeOnce(name: String, fn: Q): Double =
+      try Recorder.materialize(fn(spark, sfDir))
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         -1.0 // a crashed query must not read as a fast passing one
       }
-    }
     // Two timed runs per query, report the min: run 1 pays codegen +
     // JIT + shuffle-file warm-up, so single-shot numbers carry ±15%
     // jitter that swamps round-over-round comparison (VERDICT r3 #8).
@@ -98,36 +68,25 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
-    // deterministic metric fence: the listener bus delivers events async,
-    // so snapshot counters only after it reports empty (a fixed sleep
-    // misattributed late task-end events from the previous query — ADVICE r5)
-    def drain(): Unit = org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-    // Release every block the query persisted and left behind (dedup
-    // shingle sets, CC round pins): across 106 queries × 2 runs the
-    // leaked blocks compounded into multi-second slowdowns of UNRELATED
-    // late-running queries in the r4 capture (q_win_first_last 0.9 s
-    // isolated vs 7.2 s in-suite). Sequential runner, so this is safe.
-    def releaseBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     selected.foreach { case (name, fn) =>
       val t1 = timeOnce(name, fn)
       // steady-state shuffle footprint: measure run 2 only (run 1 also
       // warms shuffle files)
-      drain()
-      val (r0, w0, s0) = (shufRead.get, shufWrite.get, spilled.get)
-      val t2 = if (t1 < 0) -1.0 else timeOnce(name, fn)
-      drain()
-      shuffles += name -> (shufRead.get - r0, shufWrite.get - w0, spilled.get - s0)
+      val run2 = Recorder.during(spark)(if (t1 < 0) -1.0 else timeOnce(name, fn))
+      val t2 = run2.result
+      shuffles += name -> (run2.shuffleReadBytes, run2.shuffleWriteBytes, run2.spillBytes)
       val t3 =
         if (t1 > 0 && t2 > 0 && math.max(t1, t2) / math.min(t1, t2) > 1.5)
           Some(timeOnce(name, fn))
         else None
-      if (t3.isDefined) drain()
       raw += name -> (Seq(t1, t2) ++ t3)
-      releaseBlocks()
+      // Release every block the query persisted and left behind (dedup
+      // shingle sets, CC round pins): across 106 queries × 2 runs the
+      // leaked blocks compounded into multi-second slowdowns of UNRELATED
+      // late-running queries in the r4 capture (q_win_first_last 0.9 s
+      // isolated vs 7.2 s in-suite). Sequential runner, so this is safe.
+      Recorder.release(spark)
       val t = if (t1 < 0 || t2 < 0) { failed += name; -1.0 }
       else (Seq(t1, t2) ++ t3.filter(_ >= 0)).min
       results += name -> t
@@ -185,9 +144,9 @@ object Bench {
     def r3b(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     results.toSeq.foreach { case (name, t) =>
       if (t >= 0 && base.contains(name) && t > gateThreshold(base(name))) {
-        releaseBlocks()
+        Recorder.release(spark)
         val reruns = (1 to 3).map(_ => timeOnce(name, selected(name)))
-        releaseBlocks()
+        Recorder.release(spark)
         // a crash during gate re-measurement must stay visible: the query
         // PASSED its two timed runs, so it isn't `failed`, but silently
         // gating on the original timing would hide the flake

@@ -25,40 +25,22 @@ object ExchangeAudit {
     val name = args(0)
     val srcDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dir =
-      if (k <= 1) srcDir
-      else {
-        val tmp = java.nio.file.Files.createTempDirectory("xaudit_").toString
+    val spark = Session.local(Session.cpus(32),
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
+    // the K× corpus is this run's own: removed on every exit
+    val tmp = Option.when(k > 1)(java.nio.file.Files.createTempDirectory("xaudit_"))
+    try {
+      val dir = tmp.fold(srcDir) { t =>
         val subset = ScaleProbe.rung2Queries.get(name).map(Seq(_))
-        ScaleProbe.generate(spark, srcDir, tmp, k, subset.getOrElse(Seq(
-          "region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings")))
-        tmp
+        ScaleProbe.generate(spark, srcDir, t.toString, k, subset.getOrElse(ScaleProbe.tables))
+        t.toString
       }
-    // Task-level totals (same metric ScaleProbe reports): shuffle READ
-    // can exceed the sum of exchange writes when an exchange's output
-    // is fetched more than once — that disagreement is itself the clue.
-    val readB = new java.util.concurrent.atomic.AtomicLong()
-    val writeB = new java.util.concurrent.atomic.AtomicLong()
-    val spillB = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          readB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          writeB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spillB.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-        }
-      }
-    })
+      audit(spark, name, dir)
+    } finally tmp.foreach(ops.IncrState.deleteTree)
+    spark.stop()
+  }
+
+  private def audit(spark: SparkSession, name: String, dir: String): Unit = {
     val df = SparkEntry.queries(name)(spark, dir)
     // The noop write runs its OWN QueryExecution — df.queryExecution's
     // plan instance never executes, so its metrics stay zero. Capture
@@ -73,17 +55,17 @@ object ExchangeAudit {
     // each time, like ScaleProbe.measure) and prints per-run task totals —
     // the tool for localizing repeat-run inflation (cache interactions)
     // as opposed to single-run plan cost.
+    // Task-level totals (same metric ScaleProbe reports): shuffle READ
+    // can exceed the sum of exchange writes when an exchange's output
+    // is fetched more than once — that disagreement is itself the clue.
     val runs = sys.env.get("SPARK_GRAFT_AUDIT_RUNS").map(_.toInt).getOrElse(1)
-    var prevR = 0L; var prevW = 0L
-    (1 to runs).foreach { r =>
-      val dfR = if (r == 1) df else SparkEntry.queries(name)(spark, dir)
-      val t0 = System.nanoTime()
-      dfR.write.mode("overwrite").format("noop").save()
-      val el = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      println(f"RUN $r%d elapsed=$el%.1f s read=${(readB.get - prevR) / 1048576.0}%.1f MB written=${(writeB.get - prevW) / 1048576.0}%.1f MB")
-      prevR = readB.get; prevW = writeB.get
+    val recorded = (1 to runs).map { r =>
+      val run = Recorder.during(spark)(
+        Recorder.materialize(if (r == 1) df else SparkEntry.queries(name)(spark, dir)))
+      println(f"RUN $r%d elapsed=${run.result}%.1f s read=${run.shuffleReadBytes / 1048576.0}%.1f MB written=${run.shuffleWriteBytes / 1048576.0}%.1f MB")
+      run
     }
+    def mb(f: Recorder.Recorded[Double] => Long): Double = recorded.map(f).sum / 1048576.0
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     var total = 0.0
@@ -112,7 +94,7 @@ object ExchangeAudit {
     }
     walk(executed.getOrElse(df.queryExecution.executedPlan))
     println(f"TOTAL shuffle written (one traversal, reuse uncounted): $total%.1f MB")
-    println(f"TASK TOTALS read=${readB.get / 1048576.0}%.1f MB written=${writeB.get / 1048576.0}%.1f MB spill=${spillB.get / 1048576.0}%.1f MB")
+    println(f"TASK TOTALS read=${mb(_.shuffleReadBytes)}%.1f MB written=${mb(_.shuffleWriteBytes)}%.1f MB spill=${mb(_.spillBytes)}%.1f MB")
     if (sys.env.contains("SPARK_GRAFT_AUDIT_TREE")) {
       def tree(p: SparkPlan, d: Int): Unit = {
         println("  " * d + p.nodeName)
@@ -126,6 +108,5 @@ object ExchangeAudit {
       }
       tree(executed.getOrElse(df.queryExecution.executedPlan), 0)
     }
-    spark.stop()
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler._
-
 /** Per-job decomposition of one SparkEntry query (optimization guide
   * §1.1/§1.5): runs the query twice (warm-up + measured, like Bench) and
   * prints every Spark job of the measured run — wall duration, stage and
@@ -18,48 +15,13 @@ object JobProfile {
     require(args.nonEmpty, "usage: JobProfile <query> [sfDir]")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
     val fn = SparkEntry.queries(name)
     // warm-up run (codegen/JIT, parquet footer cache) — not profiled
-    fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-
-    case class J(id: Int, start: Long, var end: Long = -1L,
-                 var stages: Int = 0, var tasks: Int = 0, desc: String)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    val order = new java.util.concurrent.CopyOnWriteArrayList[Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        val j = J(e.jobId, e.time, desc = desc)
-        j.stages = e.stageInfos.size
-        j.tasks = e.stageInfos.map(_.numTasks).sum
-        jobs.put(e.jobId, j); order.add(e.jobId); ()
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val j = jobs.get(e.jobId); if (j != null) j.end = e.time
-      }
-    })
-    val t0 = System.nanoTime()
-    fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-    val wall = (System.nanoTime() - t0) / 1e9
-    // drain listener bus so every end event landed
-    org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-    val js = {
-      import scala.jdk.CollectionConverters._
-      order.asScala.map(jobs.get(_)).filter(_ != null).sortBy(_.start).toSeq
-    }
+    Recorder.materialize(fn(spark, sfDir))
+    Recorder.release(spark)
+    val run = Recorder.during(spark)(Recorder.materialize(fn(spark, sfDir)))
+    val (wall, js) = (run.result, run.jobs)
     var prevEnd = -1L
     var jobSum = 0.0; var gapSum = 0.0
     println(f"== $name measured run: wall ${wall}%.3f s, ${js.size} jobs ==")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Write `.explain("formatted")` of SparkEntry queries to files — the
   * plan evidence committed under plans/r<N>/ (optimization guide §1:
   * capture the plan shape before and after each change). One file per
@@ -20,16 +18,7 @@ object PlanDump {
     val names: Seq[String] =
       if (args.length > 2) args(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[plandump] no such query: $n")

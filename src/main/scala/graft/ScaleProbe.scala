@@ -121,7 +121,7 @@ object ScaleProbe {
     // wedges, the same enumeration negated)
     "q_tri_del")
 
-  private val tables = Seq("region", "nation", "customer", "supplier",
+  val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Entity-id columns shifted per copy (FK and PK together, so each
@@ -208,34 +208,7 @@ object ScaleProbe {
     * the dedup pair emitters) from genuine plan degradation (time grows,
     * rows_out does not) — VERDICT r12 #5. */
   def measure(spark: SparkSession, dir: String, names: Seq[String]): Map[String, (Double, Double, Double, Long)] = {
-    val shufRead = new java.util.concurrent.atomic.AtomicLong()
-    val spilled = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          spilled.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def drain(): Unit = org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      // broadcast blocks are reclaimed by the ContextCleaner only after
-      // the driver GC collects their references — across 20 queries × 3
-      // runs × 2 scales in one JVM the lazy cleanup falls behind the
-      // allocation rate and a later broadcast build OOMs (observed as a
-      // GCLocker retry failure at the 10× measure); an explicit GC per
-      // released query keeps the cleaner ahead
-      System.gc()
-    }
-    // the listener is this call's own: removed on every exit, so repeated
-    // measures in one session (the probe's scales, a suite) never stack
-    // task-end listeners on the bus
-    try names.map { n =>
+    names.map { n =>
       // progress + failure isolation (round 14: a 60-minute probe run
       // died without a trace — the last queries in a long-lived probe
       // JVM are the likeliest to hit transient executor faults, and one
@@ -244,36 +217,34 @@ object ScaleProbe {
       // artifact; the marker lines make the crash point findable.
       System.err.println(s"PROBE measuring $n @ $dir")
       val fn = SparkEntry.queries(n)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(): Double = Recorder.materialize(fn(spark, dir))
       val res = try {
         once() // warm: codegen + JIT + shuffle files
-        drain()
-        val (r0, s0) = (shufRead.get, spilled.get)
         // min-of-3 (Bench's offender re-measure hygiene): at the K× scale
         // a probed query runs 10-20 s and the first post-warm-up run still
         // carries a multi-second JIT tail — a 2-sample min caught a 1.7×
-        // outlier for q_sim_jaccard that three clean samples do not
-        val t = Seq(once(), once(), once()).min
-        drain()
-        // snapshot the timed runs' telemetry BEFORE the rows-out count —
-        // the count is bookkeeping, not part of the measured plan
-        val (shufMb, spillMb) =
-          ((shufRead.get - r0) / 3.0 / 1048576.0, (spilled.get - s0) / 1048576.0)
+        // outlier for q_sim_jaccard that three clean samples do not. The
+        // telemetry covers the timed runs only — the rows-out count is
+        // bookkeeping, not part of the measured plan
+        val run = Recorder.during(spark)(Seq(once(), once(), once()).min)
         val rowsOut = fn(spark, dir).count()
-        n -> (t, shufMb, spillMb, rowsOut)
+        n -> (run.result, run.shuffleReadBytes / 3.0 / 1048576.0,
+          run.spillBytes / 1048576.0, rowsOut)
       } catch {
         case e: Throwable =>
           System.err.println(s"PROBE FAIL $n @ $dir: ${e.getClass.getName}: ${e.getMessage}")
           n -> (-1.0, -1.0, -1.0, -1L)
       }
-      release()
+      Recorder.release(spark)
+      // broadcast blocks are reclaimed by the ContextCleaner only after
+      // the driver GC collects their references — across 20 queries × 3
+      // runs × 2 scales in one JVM the lazy cleanup falls behind the
+      // allocation rate and a later broadcast build OOMs (observed as a
+      // GCLocker retry failure at the 10× measure); an explicit GC per
+      // released query keeps the cleaner ahead
+      System.gc()
       res
     }.toMap
-    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Second measurement rung (VERDICT r8 #2): the three plans whose
@@ -409,16 +380,7 @@ object ScaleProbe {
   private def runRung(rung: String, args: Array[String]): Unit = {
     val (srcDir, outDir, k) = parseArgs(args)
     val only = onlySet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
     val selected = only.fold(probeQueries)(names => probeQueries.filter(names))
     val rung2Selected = only.fold(rung2Queries)(names => rung2Queries.filter(kv => names(kv._1)))
     val rung3Selected = only.fold(rung3Queries)(names => rung3Queries.filter(kv => names(kv._1)))

@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** t1 smoke: run the flagship `SparkEntry.entry` pipeline on sf0.001 and
   * print its row count — the driver's rows>0 check, runnable locally via
   * `tools/run.sh graft.Smoke`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

@@ -42,19 +42,7 @@ object SparkEntry {
     daily
   }
 
-  private lazy val entryOutRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_entry_out_")
-    sys.addShutdownHook {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(root)) {
-        val s = Files.walk(root)
-        try s.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-        finally s.close()
-      }
-    }
-    root
-  }
+  private lazy val entryOutRoot: java.nio.file.Path = ops.IncrState.tempRoot("graft_entry_out_")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, Q] =

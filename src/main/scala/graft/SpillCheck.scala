@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Forced-spill equivalence check — the determinism claim under the
   * condition a 100 TB run actually hits. Locally every suite run shows
   * zero spill (the data is tiny), so nothing ever proved the plans
@@ -27,30 +25,18 @@ object SpillCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val force = args.length > 1 && args(1) == "force"
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (force)
-      builder.config("spark.shuffle.spill.numElementsForceSpillThreshold", "1000")
-    else builder).getOrCreate()
+    val spark = Session.local(8, Option.when(force)(
+      "spark.shuffle.spill.numElementsForceSpillThreshold" -> "1000").toSeq: _*)
     spark.sparkContext.setLogLevel("ERROR")
-    @volatile var spilled = 0L
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) spilled += e.taskMetrics.memoryBytesSpilled
-    })
-    checkQueries.foreach { name =>
-      val rows = SparkEntry.queries(name)(spark, sfDir).collect().map(_.toString).sorted
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.foreach(r => md.update(r.getBytes("UTF-8")))
-      println(s"HASH $name ${rows.length} ${md.digest().map(b => f"$b%02x").mkString}")
+    val run = Recorder.during(spark) {
+      checkQueries.foreach { name =>
+        val rows = SparkEntry.queries(name)(spark, sfDir).collect().map(_.toString).sorted
+        val md = java.security.MessageDigest.getInstance("MD5")
+        rows.foreach(r => md.update(r.getBytes("UTF-8")))
+        println(s"HASH $name ${rows.length} ${md.digest().map(b => f"$b%02x").mkString}")
+      }
     }
-    org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-    println(s"SPILL_BYTES $spilled")
+    println(s"SPILL_BYTES ${run.spillBytes}")
     spark.stop()
   }
 }

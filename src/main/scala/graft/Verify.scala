@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,22 +6,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir>")
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NOTE: dumps stay INT96 (the default outputTimestampType): INT96
-      // reads back as NAIVE in DuckDB/pandas, matching the oracle's
-      // dump; TIMESTAMP_MICROS would read as tz-aware and flip every
-      // timestamp compare. The INT96→ns render at the comparer means
-      // every emitted timestamp must sit inside int64-ns range
-      // (< 2262-04-11) — see q_scd2's sentinel.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus(32)
+    // NOTE: dumps stay INT96 (the default outputTimestampType): INT96
+    // reads back as NAIVE in DuckDB/pandas, matching the oracle's
+    // dump; TIMESTAMP_MICROS would read as tz-aware and flip every
+    // timestamp compare. The INT96→ns render at the comparer means
+    // every emitted timestamp must sit inside int64-ns range
+    // (< 2262-04-11) — see q_scd2's sentinel.
+    val spark = Session.local(cpus)
     new java.io.File(outDir).mkdirs()
     // diagnostic subsetting, same contract as Bench: SPARK_GRAFT_ONLY=q_a,q_b
     // dumps (and lists oracle SQL for) just those queries — the fast
@@ -35,7 +26,7 @@ object Verify {
     // fine in one session, and overlapping the per-query planning/codegen
     // latencies cuts verify wall time several-fold
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(2, cpus.toInt / 4))
+      math.max(2, cpus / 4))
     import scala.jdk.CollectionConverters._
     val tasks = selectedOf(SparkEntry.queries).toSeq.map { case (name, fn) =>
       new java.util.concurrent.Callable[Unit] {

@@ -106,15 +106,7 @@ object CurateIncr extends IncrMember.SliceFold {
     * deterministically rewrites v(N) from v(N−1), which GC never touches
     * until v(N+1) commits). */
   private def gcVersions(stateDir: String, day: Int): Unit =
-    (0 to day - 2).foreach { n =>
-      val p = java.nio.file.Paths.get(s"$stateDir/v$n")
-      if (java.nio.file.Files.exists(p)) {
-        val s = java.nio.file.Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally s.close()
-      }
-    }
+    (0 to day - 2).foreach(n => IncrState.deleteTree(java.nio.file.Paths.get(s"$stateDir/v$n")))
 
   /** Fold one day's slice into the state: read v{day-1} (if any), merge,
     * write v{day}. Reads ONLY the slice + previous partials. */

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.U
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, pmod}
 
@@ -140,8 +139,7 @@ trait IncrMember {
     * frame outlives the state. */
   protected def exhibit(s: SparkSession, tag: String, order: Column*)
                        (build: (String, String) => DataFrame): DataFrame = {
-    val prefix = s"${tag}_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = IncrState.freshPrefix(s"${tag}_")
     val wh = IncrState.newWarehouse()
     build(prefix, wh).write.mode("overwrite").parquet(s"$wh/result")
     dropState(s, prefix)

@@ -892,20 +892,28 @@ object IncrState {
 
   /** Per-run state root, removed on JVM exit (results are read lazily
     * from parquet, so cleanup must not race the consumer). */
-  lazy val stateRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_incr_state_")
-    sys.addShutdownHook {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(root)) {
-        val s = Files.walk(root)
-        try s.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-        finally s.close()
-      }
-    }
-    root
-  }
+  lazy val stateRoot: java.nio.file.Path = tempRoot("graft_incr_state_")
 
   def newWarehouse(): String =
     stateRoot.resolve(java.util.UUID.randomUUID().toString).toString
+
+  /** A unique table prefix `<stem><hex>`. */
+  def freshPrefix(stem: String): String =
+    stem + java.lang.Long.toHexString(graft.U.h64Local(java.util.UUID.randomUUID().toString))
+
+  /** A fresh temp directory `<stem>…`, deleted with its contents on JVM exit. */
+  def tempRoot(stem: String): java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory(stem)
+    sys.addShutdownHook(deleteTree(root))
+    root
+  }
+
+  /** Delete `p` and everything under it; a missing `p` is a no-op. */
+  def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val s = java.nio.file.Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(q => java.nio.file.Files.deleteIfExists(q))
+      finally s.close()
+    }
 }

@@ -35,8 +35,8 @@ object CloudConf {
     "spark.sql.parquet.output.committer.class" ->
       "org.apache.spark.internal.io.cloud.BindingParquetOutputCommitter")
 
-  /** Apply the committer confs to a session builder:
-    * `CloudConf(SparkSession.builder().master(...)).getOrCreate()`. */
+  /** Apply the committer confs to a cluster session's builder `b`, then
+    * `CloudConf(b).getOrCreate()`. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     s3aCommitter.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 }

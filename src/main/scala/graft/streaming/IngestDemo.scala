@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** CLI demo of the L1 ingest pipeline, mirroring the reference's main()
@@ -36,12 +35,7 @@ object IngestDemo {
     val platforms = graft.sources.TopicConfig.parsePlatforms(platformsYaml)
     println(s"CONFIG platform=${platforms.platforms.head} topic=${topic.topic} " +
       s"type=${topic.`type`} aliases=${topic.aliases.mkString("|")}")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(s"$base/src").mkdirs()
     val lines = (0 until 10).map { i =>

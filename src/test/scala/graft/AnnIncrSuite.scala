@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,9 +10,6 @@ import org.apache.spark.sql.functions._
   * and the query path's state sides must be exchange-free under the
   * bucketed stores. */
 class AnnIncrSuite extends SparkSpec {
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   test("incremental 3-day == full recompute (q_ann_lsh) == 5-day == 1-day") {
     val full = canon(SparkEntry.queries("q_ann_lsh")(spark, sfDir))
@@ -32,48 +28,25 @@ class AnnIncrSuite extends SparkSpec {
       emb.filter(pmod($"vec_id", lit(3L)) === k)
         .write.mode("overwrite").parquet(s"$root/slice$k")
     }
-    val prefix = "ann_incr_t_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("ann_incr_t_")
     val wh = s"$root/wh"
     try {
       ops.AnnIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
       ops.AnnIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
 
-      def dirBytes(p: String): Long = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-
       // THE contract proof, functional and scale-independent: delete the
       // raw day-0/1 slices before the day-2 fold — if any part of the
       // fold lazily re-read raw history it would throw FileNotFound.
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
 
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
       // the fold's declared reads: its own slice ONCE (vector scaling)
       // plus the fresh vecs partition it just wrote (the code build) —
       // unlike the L44 fold there is no candidate join at fold time, so
       // the budget is slice-shaped with one state pass of footer slack
       val inputBudget = 2L * dirBytes(s"$root/slice2") + dirBytes(wh)
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val read = Recorder.during(spark) {
         ops.AnnIncr.runDayPath(spark, s"$root/slice2", prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val read = bytesRead.get()
+      }.inputBytes
       assert(read > 0, "listener saw no input")
       assert(read <= inputBudget + (64 << 10),
         s"day-2 fold read $read bytes; bound $inputBudget")
@@ -88,16 +61,9 @@ class AnnIncrSuite extends SparkSpec {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     val days = 12
-    val prefix = "ann_incr_l_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("ann_incr_l_")
     val wh = ops.IncrState.newWarehouse()
     def slice(d: Int) = emb.filter(pmod($"vec_id", lit(days.toLong)) === d)
-    def dirBytes(p: String): Long = {
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try w.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally w.close()
-    }
     val sliceRoot = java.nio.file.Files.createTempDirectory("ann_incr_l_sl_").toString
     try {
       (0 until days).foreach { d =>
@@ -109,20 +75,12 @@ class AnnIncrSuite extends SparkSpec {
           // its own slice + the fresh partition it writes — per-day cost
           // is flat in the NUMBER of days, only state size grows
           slice(d).write.mode("overwrite").parquet(s"$sliceRoot/slice$d")
-          val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-              if (t.taskMetrics != null)
-                bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-          }
           val budget = 2L * dirBytes(s"$sliceRoot/slice$d") + dirBytes(wh)
-          spark.sparkContext.addSparkListener(listener)
-          try {
+          val bytesRead = Recorder.during(spark) {
             ops.AnnIncr.runDayPath(spark, s"$sliceRoot/slice$d", prefix, wh, d, nBuckets = 4)
-            org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-          } finally spark.sparkContext.removeSparkListener(listener)
-          assert(bytesRead.get > 0 && bytesRead.get <= budget + (64 << 10),
-            s"day $d fold read ${bytesRead.get} bytes; bound $budget")
+          }.inputBytes
+          assert(bytesRead > 0 && bytesRead <= budget + (64 << 10),
+            s"day $d fold read $bytesRead bytes; bound $budget")
         }
         ops.AnnIncr.maybeCompact(spark, prefix, wh, nBuckets = 4, maxDeltaDays = 5)
         assert(ops.AnnIncr.deltaDays(spark, prefix, wh).size <= 6,
@@ -170,8 +128,7 @@ class AnnIncrSuite extends SparkSpec {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$inbox/$name.parquet"))
     }
-    val prefix = "ann_incr_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("ann_incr_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -201,8 +158,7 @@ class AnnIncrSuite extends SparkSpec {
   test("LSH config: fold-time (tables, bits) persists in the warehouse and governs serving") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = "ann_incr_c_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("ann_incr_c_")
     val wh = ops.IncrState.newWarehouse()
     try {
       // fold at a non-default width (the 100 TB deployment move: bits
@@ -235,8 +191,7 @@ class AnnIncrSuite extends SparkSpec {
   test("restart: fold and serving re-register surviving state after the catalog dies") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = "ann_incr_r_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("ann_incr_r_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.AnnIncr.runDay(spark,
@@ -289,8 +244,7 @@ class AnnIncrSuite extends SparkSpec {
             "the q_ann_incr oracle (fixed 4-bit q_ann_lsh SQL) no longer matches " +
             "the derived fold config — widen the oracle or re-slice the corpus")
       }
-    def mk() = ("ann_incr_w_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString)), ops.IncrState.newWarehouse())
+    def mk() = (ops.IncrState.freshPrefix("ann_incr_w_"), ops.IncrState.newWarehouse())
     val (prefix, wh) = mk(); val (p2, wh2) = mk(); val (p3, wh3) = mk()
     def serve(p: String, w: String) = canon(ops.AnnIncr.topK(spark, p, w,
       ops.AnnIncr.storeQueries(spark, p), 3))
@@ -351,10 +305,8 @@ class AnnIncrSuite extends SparkSpec {
     assert(delIds.filter($"vec_id" % 50 === 0).count() > 0,
       "takedown set misses the query residue — query-set shrink unexercised")
     val kept = emb.join(delIds, Seq("vec_id"), "left_anti")
-    val pE = "ann_del_e_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val pA = "ann_del_a_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val pE = ops.IncrState.freshPrefix("ann_del_e_")
+    val pA = ops.IncrState.freshPrefix("ann_del_a_")
     val whE = ops.IncrState.newWarehouse()
     val whA = ops.IncrState.newWarehouse()
     try {
@@ -408,8 +360,7 @@ class AnnIncrSuite extends SparkSpec {
   test("query path: code and vector stores are exchange-free (bucketed scans)") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = "ann_incr_p_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("ann_incr_p_")
     val wh = ops.IncrState.newWarehouse()
     // store side LEFT (prints directly under the join), probe/cand side
     // right — the DedupIncrSuite pin shape: the first Exchange-free span
@@ -475,8 +426,7 @@ class AnnIncrSuite extends SparkSpec {
     // entry before or after any compaction.
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val p = "ann_mrk_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val p = ops.IncrState.freshPrefix("ann_mrk_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 until 2).foreach { day =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,9 +12,6 @@ import org.apache.spark.sql.functions._
   * K-row aggregate over bucketed assignment state. */
 class ClusterIncrSuite extends SparkSpec {
 
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
-
   test("incremental 3-day == 5-day == 1-day (post-epoch slicing independence)") {
     val one = canon(ops.ClusterIncr.incremental(spark, sfDir, 1))
     assert(one.nonEmpty, "corpus yields no clusters — suite is vacuous")
@@ -26,8 +22,7 @@ class ClusterIncrSuite extends SparkSpec {
   test("drift gates the re-assign epoch; pending marker re-runs a crashed swap") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = "cluster_incr_d_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("cluster_incr_d_")
     val wh = ops.IncrState.newWarehouse()
     try {
       ops.ClusterIncr.runDay(spark,
@@ -70,42 +65,20 @@ class ClusterIncrSuite extends SparkSpec {
       emb.filter(pmod($"vec_id", lit(3L)) === k)
         .write.mode("overwrite").parquet(s"$root/slice$k")
     }
-    val prefix = "cluster_incr_b_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("cluster_incr_b_")
     val wh = s"$root/wh"
     try {
       ops.ClusterIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
       ops.ClusterIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
-      def dirBytes(p: String): Long = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
       // raw day-0/1 slices deleted BEFORE the day-2 fold and the epoch:
       // any lazy re-read of raw history throws FileNotFound
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
       // declared reads: the slice ONCE (persisted across the three fold
       // passes) — never days 0/1, never the state tables' rows
       val inputBudget = dirBytes(s"$root/slice2") + dirBytes(wh)
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val read = Recorder.during(spark) {
         ops.ClusterIncr.runDayPath(spark, s"$root/slice2", prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val read = bytesRead.get()
+      }.inputBytes
       assert(read > 0, "listener saw no input")
       assert(read <= inputBudget + (64 << 10),
         s"day-2 fold read $read bytes; bound $inputBudget")
@@ -119,8 +92,7 @@ class ClusterIncrSuite extends SparkSpec {
   test("lifecycle: replay, compaction, restart preserve the settled report") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = "cluster_incr_l_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("cluster_incr_l_")
     val wh = ops.IncrState.newWarehouse()
     def slice(d: Int) = emb.filter(pmod($"vec_id", lit(3L)) === d)
     try {
@@ -159,8 +131,7 @@ class ClusterIncrSuite extends SparkSpec {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$inbox/$name.parquet"))
     }
-    val prefix = "cluster_incr_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("cluster_incr_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -176,8 +147,7 @@ class ClusterIncrSuite extends SparkSpec {
       // epoch and compare against a one-shot fold of the same corpus
       ops.ClusterIncr.reassign(spark, prefix, wh, nBuckets = 4)
       val got = canon(ops.ClusterIncr.report(spark, prefix, wh))
-      val pRef = "cluster_incr_sr_" + java.lang.Long.toHexString(
-        U.h64Local(java.util.UUID.randomUUID().toString))
+      val pRef = ops.IncrState.freshPrefix("cluster_incr_sr_")
       val whRef = ops.IncrState.newWarehouse()
       try {
         ops.ClusterIncr.runDay(spark, emb, pRef, whRef, 0, nBuckets = 4)
@@ -194,10 +164,8 @@ class ClusterIncrSuite extends SparkSpec {
     val del = emb.filter(pmod($"vec_id", lit(11L)) === 5)
     assert(del.count() > 0, "takedown set empty — test is vacuous")
     val kept = emb.join(del.select($"vec_id"), Seq("vec_id"), "left_anti")
-    val pE = "cluster_del_e_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val pA = "cluster_del_a_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val pE = ops.IncrState.freshPrefix("cluster_del_e_")
+    val pA = ops.IncrState.freshPrefix("cluster_del_a_")
     val whE = ops.IncrState.newWarehouse()
     val whA = ops.IncrState.newWarehouse()
     try {
@@ -227,8 +195,7 @@ class ClusterIncrSuite extends SparkSpec {
       assert(rep() == expected, "retraction path != batch on reduced corpus")
       // the delete must MOVE the refined centroids (else the signed
       // netting is unexercised) — compare against the full-corpus refine
-      val pF = "cluster_del_f_" + java.lang.Long.toHexString(
-        U.h64Local(java.util.UUID.randomUUID().toString))
+      val pF = ops.IncrState.freshPrefix("cluster_del_f_")
       val whF = ops.IncrState.newWarehouse()
       try {
         (0 until 3).foreach { day =>
@@ -253,8 +220,7 @@ class ClusterIncrSuite extends SparkSpec {
   test("report: one K-row aggregate over bucketed assignment state") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = "cluster_incr_p_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("cluster_incr_p_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.ClusterIncr.runDay(spark,
@@ -290,8 +256,7 @@ class ClusterIncrSuite extends SparkSpec {
     // the HYBRID algebra: delete events carry the embeddings as folded
     // (negated centroid partials re-derive from the slice)
     val del = emb.filter(pmod($"vec_id", lit(11L)) === 5)
-    val prefix = "cluster_cdc_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("cluster_cdc_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -310,8 +275,7 @@ class ClusterIncrSuite extends SparkSpec {
       // then compare against the reduced-corpus fold + its epoch
       ops.ClusterIncr.reassign(spark, prefix, wh, nBuckets = 4)
       val kept = emb.join(del.select($"vec_id"), Seq("vec_id"), "left_anti")
-      val pE = "cluster_cdc_e_" + java.lang.Long.toHexString(
-        U.h64Local(java.util.UUID.randomUUID().toString))
+      val pE = ops.IncrState.freshPrefix("cluster_cdc_e_")
       val whE = ops.IncrState.newWarehouse()
       try {
         (0 until 3).foreach { day =>

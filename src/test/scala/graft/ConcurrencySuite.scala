@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** VERDICT r14 #1: the incremental-state family must be safe on a SHARED
@@ -22,9 +21,6 @@ import org.apache.spark.sql.functions._
 class ConcurrencySuite extends SparkSpec {
 
   private val ConfKey = "spark.sql.sources.partitionOverwriteMode"
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   /** Run `body` with the session conf pinned to `mode` (restored after —
     * this suite runs single-threaded between tests, so the legacy

@@ -35,4 +35,28 @@ class ContractSuite extends AnyFunSuite {
         assert(sql.toUpperCase.contains("ORDER BY"), s"$k: oracle lacks total ORDER BY")
     }
   }
+
+  test("sessions are built only by graft.Session, listeners added only by graft.Recorder") {
+    import scala.jdk.CollectionConverters._
+    // call-site needle -> the files allowed to contain it (TopicConfigSuite
+    // checks CloudConf on a bare builder, no session is created)
+    val allowed = Map(
+      "SparkSession.builder" + "(" -> Set("Session.scala", "TopicConfigSuite.scala"),
+      "addSparkListener" + "(" -> Set("Recorder.scala"))
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { d =>
+      val s = java.nio.file.Files.walk(Bench.repoRoot.resolve(d))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.exists(_.getFileName.toString == "SparkEntry.scala"), "the scan missed src/main/scala")
+    val offenders = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      (needle, ok) <- allowed
+      if line.contains(needle) && !ok(f.getFileName.toString)
+    } yield s"${Bench.repoRoot.relativize(f)}:${i + 1} $needle"
+    assert(offenders.isEmpty, offenders.mkString(s"${offenders.size} call sites:\n", "\n", ""))
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,9 +9,6 @@ import org.apache.spark.sql.functions._
   * day-N run must read ONLY the day-N slice + the previous partials —
   * asserted via task input-bytes metrics, the 100 TB contract. */
 class CurateIncrSuite extends SparkSpec {
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   test("incremental 3-day == one-shot (single day) == 5-day") {
     val one = ops.CurateIncr.incremental(spark, sfDir, 1)
@@ -50,39 +46,18 @@ class CurateIncrSuite extends SparkSpec {
     ops.CurateIncr.runDayPath(spark, s"$root/slice0", state, 0)
     ops.CurateIncr.runDayPath(spark, s"$root/slice1", state, 1)
 
-    def dirBytes(p: String): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally s.close()
-    }
     val sliceBytes = dirBytes(s"$root/slice2")
     val inputBudget = sliceBytes + dirBytes(s"$state/v1")
 
     // THE contract proof, functional and scale-independent: delete the
     // raw day-0/1 slices before the day-2 fold — if any part of the fold
     // lazily re-read raw history it would throw FileNotFound.
-    Seq("slice0", "slice1").foreach { d =>
-      val p = java.nio.file.Paths.get(s"$root/$d")
-      val w = java.nio.file.Files.walk(p)
-      try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally w.close()
-    }
+    Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
 
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val read = Recorder.during(spark) {
       ops.CurateIncr.runDayPath(spark, s"$root/slice2", state, 2)
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }.inputBytes
 
-    val read = bytesRead.get()
     assert(read > 0, "listener saw no input")
     // I/O-amplification sanity bound: the slice parquet is scanned ONCE
     // (the gated frame is persisted DISK_ONLY and its three consumers
@@ -228,8 +203,7 @@ class CurateIncrSuite extends SparkSpec {
     val kept = docs.join(del.select($"doc_id"), Seq("doc_id"), "left_anti")
     assert(kept.filter($"doc_id" === keeperId + off).count() == 1,
       "the planted survivor fell in the takedown set — pick a different offset")
-    val pA = "curate_del_a_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val pA = ops.IncrState.freshPrefix("curate_del_a_")
     val whA = ops.IncrState.newWarehouse()
     try {
       // the retractable FOLD is a third backend: equal to the parquet
@@ -285,40 +259,18 @@ class CurateIncrSuite extends SparkSpec {
     }
     docs.filter(pmod($"doc_id", lit(11L)) === 5)
       .write.mode("overwrite").parquet(s"$root/del")
-    val prefix = "curate_del_b_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("curate_del_b_")
     val wh = s"$root/wh"
     try {
       ops.CurateIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
       ops.CurateIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
-      def dirBytes(p: String): Long = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
       val delBytes = dirBytes(s"$root/del")
       // the functional never-rescan proof: fold slices deleted BEFORE
       // the retraction — any lazy re-read would throw FileNotFound
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
+      val read = Recorder.during(spark) {
         ops.CurateIncr.deleteDayPath(spark, s"$root/del", prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val read = bytesRead.get()
+      }.inputBytes
       assert(read > 0, "listener saw no input")
       // slice-shaped bound, generous for the DISK_ONLY persist re-reads
       // (same calibration as the fold's input-bytes test above) — the
@@ -347,8 +299,7 @@ class CurateIncrSuite extends SparkSpec {
     // the retractable (member-level) backend: delete events carry the
     // documents as folded — keeper tombstones by doc_id + negated tf
     val del = docs.filter(pmod($"doc_id", lit(11L)) === 5)
-    val prefix = "curate_cdc_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("curate_cdc_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -364,8 +315,7 @@ class CurateIncrSuite extends SparkSpec {
         nBuckets = 4, maxDeltaDays = 3)
       assert(v2 == 4, s"restart should process exactly the new event, got $v2")
       val kept = docs.join(del.select($"doc_id"), Seq("doc_id"), "left_anti")
-      val pE = "curate_cdc_e_" + java.lang.Long.toHexString(
-        U.h64Local(java.util.UUID.randomUUID().toString))
+      val pE = ops.IncrState.freshPrefix("curate_cdc_e_")
       val whE = ops.IncrState.newWarehouse()
       try {
         (0 until 3).foreach { day =>

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.IncrState.freshPrefix
 
 /** VERDICT r15 #6: the incremental family COMPOSED — all eight members
   * (retractable curation, near-dup band store, ANN index, TF-IDF,
@@ -18,13 +19,6 @@ import org.apache.spark.sql.functions._
   * one warehouse. */
 class DayDriverSuite extends SparkSpec {
 
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
-
-  private def fresh(stem: String): String =
-    stem + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-
   test("two same-kind members on one warehouse: per-prefix markers stay isolated") {
     // round 16: _last_day, _doc_counts, _vec_counts, _ann_conf and
     // _recode_pending are all per prefix now (the ClusterIncr/
@@ -35,9 +29,9 @@ class DayDriverSuite extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
     val wh = ops.IncrState.newWarehouse()
-    val (tA, tB) = (fresh("iso_tf_a_"), fresh("iso_tf_b_"))
-    val (aA, aB) = (fresh("iso_ann_a_"), fresh("iso_ann_b_"))
-    val (sA, sB) = (fresh("iso_tf_sa_"), fresh("iso_tf_sb_"))
+    val (tA, tB) = (freshPrefix("iso_tf_a_"), freshPrefix("iso_tf_b_"))
+    val (aA, aB) = (freshPrefix("iso_ann_a_"), freshPrefix("iso_ann_b_"))
+    val (sA, sB) = (freshPrefix("iso_tf_sa_"), freshPrefix("iso_tf_sb_"))
     try {
       // TF-IDF member A: 2 days of residues 0/1; member B: ONE day of
       // residue 2 — a warehouse-global _doc_counts would hand B the sum
@@ -96,7 +90,7 @@ class DayDriverSuite extends SparkSpec {
     // serial oracles, one isolated warehouse per member (computed once;
     // the folds are deterministic)
     val expected = (0 until 4).map { m =>
-      val pS = fresh(s"ddc_s${m}_")
+      val pS = freshPrefix(s"ddc_s${m}_")
       val whS = ops.IncrState.newWarehouse()
       (0 to 1).foreach(d => ops.DomainsIncr.runDay(spark, slice(m, d), pS, whS, d, nBuckets = 4))
       ops.DomainsIncr.compactState(spark, pS, whS, nBuckets = 4)
@@ -108,7 +102,7 @@ class DayDriverSuite extends SparkSpec {
 
     (1 to 5).foreach { iter =>
       val wh = ops.IncrState.newWarehouse()
-      val ps = (0 until 4).map(m => fresh(s"ddc_i${iter}_m${m}_"))
+      val ps = (0 until 4).map(m => freshPrefix(s"ddc_i${iter}_m${m}_"))
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val p0Parked = new java.util.concurrent.CountDownLatch(1)
       val contenderSawLoud = new java.util.concurrent.CountDownLatch(1)
@@ -196,10 +190,10 @@ class DayDriverSuite extends SparkSpec {
 
     // member prefixes + one checkpoint per member (the drive-form pin
     // is per checkpoint; the WAREHOUSE is the shared thing under test)
-    val pCur = fresh("dd_cur_"); val pDed = fresh("dd_ded_")
-    val pTf = fresh("dd_tf_"); val pDom = fresh("dd_dom_")
-    val pQ = fresh("dd_q_"); val pAnn = fresh("dd_ann_")
-    val pCl = fresh("dd_cl_"); val pTri = fresh("dd_tri_")
+    val pCur = freshPrefix("dd_cur_"); val pDed = freshPrefix("dd_ded_")
+    val pTf = freshPrefix("dd_tf_"); val pDom = freshPrefix("dd_dom_")
+    val pQ = freshPrefix("dd_q_"); val pAnn = freshPrefix("dd_ann_")
+    val pCl = freshPrefix("dd_cl_"); val pTri = freshPrefix("dd_tri_")
     val members = Seq(pCur, pDed, pTf, pDom, pQ, pAnn, pCl, pTri)
     def ckpt(p: String) = s"$root/ckpt_$p"
 
@@ -264,10 +258,10 @@ class DayDriverSuite extends SparkSpec {
       val keptEv = events.join(evDel.select($"event_id"), Seq("event_id"), "left_anti")
       val keptEdges = edges.join(edgeDel, Seq("u", "v"), "left_anti")
       val whE = ops.IncrState.newWarehouse()
-      val eCur = fresh("dd_e_cur_"); val eDed = fresh("dd_e_ded_")
-      val eTf = fresh("dd_e_tf_"); val eDom = fresh("dd_e_dom_")
-      val eQ = fresh("dd_e_q_"); val eAnn = fresh("dd_e_ann_")
-      val eCl = fresh("dd_e_cl_"); val eTri = fresh("dd_e_tri_")
+      val eCur = freshPrefix("dd_e_cur_"); val eDed = freshPrefix("dd_e_ded_")
+      val eTf = freshPrefix("dd_e_tf_"); val eDom = freshPrefix("dd_e_dom_")
+      val eQ = freshPrefix("dd_e_q_"); val eAnn = freshPrefix("dd_e_ann_")
+      val eCl = freshPrefix("dd_e_cl_"); val eTri = freshPrefix("dd_e_tri_")
       try {
         (0 until 3).foreach { d =>
           ops.CurateIncr.runDayRetractable(spark,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,9 +9,6 @@ import org.apache.spark.sql.functions._
   * asserted via task input-bytes), and the candidate join's state side
   * must be exchange-free under the bucketed band store. */
 class DedupIncrSuite extends SparkSpec {
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   test("incremental 3-day == full recompute (q_dedup_minhash) == 5-day") {
     val full = canon(SparkEntry.queries("q_dedup_minhash")(spark, sfDir))
@@ -31,42 +27,20 @@ class DedupIncrSuite extends SparkSpec {
       docs.filter(pmod($"doc_id", lit(3L)) === k)
         .write.mode("overwrite").parquet(s"$root/slice$k")
     }
-    val prefix = "dedup_incr_t_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("dedup_incr_t_")
     val wh = s"$root/wh"
     try {
       ops.DedupIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
       ops.DedupIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
 
-      def dirBytes(p: String): Long = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally s.close()
-      }
-
       // THE contract proof, functional and scale-independent: delete the
       // raw day-0/1 slices before the day-2 fold — if any part of the
       // fold lazily re-read raw history it would throw FileNotFound.
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
 
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val read = Recorder.during(spark) {
         ops.DedupIncr.runDayPath(spark, s"$root/slice2", prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }.inputBytes
 
       // I/O-amplification sanity bound on top: the fold's declared reads
       // are its own slice plus a BOUNDED number of state passes — the
@@ -78,7 +52,6 @@ class DedupIncrSuite extends SparkSpec {
       // byte bound is 3× state (still far below any history re-read
       // regime at real scale, where state ≪ cumulative raw corpus).
       val inputBudget = 2L * dirBytes(s"$root/slice2") + 3L * dirBytes(wh)
-      val read = bytesRead.get()
       assert(read > 0, "listener saw no input")
       assert(read <= inputBudget + (64 << 10),
         s"day-2 fold read $read bytes; bound $inputBudget")
@@ -92,17 +65,10 @@ class DedupIncrSuite extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
     val days = 24
-    val prefix = "dedup_incr_l_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("dedup_incr_l_")
     val wh = ops.DedupIncr.newWarehouse()
     def slice(d: Int) = docs.filter(pmod($"doc_id", lit(days.toLong)) === d)
     val sliceRoot = java.nio.file.Files.createTempDirectory("dedup_incr_l_sl_").toString
-    def dirBytes(p: String): Long = {
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try w.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally w.close()
-    }
     try {
       (0 until days).foreach { d =>
         if (d < days - 1) {
@@ -114,20 +80,12 @@ class DedupIncrSuite extends SparkSpec {
           // budget shape the day-2 test pins, proving per-day cost does
           // not grow with the NUMBER of days, only with state size
           slice(d).write.mode("overwrite").parquet(s"$sliceRoot/slice$d")
-          val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-          val listener = new SparkListener {
-            override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-              if (t.taskMetrics != null)
-                bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-          }
           val budget = 2L * dirBytes(s"$sliceRoot/slice$d") + 3L * dirBytes(wh)
-          spark.sparkContext.addSparkListener(listener)
-          try {
+          val bytesRead = Recorder.during(spark) {
             ops.DedupIncr.runDayPath(spark, s"$sliceRoot/slice$d", prefix, wh, d, nBuckets = 4)
-            org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-          } finally spark.sparkContext.removeSparkListener(listener)
-          assert(bytesRead.get > 0 && bytesRead.get <= budget + (64 << 10),
-            s"day $d fold read ${bytesRead.get} bytes; bound $budget")
+          }.inputBytes
+          assert(bytesRead > 0 && bytesRead <= budget + (64 << 10),
+            s"day $d fold read $bytesRead bytes; bound $budget")
         }
         ops.DedupIncr.maybeCompact(spark, prefix, wh, nBuckets = 4, maxDeltaDays = 5)
         // the VERDICT r11 #4 bound: settled-day partitions and files per
@@ -178,8 +136,7 @@ class DedupIncrSuite extends SparkSpec {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$inbox/$name.parquet"))
     }
-    val prefix = "dedup_incr_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("dedup_incr_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -231,8 +188,7 @@ class DedupIncrSuite extends SparkSpec {
       .withColumn("n_chars", lit(null).cast("long"))
       .withColumn("op", lit("del"))
       .select(streaming.DedupIncrStream.cdcSchema.fieldNames.map(col).toIndexedSeq: _*)
-    val prefix = "dedup_cdc_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("dedup_cdc_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -252,8 +208,7 @@ class DedupIncrSuite extends SparkSpec {
       assert(v2 == 4, s"restart should process exactly the new event, got $v2")
       // the drained ledger == the batch recompute on the REDUCED corpus
       val delSet = delIds.collect().map(_.getLong(0)).toSet
-      val pE = "dedup_cdc_e_" + java.lang.Long.toHexString(
-        U.h64Local(java.util.UUID.randomUUID().toString))
+      val pE = ops.IncrState.freshPrefix("dedup_cdc_e_")
       val whE = ops.DedupIncr.newWarehouse()
       try {
         val kept = docs.join(delIds, Seq("doc_id"), "left_anti")
@@ -296,10 +251,8 @@ class DedupIncrSuite extends SparkSpec {
         prefix, wh, 3, nBuckets = 4)
       wh
     }
-    val p1 = "dedup_sql_a_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val p2 = "dedup_sql_b_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val p1 = ops.IncrState.freshPrefix("dedup_sql_a_")
+    val p2 = ops.IncrState.freshPrefix("dedup_sql_b_")
     val (wh1, wh2) = (build(p1), build(p2))
     try {
       ops.DedupIncr.compactLedger(spark, p1, wh1)
@@ -356,8 +309,7 @@ class DedupIncrSuite extends SparkSpec {
     }.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length($"text").cast("long"))
-    val prefix = "dedup_incr_e_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("dedup_incr_e_")
     val wh = ops.DedupIncr.newWarehouse()
     try {
       (0 until 2).foreach { d =>
@@ -382,10 +334,8 @@ class DedupIncrSuite extends SparkSpec {
     val delIds = docs.filter(pmod($"doc_id", lit(11L)) === 5).select($"doc_id")
     assert(delIds.count() > 0, "takedown set empty — test is vacuous")
     val kept = docs.join(delIds, Seq("doc_id"), "left_anti")
-    val pE = "dedup_del_e_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val pA = "dedup_del_a_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val pE = ops.IncrState.freshPrefix("dedup_del_e_")
+    val pA = ops.IncrState.freshPrefix("dedup_del_a_")
     val whE = ops.DedupIncr.newWarehouse()
     val whA = ops.DedupIncr.newWarehouse()
     try {
@@ -444,46 +394,22 @@ class DedupIncrSuite extends SparkSpec {
     }
     docs.filter(pmod($"doc_id", lit(11L)) === 5).select($"doc_id")
       .write.mode("overwrite").parquet(s"$root/del")
-    val prefix = "dedup_del_b_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("dedup_del_b_")
     val wh = s"$root/wh"
     try {
       ops.DedupIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
       ops.DedupIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
-      def dirBytes(p: String): Long = {
-        val path = java.nio.file.Paths.get(p)
-        if (!java.nio.file.Files.exists(path)) return 0L
-        val s = java.nio.file.Files.walk(path)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
       // the functional proof: raw fold slices deleted BEFORE the
       // retraction — any lazy re-read would throw FileNotFound
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
       // declared reads: the delete ids (once staged in, once read back
       // from the tombstone table), the ledger (read for the filter, its
       // staged copy read back for the swap) — NEVER the band/doc state
       // (the anti-filter consumes tombstones at the NEXT fold, not here)
       val inputBudget = 2L * dirBytes(s"$root/del") + 2L * dirBytes(s"$wh/pairs")
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val read = Recorder.during(spark) {
         ops.DedupIncr.deleteDayPath(spark, s"$root/del", prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val read = bytesRead.get()
+      }.inputBytes
       assert(read > 0, "listener saw no input")
       assert(read <= inputBudget + (256 << 10),
         s"retraction read $read bytes; bound $inputBudget — it touched state it must not")
@@ -493,8 +419,7 @@ class DedupIncrSuite extends SparkSpec {
   test("candidate join: band-store side is exchange-free (bucketed scan)") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    val prefix = "dedup_incr_p_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("dedup_incr_p_")
     val wh = ops.DedupIncr.newWarehouse()
     try {
       ops.DedupIncr.runDay(spark,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SQL surface of the incremental serving reads (VERDICT r14 #4): each
@@ -12,17 +11,10 @@ import org.apache.spark.sql.functions._
   * re-bake marker literals / swap in the tombstone-aware form). */
 class IncrViewsSuite extends SparkSpec {
 
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
-
-  private def freshPrefix(stem: String): String =
-    stem + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-
   test("v_*_report == TfidfIncr.report, fresh session, follows folds + deletes") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    val prefix = freshPrefix("tfidf_view_")
+    val prefix = ops.IncrState.freshPrefix("tfidf_view_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.TfidfIncr.runDay(spark,
@@ -54,7 +46,7 @@ class IncrViewsSuite extends SparkSpec {
   test("v_*_report == DomainsIncr.report, fresh session (static view)") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    val prefix = freshPrefix("domains_view_")
+    val prefix = ops.IncrState.freshPrefix("domains_view_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.DomainsIncr.runDay(spark,
@@ -81,7 +73,7 @@ class IncrViewsSuite extends SparkSpec {
     val events = Tables.events(spark, sfDir)
       .select($"event_id", $"user_id", $"value")
     val customers = Tables.customer(spark, sfDir)
-    val prefix = freshPrefix("quality_view_")
+    val prefix = ops.IncrState.freshPrefix("quality_view_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.QualityIncr.runDay(spark,
@@ -111,7 +103,7 @@ class IncrViewsSuite extends SparkSpec {
   test("v_*_report == ClusterIncr.report, fresh session, tombstone swap") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = freshPrefix("cluster_view_")
+    val prefix = ops.IncrState.freshPrefix("cluster_view_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.ClusterIncr.runDay(spark,
@@ -137,7 +129,7 @@ class IncrViewsSuite extends SparkSpec {
   test("v_*_report == CurateIncr.reportRetractable, fresh session, keeper re-derive") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    val prefix = freshPrefix("curate_view_")
+    val prefix = ops.IncrState.freshPrefix("curate_view_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.CurateIncr.runDayRetractable(spark,
@@ -167,8 +159,8 @@ class IncrViewsSuite extends SparkSpec {
     val events = Tables.events(spark, sfDir)
       .select($"event_id", $"user_id", $"value")
     val customers = Tables.customer(spark, sfDir)
-    val pT = freshPrefix("tfidf_viewplan_")
-    val pQ = freshPrefix("quality_viewplan_")
+    val pT = ops.IncrState.freshPrefix("tfidf_viewplan_")
+    val pQ = ops.IncrState.freshPrefix("quality_viewplan_")
     val whT = ops.IncrState.newWarehouse()
     val whQ = ops.IncrState.newWarehouse()
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -218,7 +210,7 @@ class IncrViewsSuite extends SparkSpec {
       .distinct()
     val edges = e0.as("a").join(e0.as("b"), $"a.ok" === $"b.ok" && $"a.pk" < $"b.pk")
       .select($"a.pk".as("u"), $"b.pk".as("v")).distinct()
-    val prefix = freshPrefix("tri_view_")
+    val prefix = ops.IncrState.freshPrefix("tri_view_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.TriIncr.runDay(spark,
@@ -244,7 +236,7 @@ class IncrViewsSuite extends SparkSpec {
   test("v_*_topk == AnnIncr.topK via the INSERT-then-SELECT contract (VERDICT r15 #4)") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = freshPrefix("ann_view_")
+    val prefix = ops.IncrState.freshPrefix("ann_view_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.AnnIncr.runDay(spark,
@@ -309,7 +301,7 @@ class IncrViewsSuite extends SparkSpec {
   test("refresh hooks are cross-session: register in A, fold+delete in B, read in C (VERDICT r15 #7)") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    val prefix = freshPrefix("tfidf_xsess_")
+    val prefix = ops.IncrState.freshPrefix("tfidf_xsess_")
     val wh = ops.IncrState.newWarehouse()
     try {
       // session A: fold + register (bakes n_docs for 1 day)

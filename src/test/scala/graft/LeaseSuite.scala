@@ -16,9 +16,6 @@ class LeaseSuite extends SparkSpec {
   private val IS = ops.IncrState
   private def hconf = spark.sparkContext.hadoopConfiguration
 
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
-
   test("lease contention fails loudly; release unblocks; reentrant for the holder") {
     val wh = IS.newWarehouse()
     val token = IS.acquireLease(hconf, wh, "p1")
@@ -178,10 +175,6 @@ class LeaseSuite extends SparkSpec {
     ops.DomainsIncr.dropState(spark, "lease_chaos")
   }
 
-  private def freshPrefix(stem: String): String =
-    stem + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-
   test("heartbeat: a LIVE holder outlasting the TTL is NOT evicted (VERDICT r16 #1a)") {
     // the r16 defect: the lease mtime was written once at acquire, so a
     // fold longer than the TTL looked crashed and got broken. The
@@ -217,12 +210,12 @@ class LeaseSuite extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
     def slice(d: Int) = docs.filter(pmod($"doc_id", lit(3L)) === d)
-    val prefix = freshPrefix("evict_")
+    val prefix = ops.IncrState.freshPrefix("evict_")
     val wh = IS.newWarehouse()
     // expected end state: holder's day 0 + taker's day 1 — the evicted
     // holder's day-2 attempt must land NOTHING
     val whE = IS.newWarehouse()
-    val pE = freshPrefix("evict_e_")
+    val pE = ops.IncrState.freshPrefix("evict_e_")
     (0 to 1).foreach(d => ops.DomainsIncr.runDay(spark, slice(d), pE, whE, d, nBuckets = 4))
     val expected = canon(ops.DomainsIncr.report(spark, pE, whE))
 
@@ -353,7 +346,7 @@ class LeaseSuite extends SparkSpec {
 
   test("concurrently: lease holds propagate to workers (fence guards), failures rethrow (round 17)") {
     val wh = IS.newWarehouse()
-    val prefix = freshPrefix("conc_")
+    val prefix = ops.IncrState.freshPrefix("conc_")
     // inside a leased section, a worker thread spawned by `concurrently`
     // must see the hold: fence() passes while the lease is ours, and
     // ABORTS in the worker once the lease file is usurped — the §2.6

@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables, U}
-import org.apache.spark.sql.DataFrame
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** Crash-injection for the DELETE-EPOCH purge (VERDICT r14 #6): the
@@ -30,13 +29,6 @@ import org.apache.spark.sql.functions._
   * reduced-corpus serving read captured BEFORE any chaos. */
 class PurgeChaosSuite extends SparkSpec {
 
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
-
-  private def freshPrefix(stem: String): String =
-    stem + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-
   /** Simulate a JVM restart: drop the catalog entries (they are
     * in-memory only — a real restart loses them) while the warehouse
     * files survive. Consumers must come back via ensureRegistered. */
@@ -46,7 +38,7 @@ class PurgeChaosSuite extends SparkSpec {
   test("DedupIncr: crash between tombstone write and purge, then mid-purge") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    val prefix = freshPrefix("purge_chaos_d_")
+    val prefix = IncrState.freshPrefix("purge_chaos_d_")
     val wh = IncrState.newWarehouse()
     val del = docs.filter(pmod($"doc_id", lit(7L)) === 3).select($"doc_id")
     try {
@@ -103,7 +95,7 @@ class PurgeChaosSuite extends SparkSpec {
   test("AnnIncr: crash between tombstone write and purge, then mid-purge") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val prefix = freshPrefix("purge_chaos_a_")
+    val prefix = IncrState.freshPrefix("purge_chaos_a_")
     val wh = IncrState.newWarehouse()
     val del = emb.filter(pmod($"vec_id", lit(7L)) === 3).select($"vec_id")
     def serve(): Seq[String] = canon(
@@ -152,7 +144,7 @@ class PurgeChaosSuite extends SparkSpec {
     // the taker's lease).
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    val prefix = freshPrefix("takeover_c_")
+    val prefix = IncrState.freshPrefix("takeover_c_")
     val wh = IncrState.newWarehouse()
     val hconf = spark.sparkContext.hadoopConfiguration
     try {
@@ -222,7 +214,7 @@ class PurgeChaosSuite extends SparkSpec {
   test("writeDay refuses a column the existing table lacks (old-layout tombstones)") {
     import spark.implicits._
     val wh = IncrState.newWarehouse()
-    val t = IncrState.StateTable(freshPrefix("drift_t_"), "id", Seq("id"))
+    val t = IncrState.StateTable(IncrState.freshPrefix("drift_t_"), "id", Seq("id"))
     try {
       IncrState.writeDay(spark,
         spark.range(10).select($"id").withColumn("day", lit(0)), t, wh, 0, nBuckets = 2)

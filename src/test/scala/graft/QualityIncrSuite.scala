@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,9 +11,6 @@ import org.apache.spark.sql.functions._
   * broadcast customer dim, and the report's state side must be
   * exchange-free under the `bkt` bucketing. */
 class QualityIncrSuite extends SparkSpec {
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   test("incremental 3-day == full recompute (q_quality_report) == 5-day == 1-day") {
     val full = canon(SparkEntry.queries("q_quality_report")(spark, sfDir))
@@ -35,8 +31,7 @@ class QualityIncrSuite extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
       .select($"event_id", $"user_id", $"value")
     val cust = Tables.customer(spark, sfDir)
-    val prefix = "quality_incr_x_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("quality_incr_x_")
     val wh = ops.IncrState.newWarehouse()
     try {
       // day 0: even user_ids; day 1: odd user_ids PLUS a replant of the
@@ -80,44 +75,21 @@ class QualityIncrSuite extends SparkSpec {
       ev.filter(pmod($"event_id", lit(3L)) === k)
         .write.mode("overwrite").parquet(s"$root/slice$k")
     }
-    val prefix = "quality_incr_t_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("quality_incr_t_")
     val wh = s"$root/wh"
     try {
       ops.QualityIncr.runDayPath(spark, s"$root/slice0", sfDir, prefix, wh, 0)
       ops.QualityIncr.runDayPath(spark, s"$root/slice1", sfDir, prefix, wh, 1)
 
-      def dirBytes(p: String): Long = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
 
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
-
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
       // declared reads: the slice twice (counter pass + bitmap pass) +
       // the broadcast customer dim — never days 0/1, never the state
       val custBytes = new java.io.File(s"$sfDir/customer.parquet").length
       val inputBudget = 2L * dirBytes(s"$root/slice2") + custBytes + dirBytes(wh)
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val read = Recorder.during(spark) {
         ops.QualityIncr.runDayPath(spark, s"$root/slice2", sfDir, prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val read = bytesRead.get()
+      }.inputBytes
       assert(read > 0, "listener saw no input")
       assert(read <= inputBudget + (64 << 10),
         s"day-2 fold read $read bytes; bound $inputBudget")
@@ -131,8 +103,7 @@ class QualityIncrSuite extends SparkSpec {
     val ev = Tables.events(spark, sfDir).select($"event_id", $"user_id", $"value")
     val cust = Tables.customer(spark, sfDir)
     val days = 9
-    val prefix = "quality_incr_l_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("quality_incr_l_")
     val wh = ops.IncrState.newWarehouse()
     def slice(d: Int) = ev.filter(pmod($"event_id", lit(days.toLong)) === d)
     try {
@@ -182,8 +153,7 @@ class QualityIncrSuite extends SparkSpec {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$inbox/$name.parquet"))
     }
-    val prefix = "quality_incr_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("quality_incr_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -219,10 +189,8 @@ class QualityIncrSuite extends SparkSpec {
         ops.QualityIncr.runDay(spark, d.filter(pmod($"event_id", lit(3L)) === day),
           cust, prefix, wh, day, nBuckets = 4)
       }
-    val pA = "quality_del_a_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val pE = "quality_del_e_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val pA = ops.IncrState.freshPrefix("quality_del_a_")
+    val pE = ops.IncrState.freshPrefix("quality_del_e_")
     val whA = ops.IncrState.newWarehouse()
     val whE = ops.IncrState.newWarehouse()
     try {
@@ -266,10 +234,8 @@ class QualityIncrSuite extends SparkSpec {
     val ev = Tables.events(spark, sfDir).select($"event_id", $"user_id", $"value")
     val cust = Tables.customer(spark, sfDir)
     val wh = ops.IncrState.newWarehouse()
-    val p1 = "quality_share_1_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val p2 = "quality_share_2_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val p1 = ops.IncrState.freshPrefix("quality_share_1_")
+    val p2 = ops.IncrState.freshPrefix("quality_share_2_")
     try {
       // disjoint halves into the SAME warehouse under different prefixes
       ops.QualityIncr.runDay(spark, ev.filter(pmod($"event_id", lit(2L)) === 0),
@@ -301,8 +267,7 @@ class QualityIncrSuite extends SparkSpec {
     val ev = Tables.events(spark, sfDir).select($"event_id", $"user_id", $"value")
     val cust = Tables.customer(spark, sfDir)
     val wh = ops.IncrState.newWarehouse()
-    val prefix = "quality_corrupt_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("quality_corrupt_")
     try {
       ops.QualityIncr.runDay(spark, ev.limit(100), cust, prefix, wh, 0, nBuckets = 4)
       // truncate one counter off the day-0 line — a malformed
@@ -322,8 +287,7 @@ class QualityIncrSuite extends SparkSpec {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir).select($"event_id", $"user_id", $"value")
     val cust = Tables.customer(spark, sfDir)
-    val prefix = "quality_incr_p_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("quality_incr_p_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.QualityIncr.runDay(spark,
@@ -360,8 +324,7 @@ class QualityIncrSuite extends SparkSpec {
     // the takedown set must include planted-dirt members so every
     // counter shrinks (same shape as the batch retraction test)
     val del = ev.filter(pmod($"event_id", lit(11L)) === 5)
-    val prefix = "quality_cdc_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("quality_cdc_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -377,8 +340,7 @@ class QualityIncrSuite extends SparkSpec {
         wh, ckpt, nBuckets = 4, maxDeltaDays = 3)
       assert(v2 == 4, s"restart should process exactly the new event, got $v2")
       val kept = ev.join(del.select($"event_id"), Seq("event_id"), "left_anti")
-      val pE = "quality_cdc_e_" + java.lang.Long.toHexString(
-        U.h64Local(java.util.UUID.randomUUID().toString))
+      val pE = ops.IncrState.freshPrefix("quality_cdc_e_")
       val whE = ops.IncrState.newWarehouse()
       try {
         (0 until 3).foreach { day =>

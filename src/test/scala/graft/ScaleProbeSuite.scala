@@ -13,7 +13,18 @@ import org.apache.spark.sql.functions._
   * collect-shaped growth). */
 class ScaleProbeSuite extends SparkSpec {
 
-  private val outDir = "/tmp/graft_scale_suite"
+  // per-suite scratch root: concurrent runs never collide, and nothing
+  // outlives the suite
+  private val root = java.nio.file.Files.createTempDirectory("graft_scale_suite_").toString
+  override def afterAll(): Unit = try deleteTree(root) finally super.afterAll()
+
+  // the 10x corpus, generated once: the probe, jaccard and rung-2 tests
+  // all read it
+  private lazy val outDir: String = {
+    val d = s"$root/x10"
+    ScaleProbe.generate(spark, sfDir, d, 10)
+    d
+  }
 
   // the structural scale risks + a broad-shuffle sample, kept small so
   // the suite stays fast; the main's probe list is wider
@@ -24,7 +35,6 @@ class ScaleProbeSuite extends SparkSpec {
 
   test("10x corpus: deterministic, key-consistent, cross-copy-dissimilar") {
     import spark.implicits._
-    ScaleProbe.generate(spark, sfDir, outDir, 10)
     // 10x rows, table by table
     for (t <- Seq("lineitem", "orders", "documents", "embeddings")) {
       val n1 = Tables.table(spark, sfDir, t).count()
@@ -48,8 +58,9 @@ class ScaleProbeSuite extends SparkSpec {
     // determinism: regeneration is byte-stable at the row level
     val h1 = Tables.documents(spark, outDir)
       .agg(expr("bit_xor(xxhash64(doc_id, text))")).first.getLong(0)
-    ScaleProbe.generate(spark, sfDir, outDir, 10)
-    val h2 = Tables.documents(spark, outDir)
+    val again = s"$root/x10_again"
+    ScaleProbe.generate(spark, sfDir, again, 10)
+    val h2 = Tables.documents(spark, again)
       .agg(expr("bit_xor(xxhash64(doc_id, text))")).first.getLong(0)
     assert(h1 == h2, "regenerated corpus differs — generation is not deterministic")
     // the affine cipher (round 17, replacing the 26-letter rotation so
@@ -57,7 +68,7 @@ class ScaleProbeSuite extends SparkSpec {
     // copy 312 would carry copy 0's exact text and re-create the
     // cross-copy near-dup explosion — generate must refuse, loudly
     val e = intercept[IllegalArgumentException] {
-      ScaleProbe.generate(spark, sfDir, outDir + "_alias", 312, Seq("documents"))
+      ScaleProbe.generate(spark, sfDir, s"$root/alias", 312, Seq("documents"))
     }
     assert(e.getMessage.contains("alias"), e.getMessage)
   }
@@ -72,10 +83,20 @@ class ScaleProbeSuite extends SparkSpec {
     assert(res("q_math_funcs")._1 >= 0.0, s"probe query failed: $res")
     assert(GraftShim.listenerCount(spark) == before,
       s"listener bus grew from $before to ${GraftShim.listenerCount(spark)} across one measure")
+    // the recorder under it leaves the bus as it found it, also when its
+    // body throws
+    val rec = Recorder.during(spark)(spark.range(10).count())
+    assert(rec.result == 10L)
+    assert(GraftShim.listenerCount(spark) == before,
+      s"listener bus grew from $before to ${GraftShim.listenerCount(spark)} across one scope")
+    intercept[IllegalStateException] {
+      Recorder.during(spark)(throw new IllegalStateException("body failed"))
+    }
+    assert(GraftShim.listenerCount(spark) == before,
+      s"listener bus grew from $before to ${GraftShim.listenerCount(spark)} across a throwing scope")
   }
 
   test("probe queries scale ~linearly with zero spill and bounded driver heap") {
-    ScaleProbe.generate(spark, sfDir, outDir, 10)
     def usedHeap(): Long = {
       System.gc()
       Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
@@ -115,11 +136,9 @@ class ScaleProbeSuite extends SparkSpec {
     // percents).
     val steep = ScaleProbe.rung2Queries.keys.toSeq.sorted
     val needed = ScaleProbe.rung2Queries.values.toSeq.distinct
-    val out10 = outDir + "_r2a"
-    val out25 = outDir + "_r2b"
-    ScaleProbe.generate(spark, sfDir, out10, 10, needed)
+    val out25 = s"$root/x25"
     ScaleProbe.generate(spark, sfDir, out25, ScaleProbe.Rung2K, needed)
-    val at10 = ScaleProbe.measure(spark, out10, steep)
+    val at10 = ScaleProbe.measure(spark, outDir, steep)
     val at25 = ScaleProbe.measure(spark, out25, steep)
     steep.foreach { n =>
       val (t10, shuf10, _, _) = at10(n)
@@ -152,7 +171,6 @@ class ScaleProbeSuite extends SparkSpec {
     // (≈100×) and this bound fails by an order of magnitude. Counting
     // is host-noise-free, unlike the timed probe.
     import spark.implicits._
-    ScaleProbe.generate(spark, sfDir, outDir, 10)
     def candidates(dir: String): Long = {
       val sh = Tables.documents(spark, dir)
         .withColumn("toks", split($"text", " "))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +19,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sfDir = "/root/testdata/sf0.001"
+
+  /** A frame's rows as sorted `|`-joined strings: order-free equality. */
+  def canon(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** Total size of the regular files under `p`. */
+  def dirBytes(p: String): Long = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+    try s.filter(java.nio.file.Files.isRegularFile(_))
+      .mapToLong(java.nio.file.Files.size(_)).sum()
+    finally s.close()
+  }
+
+  /** Delete `p` and everything under it. */
+  def deleteTree(p: String): Unit = ops.IncrState.deleteTree(java.nio.file.Paths.get(p))
 }
 
 object SparkSpec {
@@ -34,14 +49,7 @@ object SparkSpec {
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
       }
-      current = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      current = Session.local(4)
       current.sparkContext.setLogLevel("ERROR")
     }
     current

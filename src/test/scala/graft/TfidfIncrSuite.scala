@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,9 +11,6 @@ import org.apache.spark.sql.functions._
   * `tok` bucketing (the only shuffles are the output-inherent
   * per-document window and the final presentation sort). */
 class TfidfIncrSuite extends SparkSpec {
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   test("incremental 3-day == full recompute (q_text_tfidf) == 5-day == 1-day") {
     val full = canon(SparkEntry.queries("q_text_tfidf")(spark, sfDir))
@@ -32,47 +28,24 @@ class TfidfIncrSuite extends SparkSpec {
       docs.filter(pmod($"doc_id", lit(3L)) === k)
         .write.mode("overwrite").parquet(s"$root/slice$k")
     }
-    val prefix = "tfidf_incr_t_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("tfidf_incr_t_")
     val wh = s"$root/wh"
     try {
       ops.TfidfIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
       ops.TfidfIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
 
-      def dirBytes(p: String): Long = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-
       // the contract proof, functional and scale-independent: delete the
       // raw day-0/1 slices before the day-2 fold — any lazy re-read of
       // raw history would throw FileNotFound
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
 
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
       // declared reads: the slice once (tf build) + the fresh tf
       // partition twice (df partial + doc-count, both state read-backs
       // covered by the warehouse term) — never days 0/1
       val inputBudget = 2L * dirBytes(s"$root/slice2") + dirBytes(wh)
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val read = Recorder.during(spark) {
         ops.TfidfIncr.runDayPath(spark, s"$root/slice2", prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val read = bytesRead.get()
+      }.inputBytes
       assert(read > 0, "listener saw no input")
       assert(read <= inputBudget + (64 << 10),
         s"day-2 fold read $read bytes; bound $inputBudget")
@@ -86,8 +59,7 @@ class TfidfIncrSuite extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
     val days = 9
-    val prefix = "tfidf_incr_l_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("tfidf_incr_l_")
     val wh = ops.IncrState.newWarehouse()
     def slice(d: Int) = docs.filter(pmod($"doc_id", lit(days.toLong)) === d)
     try {
@@ -140,8 +112,7 @@ class TfidfIncrSuite extends SparkSpec {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$inbox/$name.parquet"))
     }
-    val prefix = "tfidf_incr_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("tfidf_incr_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -182,10 +153,8 @@ class TfidfIncrSuite extends SparkSpec {
         ops.TfidfIncr.runDay(spark, d.filter(pmod($"doc_id", lit(3L)) === day),
           prefix, wh, day, nBuckets = 4)
       }
-    val pA = "tfidf_del_a_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val pE = "tfidf_del_e_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val pA = ops.IncrState.freshPrefix("tfidf_del_a_")
+    val pE = ops.IncrState.freshPrefix("tfidf_del_e_")
     val whA = ops.IncrState.newWarehouse()
     val whE = ops.IncrState.newWarehouse()
     try {
@@ -231,43 +200,21 @@ class TfidfIncrSuite extends SparkSpec {
     }
     docs.filter(pmod($"doc_id", lit(11L)) === 5)
       .write.mode("overwrite").parquet(s"$root/del")
-    val prefix = "tfidf_del_b_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("tfidf_del_b_")
     val wh = s"$root/wh"
     try {
       ops.TfidfIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
       ops.TfidfIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
-      def dirBytes(p: String): Long = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
       // the functional never-rescan proof: raw fold slices deleted
       // BEFORE the retraction fold — any lazy re-read would throw
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
       // declared reads: the delete slice once (negated tf build) + the
       // fresh tf partition twice (df partial + doc-count), covered by
       // the warehouse term — never the fold days' raw slices
       val inputBudget = 2L * dirBytes(s"$root/del") + dirBytes(wh)
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val read = Recorder.during(spark) {
         ops.TfidfIncr.deleteDayPath(spark, s"$root/del", prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val read = bytesRead.get()
+      }.inputBytes
       assert(read > 0, "listener saw no input")
       assert(read <= inputBudget + (64 << 10),
         s"retraction fold read $read bytes; bound $inputBudget")
@@ -277,8 +224,7 @@ class TfidfIncrSuite extends SparkSpec {
   test("report: state sides are exchange-free; only output-inherent shuffles remain") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    val prefix = "tfidf_incr_p_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("tfidf_incr_p_")
     val wh = ops.IncrState.newWarehouse()
     try {
       (0 to 1).foreach(d => ops.TfidfIncr.runDay(spark,
@@ -318,8 +264,7 @@ class TfidfIncrSuite extends SparkSpec {
     // the ADDITIVE algebra's delete events carry the documents as
     // folded (negated tf/df partials re-derive from the slice)
     val del = docs.filter(pmod($"doc_id", lit(11L)) === 5)
-    val prefix = "tfidf_cdc_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("tfidf_cdc_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -337,8 +282,7 @@ class TfidfIncrSuite extends SparkSpec {
         nBuckets = 4, maxDeltaDays = 3)
       assert(v2 == 4, s"restart should process exactly the new event, got $v2")
       val kept = docs.join(del.select($"doc_id"), Seq("doc_id"), "left_anti")
-      val pE = "tfidf_cdc_e_" + java.lang.Long.toHexString(
-        U.h64Local(java.util.UUID.randomUUID().toString))
+      val pE = ops.IncrState.freshPrefix("tfidf_cdc_e_")
       val whE = ops.IncrState.newWarehouse()
       try {
         (0 until 3).foreach { day =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,9 +9,6 @@ import org.apache.spark.sql.functions._
   * read only the day's slice + state (raw history never re-read), and
   * retraction must land exactly on the reduced-graph recompute. */
 class TriIncrSuite extends SparkSpec {
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   private def edges(dir: String): DataFrame = {
     import spark.implicits._
@@ -51,33 +47,14 @@ class TriIncrSuite extends SparkSpec {
       e0.filter(pmod($"u" + $"v", lit(3L)) === k)
         .write.mode("overwrite").parquet(s"$root/slice$k")
     }
-    val prefix = "tri_incr_t_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("tri_incr_t_")
     val wh = s"$root/wh"
     try {
       ops.TriIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
       ops.TriIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
-      def dirBytes(p: String): Long = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
       // the functional never-rescan proof: raw slices 0/1 deleted
       // BEFORE the day-2 fold — any lazy re-read would throw
-      Seq("slice0", "slice1").foreach { d =>
-        val p = java.nio.file.Paths.get(s"$root/$d")
-        val w = java.nio.file.Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally w.close()
-      }
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
       // declared reads: the slice (canon + fresh anti-join) + several
       // passes over the adjacency/partial STATE (prior anti-join, the
       // live pin's materialization, then its cached re-reads for count/
@@ -86,12 +63,9 @@ class TriIncrSuite extends SparkSpec {
       // the functional proof above, the multiplier only bounds
       // state-amplification drift
       val inputBudget = 2L * dirBytes(s"$root/slice2") + 16L * dirBytes(wh)
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val read = Recorder.during(spark) {
         ops.TriIncr.runDayPath(spark, s"$root/slice2", prefix, wh, 2)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val read = bytesRead.get()
+      }.inputBytes
       assert(read > 0, "listener saw no input")
       assert(read <= inputBudget + (256 << 10),
         s"day-2 fold read $read bytes; bound $inputBudget")
@@ -130,8 +104,7 @@ class TriIncrSuite extends SparkSpec {
     def addSlice(k: Long) = e0.filter(pmod($"u" + $"v", lit(4L)) === k)
       .withColumn("op", lit("add"))
     val del = e0.filter(pmod($"u" + $"v", lit(11L)) === 5)
-    val prefix = "tri_cdc_s_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val prefix = ops.IncrState.freshPrefix("tri_cdc_s_")
     val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
     try {
@@ -149,8 +122,7 @@ class TriIncrSuite extends SparkSpec {
         nBuckets = 4, maxDeltaDays = 6)
       assert(v2 == 4, s"restart should process exactly the new event, got $v2")
       val kept = e0.join(del, Seq("u", "v"), "left_anti")
-      val pE = "tri_cdc_e_" + java.lang.Long.toHexString(
-        U.h64Local(java.util.UUID.randomUUID().toString))
+      val pE = ops.IncrState.freshPrefix("tri_cdc_e_")
       val whE = ops.IncrState.newWarehouse()
       try {
         (0 until 3).foreach { day =>
@@ -170,10 +142,8 @@ class TriIncrSuite extends SparkSpec {
     val del = e0.filter(pmod($"u" + $"v", lit(11L)) === 5)
     assert(del.count() > 0, "takedown edge set empty — test is vacuous")
     val kept = e0.join(del, Seq("u", "v"), "left_anti")
-    val pE = "tri_del_e_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
-    val pA = "tri_del_a_" + java.lang.Long.toHexString(
-      U.h64Local(java.util.UUID.randomUUID().toString))
+    val pE = ops.IncrState.freshPrefix("tri_del_e_")
+    val pA = ops.IncrState.freshPrefix("tri_del_a_")
     val whE = ops.IncrState.newWarehouse()
     val whA = ops.IncrState.newWarehouse()
     try {
