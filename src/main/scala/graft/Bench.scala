@@ -342,6 +342,23 @@ object Bench {
       .take(5)
       .map(_._1)
 
+  /** A child JVM running `mainClass` on this JVM's classpath, with the
+    * JDK17 --add-opens set of tools/run.sh, the UI off and UTC sessions;
+    * each caller sets the heap (`xmx`), environment, IO and timeout. */
+  def childJvm(mainClass: String, xmx: String, args: Seq[String] = Nil): ProcessBuilder = {
+    val javaBin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
+    val opens = Seq("java.base/java.lang", "java.base/java.lang.invoke",
+      "java.base/java.lang.reflect", "java.base/java.io", "java.base/java.net",
+      "java.base/java.nio", "java.base/java.util",
+      "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
+      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+      "java.base/sun.security.action", "java.base/sun.util.calendar")
+      .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+    new ProcessBuilder((Seq(javaBin) ++ opens ++ Seq(s"-Xmx$xmx",
+      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+      "-cp", sys.props("java.class.path"), mainClass) ++ args): _*)
+  }
+
   /** One query timed in a FRESH child JVM (a SPARK_GRAFT_ONLY
     * diagnostic Bench run — min-of-2-or-3 with its own wait-for-quiet),
     * parsed from the child's bench_out_diag.json. None on launch
@@ -349,19 +366,7 @@ object Bench {
     * its own numbers, never hang on the re-measure pass. */
   private def freshJvmTime(name: String, sfDir: String): Option[Double] =
     try {
-      val javaBin = java.nio.file.Paths.get(
-        sys.props("java.home"), "bin", "java").toString
-      val opens = Seq("java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io", "java.base/java.net",
-        "java.base/java.nio", "java.base/java.util",
-        "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      val cmd = (Seq(javaBin) ++ opens ++ Seq(
-        "-Xmx8g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", sys.props("java.class.path"), "graft.Bench")).toArray
-      val pb = new ProcessBuilder(cmd: _*)
+      val pb = childJvm("graft.Bench", "8g")
       pb.environment().put("SPARK_GRAFT_ONLY", name)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
       pb.environment().put("SPARK_GRAFT_NO_REMEASURE", "1")

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * text/vectors across copies would make every row a perfect near-dup
   * of its K−1 clones, scaling the true pair count by K²/... — a
   * super-linear OUTPUT, which would read as a super-linear plan. So
-  * copy i>0 rotates the document alphabet by i (bijective translate —
+  * copy i>0 maps the document alphabet through its own affine letter
+  * cipher (bijective translate, distinct for every copy below 312 —
   * every token AND every char-n-gram changes, cross-copy Jaccard ≈ 0
   * under word-shingles and char-grams alike) and sign-flips a
   * pseudo-random half of each embedding's dimensions (cross-copy
@@ -56,7 +57,7 @@ object ScaleProbe {
     // K×) and the drift monitor (explode-heavy token shuffle)
     "q_graph_triangles", "q_split_drift",
     // session-5 additions: the naive-Bayes classifier (token stream ×
-    // vocab-weight join — rotation grows the vocab ×K, weights stay a
+    // vocab-weight join — the cipher grows the vocab ×K, weights stay a
     // broadcast), BPE encoding (corpus explode against the merged
     // dict), and the salted join (the planted uk=0 whale key absorbs
     // rows from EVERY copy, so the K× corpus is a direct stress of the
@@ -86,7 +87,7 @@ object ScaleProbe {
     // round-13 addition (VERDICT r12 #6): the incremental TF-IDF — K×
     // documents multiply the daily tf/df folds and the report's
     // bucket-aligned join + output-inherent window together; the
-    // alphabet rotation grows the vocab ~K× so the df state scales too
+    // letter cipher grows the vocab ~K× so the df state scales too
     "q_tfidf_incr",
     // round-13 additions: the colorful approximate-triangles rung (its
     // whole reason to exist is the ×m² wedge-stream cut vs the exact
@@ -184,13 +185,10 @@ object ScaleProbe {
     * slopes × 26 shifts, so copy i and copy i+312 would carry IDENTICAL
     * text and re-create the cross-copy near-dup explosion the cipher
     * exists to prevent — fatal for PAIR-PRODUCING probes (dedup/
-    * similarity). `allowAlias` is retained for signature compatibility
-    * but no longer needed below 312 copies (round 17: the affine cipher
-    * replaced the 26-letter rotation precisely so the ×100 rung could
-    * carry q_dedup_incr soundly). */
+    * similarity). */
   def generate(spark: SparkSession, srcDir: String, outDir: String, k: Int,
-               subset: Seq[String] = tables, allowAlias: Boolean = false): Unit = {
-    require(k < 312 || allowAlias,
+               subset: Seq[String] = tables): Unit = {
+    require(k < 312,
       s"k=$k aliases the 312-map affine cipher (copy i ≡ copy i-312)")
     subset.foreach { t =>
       val src = Tables.table(spark, srcDir, t)
@@ -252,9 +250,8 @@ object ScaleProbe {
     * densifying grid resample (9.2× at 10×, output ∝ users), the
     * triangle wedge stream (5.3×), and the iterative-CC survivor pick
     * (3.5×) — get a ×25 point so the growth claim rests on TWO
-    * measured rungs, not one extrapolation. 25 is the largest K the
-    * alphabet-rotation bijection admits (see generate); each query
-    * reads exactly one table, so only those three tables materialize. */
+    * measured rungs, not one extrapolation. Each query reads exactly
+    * one table, so only the tables the rung probes materialize. */
   val rung2Queries: Map[String, String] = Map(
     "q_resample_gapfill" -> "events",
     "q_graph_triangles" -> "lineitem",
@@ -294,22 +291,19 @@ object ScaleProbe {
   val Rung2K = 25
 
   /** Third rung (VERDICT r13 #5): ×100 for the incremental family's
-    * FOLD path — one more order of magnitude on the two cheapest
-    * members, pinning the flat per-day-cost-∝-slice shape across three
-    * measured orders (1× → 10× → 25× → 100×), the strongest 100 TB
-    * evidence available in this sandbox. Both are aggregate-shaped
-    * (per-(domain, lang) counts; vocab-sized tf/df state), so the
-    * alphabet-rotation aliasing past 26 copies is harmless: colliding
-    * tokens only scale df multiplicities, they cannot produce the
-    * quadratic PAIR output the k<26 guard protects the dedup probes
-    * from (see `generate`). */
+    * FOLD path — one more order of magnitude on six members, pinning
+    * the flat per-day-cost-∝-slice shape across three measured orders
+    * (1× → 10× → 25× → 100×), the strongest 100 TB evidence available
+    * in this sandbox. 100 copies stay under the
+    * affine cipher's 312-copy period (see `generate`), so every copy's
+    * text is disjoint. */
   val rung3Queries: Map[String, String] = Map(
     "q_domains_incr" -> "documents",
     "q_tfidf_incr" -> "documents",
     // round 16 (VERDICT r15 #5): two more incremental members at ×100.
-    // Embeddings carry NO alphabet rotation — the per-copy sign-flip
+    // Embeddings carry NO letter cipher — the per-copy sign-flip
     // pattern is xxhash64(dim, copy), distinct for every copy index —
-    // so unlike the text dedup probes there is no k≥26 aliasing hazard
+    // so unlike the text dedup probes there is no aliasing hazard
     // at all: cross-copy cosine stays ≈ 0 at any K. The ANN fold also
     // exercises the self-sizing width derivation two more doublings up
     // (and the _vec_counts marker path the r15 ADVICE flagged); the
@@ -337,8 +331,8 @@ object ScaleProbe {
     * artifact of record should not need a forensic companion paragraph
     * to be read correctly. `main` with no SPARK_GRAFT_PROBE_RUNG env is
     * a THIN ORCHESTRATOR that creates no SparkSession at all: it spawns
-    * one child JVM per rung (1x / kx / r2 / r3 — the Bench.freshJvmTime
-    * spawn pattern: same classpath, add-opens, and heap as this
+    * one child JVM per rung (1x / kx / r2 / r3 — Bench.childJvm: same
+    * classpath and add-opens as Bench.freshJvmTime, the heap of this
     * process), each child generates its rung's corpus and measures its
     * queries from a COLD session, writes scale_probe_rung_<rung>.json
     * at the repo root, and exits; the parent merges the rung files into
@@ -385,9 +379,9 @@ object ScaleProbe {
     val rung2Selected = only.fold(rung2Queries)(names => rung2Queries.filter(kv => names(kv._1)))
     val rung3Selected = only.fold(rung3Queries)(names => rung3Queries.filter(kv => names(kv._1)))
     var genSec = 0.0
-    def timedGen(dst: String, kk: Int, subset: Seq[String], alias: Boolean = false): Unit = {
+    def timedGen(dst: String, kk: Int, subset: Seq[String]): Unit = {
       val t0 = System.nanoTime()
-      generate(spark, srcDir, dst, kk, subset, allowAlias = alias)
+      generate(spark, srcDir, dst, kk, subset)
       genSec = (System.nanoTime() - t0) / 1e9
     }
     val measured: Map[String, (Double, Double, Double, Long)] = rung match {
@@ -412,8 +406,7 @@ object ScaleProbe {
       case "r3" =>
         if (rung3Selected.isEmpty) Map.empty
         else {
-          timedGen(outDir + "_r3", Rung3K, rung3Selected.values.toSeq.distinct,
-            alias = true)
+          timedGen(outDir + "_r3", Rung3K, rung3Selected.values.toSeq.distinct)
           measure(spark, outDir + "_r3", rung3Selected.keys.toSeq)
         }
       case other => sys.error(s"unknown probe rung '$other' (1x|kx|r2|r3)")
@@ -434,23 +427,10 @@ object ScaleProbe {
     * timed number comes from a cold JVM. */
   private def orchestrate(args: Array[String]): Unit = {
     val (srcDir, _, k) = parseArgs(args)
-    val javaBin = java.nio.file.Paths.get(
-      sys.props("java.home"), "bin", "java").toString
-    val opens = Seq("java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io", "java.base/java.net",
-      "java.base/java.nio", "java.base/java.util",
-      "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val heapMb = Runtime.getRuntime.maxMemory / 1048576
     for (rung <- Seq("1x", "kx", "r2", "r3")) {
       java.nio.file.Files.deleteIfExists(rungFile(rung))
-      val cmd = (Seq(javaBin) ++ opens ++ Seq(
-        s"-Xmx${heapMb}m", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC",
-        "-cp", sys.props("java.class.path"), "graft.ScaleProbe") ++ args).toArray
-      val pb = new ProcessBuilder(cmd: _*)
+      val pb = Bench.childJvm("graft.ScaleProbe", s"${heapMb}m", args.toSeq)
       pb.environment().put("SPARK_GRAFT_PROBE_RUNG", rung)
       pb.inheritIO()
       val p = pb.start()

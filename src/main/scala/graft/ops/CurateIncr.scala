@@ -7,34 +7,30 @@ import org.apache.spark.sql.functions._
 /** Incremental daily-cadence curation — the composed form of the
   * reference's actual operating contract: one slice of new documents per
   * day (reference main.tf:217 daily schedule, src/main.py:263 24 h
-  * window), folded into persisted partial state, with the serving report
-  * finalized FROM THE PARTIALS ONLY. History is never rescanned — at
-  * 100 TB a daily full recompute is the one cost no deployment pays,
-  * and every stage here is chosen to be losslessly mergeable so the
-  * incremental answer is bit-identical to the full recompute (which is
-  * exactly what the DuckDB oracle computes):
+  * window), folded into persisted state, with the serving report
+  * finalized FROM THE STATE ONLY. History is never rescanned — at
+  * 100 TB a daily full recompute is the one cost no deployment pays —
+  * and the incremental answer is bit-identical to the full recompute
+  * (which is exactly what the DuckDB oracle computes):
   *
   *   - doc-local gate (lang + length + type-token ratio): decided once
-  *     on arrival, never revisited — monotone, so partials only grow.
-  *   - exact-dedup keeper (md5 → min doc_id): `min(struct)` is
-  *     associative/commutative, so day-over-day merge == global min.
-  *   - C4 line-level keeper (line → min (doc_id, idx)): same min-merge
-  *     (the L22 pattern, partial-aggregable, no Window).
+  *     on arrival, never revisited.
+  *   - exact-dedup keeper (md5 → min doc_id) and C4 line-level keeper
+  *     (line → min (doc_id, idx)): held at MEMBER level — one metadata
+  *     row per gated document / per (line, doc) occurrence, never the
+  *     text — with the keeper re-derived at read. min(struct) is
+  *     associative/commutative, so any slicing == the global min, and a
+  *     taken-down keeper's group falls to its surviving min.
   *   - vocab/token-frequency table per (split, lang): additive counts
-  *     (the L26 tf-table pattern; merge = sum of partials, the D11 shape).
+  *     (the L26 tf-table pattern), deletes land negated partials.
   *
-  * State layout: `stateDir/v{day}/{md5,line,tf}` parquet — versioned
-  * subdirectories so a day's merge never reads and overwrites the same
-  * path. Day N's run reads ONLY the day-N slice plus `v{N-1}`; the
-  * CurateIncrSuite asserts that via task input-bytes metrics. The final
-  * report is a handful of small aggregates over the state tables
-  * (keeper-table-sized, not corpus-sized).
+  * State layout: three IncrState member tables (`_md5m`, `_linem`,
+  * `_tfm`) bucketed on the group key plus the `_del` keeper tombstones.
+  * A day's fold reads ONLY its slice (pure appends, no merge job); the
+  * CurateIncrSuite asserts that via task input-bytes metrics. The report
+  * re-derives the keepers per group — a bucket-local min, no exchange.
   */
 object CurateIncr extends IncrMember.SliceFold {
-
-  /** A fresh state dir for the v<N> backend (IncrState's per-run root,
-    * removed on JVM exit). */
-  def newStateDir(): String = IncrState.newWarehouse()
 
   /** Deterministic train/valid/test split of a doc_id (same convention
     * as q_pipeline_curate2: portable h64 of "split:<id>" mod 1000). */
@@ -54,107 +50,6 @@ object CurateIncr extends IncrMember.SliceFold {
         expr("n_distinct * 1000000 div n_toks") >= 300000)
       .withColumn("n_lines", expr("(n_toks + 2) div 3"))
       .withColumn("split", splitOf(col("doc_id")))
-
-  private def dayPartialsOf(g: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val md5P = g
-      .groupBy(md5(col("text")).as("k_md5"))
-      .agg(min(struct(col("doc_id"), col("lang"), col("n_toks"), col("n_lines"))).as("k"))
-      .select(col("k_md5"), col("k.doc_id"), col("k.lang"), col("k.n_toks"), col("k.n_lines"))
-    val lines = g.select(col("doc_id"), col("lang"), posexplode(expr(
-      "transform(sequence(1, size(toks), 3), i -> concat_ws(' ', slice(toks, i, 3)))"))
-      .as(Seq("idx", "line")))
-    val lineP = lines
-      .groupBy(col("line"))
-      .agg(min(struct(col("doc_id"), col("idx"), col("lang"), length(col("line")).cast("long").as("len"))).as("k"))
-      .select(col("line"), col("k.doc_id"), col("k.idx"), col("k.lang"), col("k.len"))
-    val tfP = g
-      .select(col("split"), col("lang"), explode(col("toks")).as("tok"))
-      .groupBy(col("split"), col("lang"), col("tok"))
-      .agg(count(lit(1)).as("c"))
-    (md5P, lineP, tfP)
-  }
-
-  /** Lossless merges — re-aggregation of unioned partials: min(struct)
-    * for the two keeper tables, sum for the tf counts. Associativity +
-    * commutativity of min/sum is WHY incremental == full recompute. */
-  def mergeMd5(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("k_md5"))
-      .agg(min(struct(col("doc_id"), col("lang"), col("n_toks"), col("n_lines"))).as("k"))
-      .select(col("k_md5"), col("k.doc_id"), col("k.lang"), col("k.n_toks"), col("k.n_lines"))
-
-  def mergeLine(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("line"))
-      .agg(min(struct(col("doc_id"), col("idx"), col("lang"), col("len"))).as("k"))
-      .select(col("line"), col("k.doc_id"), col("k.idx"), col("k.lang"), col("k.len"))
-
-  def mergeTf(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("split"), col("lang"), col("tok"))
-      .agg(sum(col("c")).as("c"))
-
-  private def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  /** Retention GC (VERDICT r10 #2): once v(day) is durably written,
-    * versions ≤ day−2 are dead weight — at daily cadence the un-pruned
-    * layout kept 365 full keeper-table copies a year, with the line
-    * keeper being the largest table in the pipeline. Exactly ONE prior
-    * version (v(day−1)) is kept so a replayed micro-batch N can still
-    * re-read v(N−1) (the CurateIncrStream exactly-once contract: replay
-    * deterministically rewrites v(N) from v(N−1), which GC never touches
-    * until v(N+1) commits). */
-  private def gcVersions(stateDir: String, day: Int): Unit =
-    (0 to day - 2).foreach(n => IncrState.deleteTree(java.nio.file.Paths.get(s"$stateDir/v$n")))
-
-  /** Fold one day's slice into the state: read v{day-1} (if any), merge,
-    * write v{day}. Reads ONLY the slice + previous partials. */
-  def runDay(s: SparkSession, slice: DataFrame, stateDir: String, day: Int): Unit =
-    IncrState.withLease(s, stateDir, "curate") {
-    // the gate + derived columns are computed ONCE (ADVICE r10): the
-    // three merge writes below are independent jobs whose lineages would
-    // otherwise each re-scan, re-split and re-gate the day slice —
-    // tripling the per-day slice I/O this module exists to bound.
-    // DISK_ONLY, matching the Dedup convention for corpus-sized reuse.
-    val g = gated(slice).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val (md5D, lineD, tfD) = dayPartialsOf(g)
-    val (md5M, lineM, tfM) =
-      if (day == 0) (md5D, lineD, tfD)
-      else {
-        val prev = s"$stateDir/v${day - 1}"
-        (mergeMd5(s.read.parquet(s"$prev/md5"), md5D),
-          mergeLine(s.read.parquet(s"$prev/line"), lineD),
-          mergeTf(s.read.parquet(s"$prev/tf"), tfD))
-      }
-    val v = s"$stateDir/v$day"
-    // the three state writes are independent jobs — run them
-    // concurrently so the day's wall time is the largest table's write,
-    // not the sum (Spark schedules concurrent actions fine; each job's
-    // lineage reads the same slice/prev-state inputs independently)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
-      Future(write(md5M, s"$v/md5")),
-      Future(write(lineM, s"$v/line")),
-      Future(write(tfM, s"$v/tf")))), Duration.Inf)
-    g.unpersist(blocking = false)
-    gcVersions(stateDir, day)
-  }
-
-  /** Path-based twin: the suite's input-bytes test uses this so the
-    * day's inputs are, by construction, one slice dir + one state dir. */
-  def runDayPath(s: SparkSession, slicePath: String, stateDir: String, day: Int): Unit =
-    runDay(s, s.read.parquet(slicePath), stateDir, day)
-
-  /** Serving report from the partials of version `day` — state-table
-    * scans only (keeper-sized), no document ever re-read. */
-  def report(s: SparkSession, stateDir: String, day: Int): DataFrame = {
-    val v = s"$stateDir/v$day"
-    reportFrom(s.read.parquet(s"$v/md5"), s.read.parquet(s"$v/line"),
-      s.read.parquet(s"$v/tf"))
-  }
 
   private def reportFrom(md5P: DataFrame, lineP: DataFrame, tfP: DataFrame): DataFrame = {
     val d1 = md5P
@@ -180,27 +75,23 @@ object CurateIncr extends IncrMember.SliceFold {
       .orderBy("split", "lang")
   }
 
-  // ---------- retractable member-level backend ----------
+  // ---------- member-level state ----------
   //
-  // RETRACTION (VERDICT r13 #1, round 14). The append-only v<N> backend
-  // above compresses each keeper group to its MIN on the way in — the
-  // cheapest possible state, but min() is lossy: when the keeper doc of
-  // a group is taken down, the surviving members it displaced are gone
-  // from the state, so no algebra can promote the next keeper. Exact
-  // retraction therefore needs the keeper state held at MEMBER level
-  // (one metadata row per gated document / per (line, doc) occurrence,
-  // never the text) with the keeper re-derived at read — and because
-  // the member tables are bucketed on the GROUP key, that re-derive is
-  // a bucket-local min with NO exchange, so serving keeps the same
-  // shuffle shape as the compressed backend. The trade is state size:
-  // member rows ∝ gated corpus instead of ∝ distinct keys — the price
-  // of takedown support, paid only by deployments that opt into this
-  // backend (the reference's overwrite-a-day semantics, src/main.py:
-  // 70-73, generalized to row-level deletes). The tf table stays the
-  // additive signed-netting shape (the L46 pattern); deletes land
-  // negated partials. Tombstones + the delete-epoch purge follow the
-  // family contract: delete wins, replay idempotent, cost ∝ delete
-  // slice, history never re-read.
+  // RETRACTION (VERDICT r13 #1, round 14). Compressing each keeper group
+  // to its MIN on the way in would be the cheapest state, but min() is
+  // lossy: when the keeper doc of a group is taken down, the surviving
+  // members it displaced would be gone, so no algebra could promote the
+  // next keeper. The keeper state is therefore held at MEMBER level and
+  // the keeper re-derived at read — and because the member tables are
+  // bucketed on the GROUP key, that re-derive is a bucket-local min with
+  // NO exchange. The trade is state size: member rows ∝ gated corpus
+  // instead of ∝ distinct keys — the price of takedown support (the
+  // reference's overwrite-a-day semantics, src/main.py:70-73,
+  // generalized to row-level deletes). The tf table is the additive
+  // signed-netting shape (the L46 pattern); deletes land negated
+  // partials. Tombstones + the delete-epoch purge follow the family
+  // contract: delete wins, replay idempotent, cost ∝ delete slice,
+  // history never re-read.
 
   private[ops] def md5mTable(prefix: String) = s"${prefix}_md5m"
   private[ops] def linemTable(prefix: String) = s"${prefix}_linem"
@@ -215,8 +106,8 @@ object CurateIncr extends IncrMember.SliceFold {
   private def tombMTable(prefix: String): IncrState.StateTable =
     IncrState.StateTable(delmTable(prefix), "doc_id", Seq("doc_id"))
 
-  /** The member contract covers the retractable backend: its tables
-    * (the line member table — the largest — drives sizing), the keeper
+  /** The member contract: its tables (the line member table — the
+    * largest — drives sizing), the keeper
     * tombstones (the tf table's retraction is the signed netting), the
     * SQL view, and 8 buckets by default. */
   override def DefaultBuckets: Int = 8
@@ -319,8 +210,7 @@ object CurateIncr extends IncrMember.SliceFold {
     } finally { g.unpersist(blocking = false); () }
   }
 
-  /** Serving report off the retractable state — identical output to the
-    * other backends. Keepers re-derive per group over the bucketed
+  /** Serving report off the member-level state. Keepers re-derive per group over the bucketed
     * member scans (replay dedup + min, both bucket-local, NO exchange);
     * tf nets the signed partials and drops fully-retracted rows. */
   def reportRetractable(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
@@ -351,17 +241,15 @@ object CurateIncr extends IncrMember.SliceFold {
   /** Run the full daily loop over `days` slices (doc_id mod days) and
     * finalize. The day split is arbitrary — the suite proves the report
     * is invariant to slice order and count, and the oracle (a full
-    * recompute over all documents at once) proves the merge lossless. */
+    * recompute over all documents at once) proves the fold lossless. */
   def incremental(s: SparkSession, dir: String, days: Int): DataFrame =
-    exhibit(s, "curate_incr", col("split"), col("lang")) { (_, state) =>
+    exhibit(s, "curate_incr", col("split"), col("lang")) { (prefix, wh) =>
       val docs = Tables.documents(s, dir)
-      (0 until days).foreach { day =>
-        runDay(s, docs.filter(pmod(col("doc_id"), lit(days.toLong)) === day), state, day)
-      }
-      report(s, state, days - 1)
+      (0 until days).foreach(d => foldSlice(s, docs, col("doc_id"), prefix, wh, days, d, d))
+      reportRetractable(s, prefix, wh)
     }
 
-  /** Retractable-backend exhibit: fold `days` slices at member level,
+  /** Retraction exhibit: fold `days` slices,
     * RETRACT the documents with doc_id % 7 == 3 (spanning every fold
     * day), purge, report — the oracle is the batch recompute on the
     * REDUCED corpus, proving keeper re-derive (a taken-down keeper's

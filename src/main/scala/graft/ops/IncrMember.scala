@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, pmod}
   * and delete. The lifecycle below (sizing accessors, compaction,
   * high-water day, drop, the delete-epoch purge), the path twins, the
   * fold/delete epilogue and the exhibit scaffold are defined here once;
-  * the streaming drives (streaming.IncrInboxStream) run any member.
+  * the streaming drive (streaming.IncrInboxStream) runs any member.
   */
 trait IncrMember {
 
@@ -35,7 +35,7 @@ trait IncrMember {
   /** The bucket count a member's entry points default to. */
   def DefaultBuckets: Int = 32
 
-  /** Hook the streaming drives run after every fold and every delete
+  /** Hook the streaming drive runs after every fold and every delete
     * (Cluster's drift check). */
   private[graft] def afterStep(s: SparkSession, prefix: String, warehouse: String,
                                nBuckets: Int): Unit = ()
@@ -82,6 +82,16 @@ trait IncrMember {
   /** Highest day ever folded into this warehouse; -1 when none. */
   def lastDay(s: SparkSession, prefix: String, warehouse: String): Int =
     IncrState.lastDay(s, warehouse, prefix)
+
+  /** Drop `s`'s cached relations of the group's tables, so its next read
+    * re-lists their files. A write made through another session — a
+    * stream's micro-batch runs in a clone of the caller's — that
+    * overwrote a day partition in place (a replayed batch) does not
+    * reach `s`'s cached file listing, whose next read would open the
+    * replaced files. Catalog-only: no table is resolved or read here. */
+  private[graft] def refreshTables(s: SparkSession, prefix: String): Unit =
+    allTables(prefix).foreach(t => s.sessionState.catalog.invalidateCachedTable(
+      org.apache.spark.sql.catalyst.TableIdentifier(t.name)))
 
   /** Drop the group's catalog tables (the files stay; JVM-exit cleanup
     * owns exhibit warehouses). */

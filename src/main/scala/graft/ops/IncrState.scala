@@ -426,14 +426,15 @@ object IncrState {
     * per writeDay after the first thanks to the in-memory set). */
   private def stampFormat(s: SparkSession, warehouse: String): Unit = {
     val key = s"stamped:$warehouse"
-    if (!formatOk.contains(key)) {
-      val p = new org.apache.hadoop.fs.Path(s"$warehouse/$FormatMarker")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) {
-        val out = fs.create(p, true)
-        try out.write(FormatVersion.getBytes("UTF-8")) finally out.close()
+    // one stamping thread per JVM: a fold's concurrent table writes all
+    // arrive here at once, and two marker writes must not share the
+    // marker's temp file
+    if (!formatOk.contains(key)) formatOk.synchronized {
+      if (!formatOk.contains(key)) {
+        if (readMarker(s, warehouse, FormatMarker).isEmpty)
+          writeMarker(s, warehouse, FormatMarker, FormatVersion)
+        formatOk.add(key); ()
       }
-      formatOk.add(key); ()
     }
   }
 
@@ -486,7 +487,7 @@ object IncrState {
     * this engine) did not: rebuild the CREATE TABLE from the on-disk
     * parquet schema with the original bucket spec + partitioning, point
     * it at the surviving warehouse dir, and MSCK the partitions back in.
-    * This is what makes the streaming drives' restart contract real
+    * This is what makes the streaming drive's restart contract real
     * across processes, not just across queries in one session. */
   private def registerExisting(s: SparkSession, t: StateTable, warehouse: String,
                                nBuckets: Int): Unit = {
@@ -508,25 +509,15 @@ object IncrState {
     s.sql(s"MSCK REPAIR TABLE ${t.name}")
   }
 
-  private def bucketsMarker(warehouse: String, table: String) =
-    new org.apache.hadoop.fs.Path(s"$warehouse/$table/_graft_buckets")
+  private def bucketsMarker(table: String) = s"$table/_graft_buckets"
 
   /** The bucket count a surviving table was WRITTEN at (recorded beside
     * the data on create — an underscore file, invisible to Spark's
     * listing). Re-registration must reuse it exactly: a CLUSTERED BY
     * spec that disagrees with the physical file placement would satisfy
     * the exchange-free joins with wrongly-colocated rows. */
-  private def writtenBuckets(s: SparkSession, warehouse: String, table: String): Option[Int] = {
-    val p = bucketsMarker(warehouse, table)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        .trim.toIntOption
-      finally in.close()
-    }
-  }
+  private def writtenBuckets(s: SparkSession, warehouse: String, table: String): Option[Int] =
+    readMarker(s, warehouse, bucketsMarker(table)).flatMap(_.trim.toIntOption)
 
   /** Read-path half of the restart contract: the in-memory catalog dies
     * with the JVM, but the warehouse dirs (and checkpoints) survive — a
@@ -609,9 +600,7 @@ object IncrState {
         .option("path", s"$warehouse/${t.name}").saveAsTable(t.name)
       // record the physical bucket count beside the data: restart
       // re-registration must reuse it exactly (ensureRegistered)
-      val m = bucketsMarker(warehouse, t.name)
-      val out = m.getFileSystem(s.sparkContext.hadoopConfiguration).create(m, true)
-      try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
+      writeMarker(s, warehouse, bucketsMarker(t.name), nBuckets.toString)
     } else {
       // dynamic overwrite of this day's partition only; align column
       // order to the table schema (insertInto is positional)
@@ -791,9 +780,10 @@ object IncrState {
     }
   }
 
-  /** Tiny warehouse marker, written via temp + rename so a crash
-    * mid-write never leaves a truncated marker in place (same
-    * discipline as `_last_day`). */
+  /** Tiny marker file under `warehouse` (the one read/write of every
+    * marker: high-water day, day counts, bucket count, format stamp,
+    * drive form), written via temp + rename so a crash mid-write never
+    * leaves a truncated marker in place. */
   def writeMarker(s: SparkSession, warehouse: String, name: String,
                   body: String): Unit = {
     fence(s, warehouse)
@@ -842,53 +832,28 @@ object IncrState {
     * 16, surfaced by the multi-member day driver): members fold on
     * independent day timelines (the doc inbox may be at day 7 while the
     * events inbox is at day 1), so one warehouse-global `_last_day`
-    * would hand member B member A's high water as ITS restart fallback.
-    * Empty scope keeps the original unscoped file for the single-member
-    * path-state backend. */
-  private def lastDayName(scope: String) =
-    if (scope.isEmpty) "_last_day" else s"_last_day.$scope"
-  private def lastDayPath(warehouse: String, scope: String) =
-    new org.apache.hadoop.fs.Path(s"$warehouse/${lastDayName(scope)}")
+    * would hand member B member A's high water as ITS restart fallback. */
+  private def lastDayName(scope: String) = s"_last_day.$scope"
 
   /** High-water marker: compaction folds day partitions into the epoch,
     * so the partition layout alone cannot answer "what was the last
     * fold?" after a quiet restart — a one-line marker can (idempotent: a
     * replayed day N only ever rewrites the same or a lower value).
-    * Written via temp-file + rename so a crash mid-write never leaves a
-    * truncated marker in place — the recovery aid must itself survive
-    * crashes; the delete→rename window can at worst make the marker
-    * briefly ABSENT, which reads as -1 and is repaired by the next
-    * fold's write (monotonicity keeps that safe). */
-  def writeLastDay(s: SparkSession, warehouse: String, day: Int,
-                   scope: String = ""): Unit = {
-    fence(s, warehouse)
-    val p = lastDayPath(warehouse, scope)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (day >= lastDay(s, warehouse, scope)) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$warehouse/${lastDayName(scope)}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(day.toString.getBytes("UTF-8")) finally out.close()
-      fs.delete(p, false)
-      fs.rename(tmp, p)
-    }
-  }
+    * Written through `writeMarker` (temp-file + rename) so a crash
+    * mid-write never leaves a truncated marker in place — the recovery
+    * aid must itself survive crashes; the delete→rename window can at
+    * worst make the marker briefly ABSENT, which reads as -1 and is
+    * repaired by the next fold's write (monotonicity keeps that safe). */
+  def writeLastDay(s: SparkSession, warehouse: String, day: Int, scope: String): Unit =
+    if (day >= lastDay(s, warehouse, scope))
+      writeMarker(s, warehouse, lastDayName(scope), day.toString)
 
-  /** Highest day ever folded into this warehouse (for `scope`'s member
-    * when scoped); -1 when none (or when the marker is unreadable —
+  /** Highest day ever folded into this warehouse by `scope`'s member;
+    * -1 when none (or when the marker is unreadable —
     * parse defensively: the marker exists to aid recovery, so a corrupt
     * one must degrade, never throw). */
-  def lastDay(s: SparkSession, warehouse: String, scope: String = ""): Int = {
-    val p = lastDayPath(warehouse, scope)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1
-    else {
-      val in = fs.open(p)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        .trim.toIntOption.getOrElse(-1)
-      finally in.close()
-    }
-  }
+  def lastDay(s: SparkSession, warehouse: String, scope: String): Int =
+    readMarker(s, warehouse, lastDayName(scope)).flatMap(_.trim.toIntOption).getOrElse(-1)
 
   /** Per-run state root, removed on JVM exit (results are read lazily
     * from parquet, so cleanup must not race the consumer). */

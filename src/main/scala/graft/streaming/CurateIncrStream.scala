@@ -5,24 +5,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** The daily-cadence curation loop DRIVEN AS A STREAM — ops.CurateIncr's
-  * versioned partial-state fold wired to the engine's ingest layer
-  * (VERDICT r9 #1 composed with the I-layer): a file-stream inbox where
-  * each arriving parquet slice is "a day" (reference main.tf:217 daily
-  * schedule), `Trigger.AvailableNow` + maxFilesPerTrigger=1 so each
-  * slice is one micro-batch, and `foreachBatch` folding slice N into
-  * state version N.
-  *
-  * Exactly-once without a transactional sink: the state version IS the
-  * batch id. A failed/replayed micro-batch re-reads state v(N−1) —
-  * which a partial failure never touched — and deterministically
-  * rewrites v(N); the checkpoint guarantees the slice→batch-id mapping
-  * is stable across restarts, so replay converges to byte-identical
-  * state (same reasoning as the versioned-dir design in
-  * ops.CurateIncr). Restarting with the same checkpoint after new
-  * slices land processes ONLY the new slices — the suite drives two
-  * sessions over a growing inbox and pins the final report to the
-  * full-recompute oracle both times. */
+/** The daily-cadence curation fold DRIVEN AS A STREAM on the shared
+  * drive (see IncrInboxStream): each inbox slice of documents folds into
+  * ops.CurateIncr's member-level keeper state as one day, with optional
+  * per-batch fuzzy decontamination against an eval reference (VERDICT
+  * r10 #6) before the slice reaches the state. Delete events must carry
+  * the documents as folded (the negated tf partials re-derive from the
+  * slice; the keeper tombstones are keyed on doc_id), and pass through
+  * the same decontamination filter, so what a delete negates is exactly
+  * what its add folded. The filter is deterministic (shared-randomness
+  * MinHash bands), so a replayed micro-batch flags the same docs and
+  * rewrites its own day partitions unchanged. */
 object CurateIncrStream {
 
   val docSchema: StructType = StructType(Seq(
@@ -64,8 +57,7 @@ object CurateIncrStream {
   /** Drop every doc in `batch` that fuzzy-matches an eval doc: MinHash
     * band recall against the broadcast eval band table, exact-Jaccard
     * ≥ 0.2 verify (shared-randomness bands ⇒ deterministic recall, so a
-    * replayed batch flags the same docs and the versioned-state replay
-    * contract is untouched). */
+    * replayed batch flags the same docs and replay stays idempotent). */
   def decontaminate(batch: DataFrame, ref: DecontamRef): DataFrame =
     decontaminateKeepShingles(batch, ref, persistShingles = false)._1
 
@@ -93,50 +85,25 @@ object CurateIncrStream {
     (batch.join(flagged, Seq("doc_id"), "left_anti"), sh)
   }
 
-  /** One micro-batch fold: optional decontamination, then the versioned
-    * CurateIncr state write (state version = batch id — exposed so the
-    * suite can drive a REPLAY of a contaminated batch directly). The
-    * batch's shingle persist is released only after runDay's actions. */
-  def foldBatch(batch: DataFrame, stateDir: String, batchId: Int,
-                decontam: Option[DecontamRef]): Unit = decontam match {
-    case None => CurateIncr.runDay(batch.sparkSession, batch, stateDir, batchId)
-    case Some(r) =>
-      val (slice, sh) = decontaminateKeepShingles(batch, r)
-      try CurateIncr.runDay(batch.sparkSession, slice, stateDir, batchId)
-      finally { sh.unpersist(blocking = false); () }
-  }
-
-  /** Drain every slice currently in `inboxDir` (one micro-batch per
-    * file) into the CurateIncr state at `stateDir`; returns the highest
-    * state version written (-1 if the inbox was empty). Idempotent
-    * under restart with the same `checkpointDir`. When `decontam` is
-    * set, each slice is fuzzy-decontaminated against the eval reference
-    * BEFORE it folds into curation state (VERDICT r10 #6). */
-  def drainInbox(spark: SparkSession, inboxDir: String, stateDir: String,
-                 checkpointDir: String,
-                 decontam: Option[DecontamRef] = None): Int =
-    IncrInboxStream.drainForm(spark, inboxDir, checkpointDir, docSchema, "plain") { (batch, day) =>
-      foldBatch(batch, stateDir, day, decontam)
-    } {
-      // a restart that found no new files: recover the current version
-      // from the state layout itself (the v<N> backend keeps no
-      // high-water marker; its v<N> dirs are the equivalent record)
-      val d = new java.io.File(stateDir)
-      val vs = Option(d.list()).getOrElse(Array.empty[String])
-        .filter(_.startsWith("v")).flatMap(s => s.drop(1).toIntOption)
-      if (vs.isEmpty) -1 else vs.max
-    }
-
-  /** The CDC form: add/delete events on the shared drive against the
-    * RETRACTABLE backend (L53 — the member-level keeper state; the v<N>
-    * backend above compresses keepers lossily and cannot retract).
-    * Delete events must carry the documents as folded (the negated tf
-    * partials re-derive from the slice; the keeper tombstones are keyed
-    * on doc_id). */
+  /** Drain every slice currently in `inboxDir` into the CurateIncr
+    * state at `warehouse`; returns the highest batch id committed (-1 if
+    * none). Idempotent under restart with the same `checkpointDir`. When
+    * `decontam` is set, each add and delete slice is fuzzy-decontaminated
+    * against the eval reference BEFORE it reaches the state; the batch's
+    * shingle persist is released only after the step's actions. */
   def drainCdc(spark: SparkSession, inboxDir: String, prefix: String,
                warehouse: String, checkpointDir: String,
-               nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
+               nBuckets: Int = 8, maxDeltaDays: Int = 8,
+               decontam: Option[DecontamRef] = None): Int = {
+    def clean(step: IncrInboxStream.Step): IncrInboxStream.Step = decontam match {
+      case None => step
+      case Some(r) => (s, slice, day) =>
+        val (kept, sh) = decontaminateKeepShingles(slice, r)
+        try step(s, kept, day) finally { sh.unpersist(blocking = false); () }
+    }
     IncrInboxStream.drainCdc(spark, CurateIncr, docSchema, inboxDir, prefix, warehouse,
-      checkpointDir, nBuckets, maxDeltaDays)(CurateIncr.fold(_, _, prefix, warehouse, _, nBuckets))(
-      CurateIncr.retract(_, _, prefix, warehouse, _, nBuckets))
+      checkpointDir, nBuckets, maxDeltaDays)(
+      clean(CurateIncr.fold(_, _, prefix, warehouse, _, nBuckets)))(
+      clean(CurateIncr.retract(_, _, prefix, warehouse, _, nBuckets)))
+  }
 }

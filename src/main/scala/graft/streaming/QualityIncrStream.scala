@@ -18,19 +18,10 @@ object QualityIncrStream {
     StructField("value", DoubleType)))
 
   /** Drain every slice currently in `inboxDir` into the QualityIncr
-    * state at `warehouse`; returns the highest day folded (-1 if the
-    * inbox was empty and no state exists). */
-  def drainInbox(spark: SparkSession, inboxDir: String, custDir: String,
-                 prefix: String, warehouse: String, checkpointDir: String,
-                 nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =
-    IncrInboxStream.drain(spark, QualityIncr, eventSchema, inboxDir, prefix, warehouse,
-      checkpointDir, nBuckets, maxDeltaDays)((s, batch, day) =>
-      QualityIncr.runDay(s, batch, Tables.customer(s, custDir), prefix, warehouse, day, nBuckets))
-
-  /** The CDC form: add events fold counters + pk bitmaps, delete events
-    * land NEGATED counter lines + tombstone bitmaps (the L50
-    * bitmap-tombstone algebra), with the customer dim re-read per
-    * micro-batch like the plain drain. */
+    * state at `warehouse`; returns the highest batch id committed (-1 if
+    * none). Add events fold counters + pk bitmaps, delete events land
+    * NEGATED counter lines + tombstone bitmaps (the L50 bitmap-tombstone
+    * algebra); the customer dim is re-read per micro-batch. */
   def drainCdc(spark: SparkSession, inboxDir: String, custDir: String,
                prefix: String, warehouse: String, checkpointDir: String,
                nBuckets: Int = 8, maxDeltaDays: Int = 8): Int =

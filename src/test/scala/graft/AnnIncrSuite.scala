@@ -133,7 +133,7 @@ class AnnIncrSuite extends SparkSpec {
     val ckpt = s"$root/ckpt"
     try {
       Seq(0L, 1L, 2L).foreach(k => landSlice(k, s"day$k"))
-      val v1 = streaming.AnnIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v1 = streaming.AnnIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v1 == 2, s"expected 3 one-file micro-batches -> day 2, got $v1")
       // day 3 lands; a RESTARTED drain with the same checkpoint folds
@@ -142,7 +142,7 @@ class AnnIncrSuite extends SparkSpec {
       // least one mid-stream compaction, so this also covers
       // serve-over-epoch state)
       landSlice(3L, "day3")
-      val v2 = streaming.AnnIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v2 = streaming.AnnIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v2 == 3, s"restart should fold exactly the new slice -> day 3, got $v2")
       assert(canon(ops.AnnIncr.topK(spark, prefix, wh,
@@ -150,7 +150,7 @@ class AnnIncrSuite extends SparkSpec {
         canon(SparkEntry.queries("q_ann_lsh")(spark, sfDir)))
       assert(ops.AnnIncr.deltaDays(spark, prefix, wh).size <= 2)
       // a drain with NOTHING new is a no-op that still reports the day
-      assert(streaming.AnnIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      assert(streaming.AnnIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2) == 3)
     } finally ops.AnnIncr.dropState(spark, prefix)
   }

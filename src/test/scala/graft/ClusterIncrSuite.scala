@@ -136,11 +136,11 @@ class ClusterIncrSuite extends SparkSpec {
     val ckpt = s"$root/ckpt"
     try {
       Seq(0L, 1L, 2L).foreach(k => landSlice(k, s"day$k"))
-      val v1 = streaming.ClusterIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v1 = streaming.ClusterIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v1 == 2, s"expected 3 one-file micro-batches -> day 2, got $v1")
       landSlice(3L, "day3")
-      val v2 = streaming.ClusterIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v2 = streaming.ClusterIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v2 == 3, s"restart should fold exactly the new slice -> day 3, got $v2")
       // the drain runs the drift check per micro-batch; force the final

@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Incremental daily curation (q_pipeline_curate_incr): the merge must be
-  * lossless (any slicing == full recompute; the oracle checks 3-day vs
-  * DuckDB, here we check alternate slicings against each other) and the
-  * day-N run must read ONLY the day-N slice + the previous partials —
-  * asserted via task input-bytes metrics, the 100 TB contract. */
+/** Incremental daily curation (q_pipeline_curate_incr, q_curate_del):
+  * the fold must be lossless (any slicing == full recompute; the oracle
+  * checks 3-day vs DuckDB, here we check alternate slicings against each
+  * other), a delete must land on the fold of the reduced corpus, and a
+  * day's run must read ONLY its own slice — asserted via task
+  * input-bytes metrics, the 100 TB contract. */
 class CurateIncrSuite extends SparkSpec {
 
   test("incremental 3-day == one-shot (single day) == 5-day") {
@@ -23,14 +24,17 @@ class CurateIncrSuite extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
     val slices = Seq(0L, 1L, 2L).map(k => docs.filter(pmod($"doc_id", lit(3L)) === k))
-    val state = ops.CurateIncr.newStateDir()
-    // feed slices in the order 2, 0, 1 — merge commutativity means the
-    // final report must equal the in-order (and full-recompute) result
-    Seq(2, 0, 1).zipWithIndex.foreach { case (k, day) =>
-      ops.CurateIncr.runDay(spark, slices(k), state, day)
-    }
-    val shuffled = ops.CurateIncr.report(spark, state, 2)
-    assert(canon(shuffled) == canon(ops.CurateIncr.incremental(spark, sfDir, 1)))
+    val prefix = ops.IncrState.freshPrefix("curate_order_")
+    val wh = ops.IncrState.newWarehouse()
+    try {
+      // feed slices in the order 2, 0, 1 — min/sum commutativity means
+      // the final report must equal the in-order (and full-recompute) result
+      Seq(2, 0, 1).zipWithIndex.foreach { case (k, day) =>
+        ops.CurateIncr.runDayRetractable(spark, slices(k), prefix, wh, day)
+      }
+      val shuffled = ops.CurateIncr.reportRetractable(spark, prefix, wh)
+      assert(canon(shuffled) == canon(ops.CurateIncr.incremental(spark, sfDir, 1)))
+    } finally ops.CurateIncr.dropState(spark, prefix)
   }
 
   test("day-2 run reads only the day-2 slice + partials (input-bytes bound)") {
@@ -42,61 +46,40 @@ class CurateIncrSuite extends SparkSpec {
       docs.filter(pmod($"doc_id", lit(3L)) === k)
         .write.mode("overwrite").parquet(s"$root/slice$k")
     }
-    val state = s"$root/state"
-    ops.CurateIncr.runDayPath(spark, s"$root/slice0", state, 0)
-    ops.CurateIncr.runDayPath(spark, s"$root/slice1", state, 1)
+    val prefix = ops.IncrState.freshPrefix("curate_bytes_")
+    val wh = s"$root/wh"
+    try {
+      ops.CurateIncr.runDayPath(spark, s"$root/slice0", prefix, wh, 0)
+      ops.CurateIncr.runDayPath(spark, s"$root/slice1", prefix, wh, 1)
 
-    val sliceBytes = dirBytes(s"$root/slice2")
-    val inputBudget = sliceBytes + dirBytes(s"$state/v1")
+      // the member fold is a pure append: its declared inputs are the
+      // slice alone (no state partials are read)
+      val sliceBytes = dirBytes(s"$root/slice2")
+      val inputBudget = sliceBytes
 
-    // THE contract proof, functional and scale-independent: delete the
-    // raw day-0/1 slices before the day-2 fold — if any part of the fold
-    // lazily re-read raw history it would throw FileNotFound.
-    Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
+      // THE contract proof, functional and scale-independent: delete the
+      // raw day-0/1 slices before the day-2 fold — if any part of the fold
+      // lazily re-read raw history it would throw FileNotFound.
+      Seq("slice0", "slice1").foreach(d => deleteTree(s"$root/$d"))
 
-    val read = Recorder.during(spark) {
-      ops.CurateIncr.runDayPath(spark, s"$root/slice2", state, 2)
-    }.inputBytes
+      val read = Recorder.during(spark) {
+        ops.CurateIncr.runDayPath(spark, s"$root/slice2", prefix, wh, 2)
+      }.inputBytes
 
-    assert(read > 0, "listener saw no input")
-    // I/O-amplification sanity bound: the slice parquet is scanned ONCE
-    // (the gated frame is persisted DISK_ONLY and its three consumers
-    // read the cache), but cache-block reads COUNT as input bytes at the
-    // serialized row size — ≤3 passes at ≤5×-of-parquet expansion for
-    // text-heavy rows — so the byte budget is declared inputs (1.5×)
-    // plus 15× the slice for the cache traffic. Still an order below any
-    // history-rescan regime at scale (history ≫ one day's slice).
-    assert(read <= (inputBudget * 1.5).toLong + 15L * sliceBytes + (64 << 10),
-      s"day-2 read $read bytes; inputs $inputBudget slice $sliceBytes")
-    // and the report from v2 matches the full recompute
-    assert(canon(ops.CurateIncr.report(spark, state, 2)) ==
-      canon(ops.CurateIncr.incremental(spark, sfDir, 1)))
-  }
-
-  test("retention GC keeps at most 2 versions; replay still works; report unchanged") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    val slices = (0L to 4L).map(k => docs.filter(pmod($"doc_id", lit(5L)) === k))
-    val state = ops.CurateIncr.newStateDir()
-    def versions(): Seq[Int] = {
-      val d = new java.io.File(state)
-      Option(d.list()).getOrElse(Array.empty[String])
-        .filter(_.startsWith("v")).flatMap(_.drop(1).toIntOption).toSeq.sorted
-    }
-    (0 until 5).foreach { day =>
-      ops.CurateIncr.runDay(spark, slices(day), state, day)
-      // after every committed day: the current version plus exactly one
-      // rollback version (none on day 0)
-      assert(versions() == (math.max(0, day - 1) to day).toSeq,
-        s"day $day left versions ${versions()}")
-    }
-    // a replayed micro-batch N re-reads v(N-1) — which GC kept — and
-    // deterministically rewrites v(N): the report must be unchanged
-    val before = canon(ops.CurateIncr.report(spark, state, 4))
-    ops.CurateIncr.runDay(spark, slices(4), state, 4)
-    assert(versions() == Seq(3, 4))
-    assert(canon(ops.CurateIncr.report(spark, state, 4)) == before)
-    assert(before == canon(ops.CurateIncr.incremental(spark, sfDir, 1)))
+      assert(read > 0, "listener saw no input")
+      // I/O-amplification sanity bound: the slice parquet is scanned ONCE
+      // (the gated frame is persisted DISK_ONLY and its three consumers
+      // read the cache), but cache-block reads COUNT as input bytes at the
+      // serialized row size — ≤3 passes at ≤5×-of-parquet expansion for
+      // text-heavy rows — so the byte budget is declared inputs (1.5×)
+      // plus 15× the slice for the cache traffic. Still an order below any
+      // history-rescan regime at scale (history ≫ one day's slice).
+      assert(read <= (inputBudget * 1.5).toLong + 15L * sliceBytes + (64 << 10),
+        s"day-2 read $read bytes; inputs $inputBudget slice $sliceBytes")
+      // and the report after day 2 matches the full recompute
+      assert(canon(ops.CurateIncr.reportRetractable(spark, prefix, wh)) ==
+        canon(ops.CurateIncr.incremental(spark, sfDir, 1)))
+    } finally ops.CurateIncr.dropState(spark, prefix)
   }
 
   test("streaming inbox drives the daily fold; restart processes only new slices") {
@@ -114,24 +97,32 @@ class CurateIncrSuite extends SparkSpec {
         java.nio.file.Paths.get(s"$inbox/$name.parquet"))
     }
     Seq(0L, 1L, 2L).foreach(k => landSlice(k, s"day$k"))
-    val state = s"$root/state"
+    val prefix = ops.IncrState.freshPrefix("curate_stream_")
+    val wh = s"$root/wh"
     val ckpt = s"$root/ckpt"
-    val v1 = streaming.CurateIncrStream.drainInbox(spark, inbox, state, ckpt)
-    assert(v1 == 2, s"expected 3 one-file micro-batches -> v2, got v$v1")
-    // report over the 3 landed slices == a one-shot fold of the same subset
-    val refState = ops.CurateIncr.newStateDir()
-    ops.CurateIncr.runDay(spark, docs.filter(pmod($"doc_id", lit(4L)) < 3), refState, 0)
-    assert(canon(ops.CurateIncr.report(spark, state, v1)) ==
-      canon(ops.CurateIncr.report(spark, refState, 0)))
-    // day 3 lands; a RESTARTED drain with the same checkpoint must fold
-    // only the new slice (batch ids continue) and reach the full corpus
-    landSlice(3L, "day3")
-    val v2 = streaming.CurateIncrStream.drainInbox(spark, inbox, state, ckpt)
-    assert(v2 == 3, s"restart should process exactly the new slice -> v3, got v$v2")
-    assert(canon(ops.CurateIncr.report(spark, state, v2)) ==
-      canon(ops.CurateIncr.incremental(spark, sfDir, 1)))
-    // a drain with NOTHING new is a no-op that still reports the current version
-    assert(streaming.CurateIncrStream.drainInbox(spark, inbox, state, ckpt) == 3)
+    try {
+      // op-less slices: every row is an add
+      val v1 = streaming.CurateIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt)
+      assert(v1 == 2, s"expected 3 one-file micro-batches -> batch 2, got $v1")
+      // report over the 3 landed slices == a one-shot fold of the same subset
+      val pRef = ops.IncrState.freshPrefix("curate_stream_ref_")
+      val whRef = ops.IncrState.newWarehouse()
+      try {
+        ops.CurateIncr.runDayRetractable(spark, docs.filter(pmod($"doc_id", lit(4L)) < 3),
+          pRef, whRef, 0)
+        assert(canon(ops.CurateIncr.reportRetractable(spark, prefix, wh)) ==
+          canon(ops.CurateIncr.reportRetractable(spark, pRef, whRef)))
+      } finally ops.CurateIncr.dropState(spark, pRef)
+      // day 3 lands; a RESTARTED drain with the same checkpoint must fold
+      // only the new slice (batch ids continue) and reach the full corpus
+      landSlice(3L, "day3")
+      val v2 = streaming.CurateIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt)
+      assert(v2 == 3, s"restart should process exactly the new slice -> batch 3, got $v2")
+      assert(canon(ops.CurateIncr.reportRetractable(spark, prefix, wh)) ==
+        canon(ops.CurateIncr.incremental(spark, sfDir, 1)))
+      // a drain with NOTHING new is a no-op that still reports the current batch
+      assert(streaming.CurateIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt) == 3)
+    } finally ops.CurateIncr.dropState(spark, prefix)
   }
 
   test("streaming decontamination: inbox fold drops eval matches; contaminated replay idempotent") {
@@ -152,36 +143,43 @@ class CurateIncrSuite extends SparkSpec {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$inbox/day$k.parquet"))
     }
-    val state = s"$root/state"
-    val v = streaming.CurateIncrStream.drainInbox(spark, inbox, state,
-      s"$root/ckpt", Some(ref))
-    assert(v == 2)
-    // the filter is really firing: survivors = train − the L15b flagged set
-    val clean = streaming.CurateIncrStream.decontaminate(train, ref)
-    val flagged = SparkEntry.queries("q_decontaminate_fuzzy")(spark, sfDir).count()
-    assert(flagged > 0, "corpus has no fuzzy eval matches — test is vacuous")
-    assert(clean.count() == train.count() - flagged)
-    // stream-folded state == one-shot batch fold of the decontaminated corpus
-    val refState = ops.CurateIncr.newStateDir()
-    ops.CurateIncr.runDay(spark, clean, refState, 0)
-    val want = canon(ops.CurateIncr.report(spark, refState, 0))
-    assert(canon(ops.CurateIncr.report(spark, state, v)) == want)
-    // a replayed CONTAMINATED micro-batch (same batch id, slice includes
-    // eval-matching docs) deterministically re-flags the same docs and
-    // rewrites v(N) unchanged — driven through foldBatch directly so the
-    // replayed slice is exactly the one batch 2 folded (the file-stream
-    // batch→file order is an implementation detail we must not assume)
-    val state2 = ops.CurateIncr.newStateDir()
-    (0 to 2).foreach(k => streaming.CurateIncrStream.foldBatch(
-      train.filter(pmod($"doc_id", lit(3L)) === k.toLong), state2, k, Some(ref)))
-    assert(canon(ops.CurateIncr.report(spark, state2, 2)) == want)
-    streaming.CurateIncrStream.foldBatch(
-      train.filter(pmod($"doc_id", lit(3L)) === 2L), state2, 2, Some(ref))
-    assert(canon(ops.CurateIncr.report(spark, state2, 2)) == want)
-    ref.release()
+    val prefix = ops.IncrState.freshPrefix("curate_decontam_")
+    val wh = s"$root/wh"
+    val ckpt = s"$root/ckpt"
+    val pRef = ops.IncrState.freshPrefix("curate_decontam_ref_")
+    val whRef = ops.IncrState.newWarehouse()
+    try {
+      val v = streaming.CurateIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
+        decontam = Some(ref))
+      assert(v == 2)
+      // the filter is really firing: survivors = train − the L15b flagged set
+      val clean = streaming.CurateIncrStream.decontaminate(train, ref)
+      val flagged = SparkEntry.queries("q_decontaminate_fuzzy")(spark, sfDir).count()
+      assert(flagged > 0, "corpus has no fuzzy eval matches — test is vacuous")
+      assert(clean.count() == train.count() - flagged)
+      // stream-folded state == one-shot batch fold of the decontaminated corpus
+      ops.CurateIncr.runDayRetractable(spark, clean, pRef, whRef, 0)
+      val want = canon(ops.CurateIncr.reportRetractable(spark, pRef, whRef))
+      assert(canon(ops.CurateIncr.reportRetractable(spark, prefix, wh)) == want)
+      // a replayed CONTAMINATED micro-batch (same batch id, slice includes
+      // eval-matching docs) deterministically re-flags the same docs and
+      // rewrites its day unchanged — replayed through the stream itself:
+      // with batch 2's commit removed, the restarted query re-runs batch 2
+      // from its offset log, so the replayed slice is exactly the one
+      // batch 2 folded
+      Seq("2", ".2.crc").foreach(f =>
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$ckpt/commits/$f")))
+      assert(streaming.CurateIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
+        decontam = Some(ref)) == 2)
+      assert(canon(ops.CurateIncr.reportRetractable(spark, prefix, wh)) == want)
+    } finally {
+      ops.CurateIncr.dropState(spark, prefix)
+      ops.CurateIncr.dropState(spark, pRef)
+      ref.release()
+    }
   }
 
-  test("retractable backend: fold == other backends; delete == reduced-corpus fold; keeper promotes") {
+  test("retractable backend: delete == reduced-corpus fold; keeper promotes") {
     import spark.implicits._
     val base = Tables.documents(spark, sfDir)
     // replicate the gate so the planted duplicate is a doc that is
@@ -204,30 +202,22 @@ class CurateIncrSuite extends SparkSpec {
     assert(kept.filter($"doc_id" === keeperId + off).count() == 1,
       "the planted survivor fell in the takedown set — pick a different offset")
     val pA = ops.IncrState.freshPrefix("curate_del_a_")
+    val pE = ops.IncrState.freshPrefix("curate_del_e_")
     val whA = ops.IncrState.newWarehouse()
+    val whE = ops.IncrState.newWarehouse()
     try {
-      // the retractable FOLD is a third backend: equal to the parquet
-      // backend's report on the same corpus
-      (0 until 3).foreach { day =>
-        ops.CurateIncr.runDayRetractable(spark,
-          docs.filter(pmod($"doc_id", lit(3L)) === day), pA, whA, day, nBuckets = 4)
-      }
+      def foldAll(d: DataFrame, prefix: String, wh: String): Unit =
+        (0 until 3).foreach { day =>
+          ops.CurateIncr.runDayRetractable(spark,
+            d.filter(pmod($"doc_id", lit(3L)) === day), prefix, wh, day, nBuckets = 4)
+        }
+      // expected post-delete: the fold over the REDUCED corpus (that path
+      // is oracle-proven lossless, so it stands in for the batch)
+      foldAll(kept, pE, whE)
+      val expected = canon(ops.CurateIncr.reportRetractable(spark, pE, whE))
+      foldAll(docs, pA, whA)
       def rep() = canon(ops.CurateIncr.reportRetractable(spark, pA, whA))
-      val stateF = ops.CurateIncr.newStateDir()
-      (0 until 3).foreach { day =>
-        ops.CurateIncr.runDay(spark,
-          docs.filter(pmod($"doc_id", lit(3L)) === day), stateF, day)
-      }
-      val full = canon(ops.CurateIncr.report(spark, stateF, 2))
-      assert(rep() == full, "retractable fold != parquet backend on the same corpus")
-      // expected post-delete: the parquet backend folded over the
-      // REDUCED corpus (oracle-proven lossless)
-      val stateE = ops.CurateIncr.newStateDir()
-      (0 until 3).foreach { day =>
-        ops.CurateIncr.runDay(spark,
-          kept.filter(pmod($"doc_id", lit(3L)) === day), stateE, day)
-      }
-      val expected = canon(ops.CurateIncr.report(spark, stateE, 2))
+      val full = rep()
       ops.CurateIncr.deleteDayRetractable(spark, del, pA, whA, 3, nBuckets = 4)
       assert(rep() == expected,
         "retraction != batch on reduced corpus (keeper promotion or tf netting broke)")
@@ -246,7 +236,10 @@ class CurateIncrSuite extends SparkSpec {
       assert(rep() == expected, "delete replay not idempotent")
       ops.CurateIncr.compactState(spark, pA, whA, nBuckets = 4)
       assert(rep() == expected, "compaction corrupted retraction state")
-    } finally ops.CurateIncr.dropState(spark, pA)
+    } finally {
+      ops.CurateIncr.dropState(spark, pA)
+      ops.CurateIncr.dropState(spark, pE)
+    }
   }
 
   test("retractable delete reads only the delete slice (never fold history)") {

@@ -141,14 +141,14 @@ class DedupIncrSuite extends SparkSpec {
     val ckpt = s"$root/ckpt"
     try {
       Seq(0L, 1L, 2L).foreach(k => landSlice(k, s"day$k"))
-      val v1 = streaming.DedupIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v1 = streaming.DedupIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v1 == 2, s"expected 3 one-file micro-batches -> day 2, got $v1")
       // day 3 lands; a RESTARTED drain with the same checkpoint folds
       // only the new slice and the cumulative ledger now equals the
       // full-corpus recompute (all 4 residues landed)
       landSlice(3L, "day3")
-      val v2 = streaming.DedupIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v2 = streaming.DedupIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v2 == 3, s"restart should fold exactly the new slice -> day 3, got $v2")
       assert(canon(ops.DedupIncr.pairs(spark, prefix, wh)) ==
@@ -157,7 +157,7 @@ class DedupIncrSuite extends SparkSpec {
       // so the equality above also covers fold-over-epoch state
       assert(ops.DedupIncr.deltaDays(spark, prefix, wh).size <= 2)
       // a drain with NOTHING new is a no-op that still reports the day
-      assert(streaming.DedupIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      assert(streaming.DedupIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2) == 3)
     } finally ops.DedupIncr.dropState(spark, prefix)
   }

@@ -115,7 +115,7 @@ class DomainsIncrSuite extends SparkSpec {
     val ckpt = s"$root/ckpt"
     try {
       Seq(0L, 1L, 2L).foreach(k => landSlice(k, s"day$k"))
-      val v1 = streaming.DomainsIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v1 = streaming.DomainsIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v1 == 2, s"expected 3 one-file micro-batches -> day 2, got $v1")
       // day 3 lands; a RESTARTED drain with the same checkpoint folds
@@ -124,14 +124,14 @@ class DomainsIncrSuite extends SparkSpec {
       // at least one mid-stream compaction, so this also covers
       // report-over-epoch state)
       landSlice(3L, "day3")
-      val v2 = streaming.DomainsIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v2 = streaming.DomainsIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v2 == 3, s"restart should fold exactly the new slice -> day 3, got $v2")
       assert(canon(ops.DomainsIncr.report(spark, prefix, wh)) ==
         canon(SparkEntry.queries("q_url_domains")(spark, sfDir)))
       assert(ops.DomainsIncr.deltaDays(spark, prefix, wh).size <= 2)
       // a drain with NOTHING new is a no-op that still reports the day
-      assert(streaming.DomainsIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      assert(streaming.DomainsIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2) == 3)
     } finally ops.DomainsIncr.dropState(spark, prefix)
   }
@@ -258,6 +258,9 @@ class DomainsIncrSuite extends SparkSpec {
       val v2 = streaming.DomainsIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 3)
       assert(v2 == 4, s"restart should process exactly the new event, got $v2")
+      // a drain with NOTHING new answers the same batch id (not a 2b/2b+1 day)
+      assert(streaming.DomainsIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
+        nBuckets = 4, maxDeltaDays = 3) == v2)
       val kept = docs.join(del.select($"doc_id"), Seq("doc_id"), "left_anti")
       val pE = ops.IncrState.freshPrefix("domains_cdc_e_")
       val whE = ops.IncrState.newWarehouse()
@@ -270,16 +273,60 @@ class DomainsIncrSuite extends SparkSpec {
           canon(ops.DomainsIncr.report(spark, pE, whE)),
           "CDC drain != batch recompute on the reduced corpus")
       } finally ops.DomainsIncr.dropState(spark, pE)
-      // drive-form pinning (ADVICE r14): this checkpoint is bound to the
-      // cdc day space (2b/2b+1) forever — a plain drain reusing it would
-      // dynamic-overwrite CDC add partitions (day k == 2·(k/2) for even
-      // k), so it must fail LOUDLY, not corrupt state
+      // drive-form pinning (ADVICE r14): a checkpoint pinned 'plain' was
+      // driven batch b → day b; resuming it in the cdc day space (2b/2b+1)
+      // would dynamic-overwrite its folded day partitions (day k == 2·(k/2)
+      // for even k), so the drain must fail LOUDLY before any state write
+      val before = canon(ops.DomainsIncr.report(spark, prefix, wh))
+      val plainCkpt = s"$root/ckpt_plain"
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(plainCkpt))
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$plainCkpt/_graft_drive_form"), "plain")
       val ex = intercept[IllegalArgumentException] {
-        streaming.DomainsIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+        streaming.DomainsIncrStream.drainCdc(spark, inbox, prefix, wh, plainCkpt,
           nBuckets = 4, maxDeltaDays = 3)
       }
-      assert(ex.getMessage.contains("driven as 'cdc'"),
+      assert(ex.getMessage.contains("driven as 'plain'"),
         s"wrong failure: ${ex.getMessage}")
+      assert(canon(ops.DomainsIncr.report(spark, prefix, wh)) == before)
+    } finally ops.DomainsIncr.dropState(spark, prefix)
+  }
+
+  test("streaming CDC inbox: an unknown op fails the micro-batch before any state write") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("domains_cdc_op_").toString
+    val inbox = s"$root/inbox"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inbox))
+    val docs = Tables.documents(spark, sfDir)
+    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val tmp = s"$root/tmp_$name"
+      df.coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles
+        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(s"$inbox/$name.parquet"))
+    }
+    val prefix = ops.IncrState.freshPrefix("domains_cdc_op_")
+    val wh = s"$root/wh"
+    val ckpt = s"$root/ckpt"
+    try {
+      land(docs.filter(pmod($"doc_id", lit(2L)) === 0).withColumn("op", lit("add")), "e0_add")
+      assert(streaming.DomainsIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
+        nBuckets = 4) == 0)
+      val before = canon(ops.DomainsIncr.report(spark, prefix, wh))
+      // a slice mixing valid adds with an unknown op: nothing of it may fold
+      land(docs.filter(pmod($"doc_id", lit(2L)) === 1)
+        .withColumn("op", when(pmod($"doc_id", lit(3L)) === 0, lit("upsert"))
+          .otherwise(lit("add"))), "e1_upsert")
+      val ex = intercept[Exception] {
+        streaming.DomainsIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt, nBuckets = 4)
+      }
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+      assert(msgs.contains("'upsert'"), s"failure does not name the op value: $msgs")
+      assert(canon(ops.DomainsIncr.report(spark, prefix, wh)) == before,
+        "a batch with an unknown op changed the state")
+      assert(ops.DomainsIncr.lastDay(spark, prefix, wh) == 0)
     } finally ops.DomainsIncr.dropState(spark, prefix)
   }
 

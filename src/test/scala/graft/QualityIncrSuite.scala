@@ -158,17 +158,17 @@ class QualityIncrSuite extends SparkSpec {
     val ckpt = s"$root/ckpt"
     try {
       Seq(0L, 1L, 2L).foreach(k => landSlice(k, s"day$k"))
-      val v1 = streaming.QualityIncrStream.drainInbox(spark, inbox, sfDir, prefix, wh, ckpt,
+      val v1 = streaming.QualityIncrStream.drainCdc(spark, inbox, sfDir, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v1 == 2, s"expected 3 one-file micro-batches -> day 2, got $v1")
       landSlice(3L, "day3")
-      val v2 = streaming.QualityIncrStream.drainInbox(spark, inbox, sfDir, prefix, wh, ckpt,
+      val v2 = streaming.QualityIncrStream.drainCdc(spark, inbox, sfDir, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v2 == 3, s"restart should fold exactly the new slice -> day 3, got $v2")
       assert(canon(ops.QualityIncr.report(spark, prefix, wh)) ==
         canon(SparkEntry.queries("q_quality_report")(spark, sfDir)))
       assert(ops.QualityIncr.deltaDays(spark, prefix, wh).size <= 2)
-      assert(streaming.QualityIncrStream.drainInbox(spark, inbox, sfDir, prefix, wh, ckpt,
+      assert(streaming.QualityIncrStream.drainCdc(spark, inbox, sfDir, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2) == 3)
     } finally ops.QualityIncr.dropState(spark, prefix)
   }

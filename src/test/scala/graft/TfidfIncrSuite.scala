@@ -117,7 +117,7 @@ class TfidfIncrSuite extends SparkSpec {
     val ckpt = s"$root/ckpt"
     try {
       Seq(0L, 1L, 2L).foreach(k => landSlice(k, s"day$k"))
-      val v1 = streaming.TfidfIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v1 = streaming.TfidfIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v1 == 2, s"expected 3 one-file micro-batches -> day 2, got $v1")
       // day 3 lands; a RESTARTED drain with the same checkpoint folds
@@ -126,14 +126,14 @@ class TfidfIncrSuite extends SparkSpec {
       // at least one mid-stream compaction, so this also covers
       // report-over-epoch state)
       landSlice(3L, "day3")
-      val v2 = streaming.TfidfIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      val v2 = streaming.TfidfIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2)
       assert(v2 == 3, s"restart should fold exactly the new slice -> day 3, got $v2")
       assert(canon(ops.TfidfIncr.report(spark, prefix, wh)) ==
         canon(SparkEntry.queries("q_text_tfidf")(spark, sfDir)))
       assert(ops.TfidfIncr.deltaDays(spark, prefix, wh).size <= 2)
       // a drain with NOTHING new is a no-op that still reports the day
-      assert(streaming.TfidfIncrStream.drainInbox(spark, inbox, prefix, wh, ckpt,
+      assert(streaming.TfidfIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 2) == 3)
     } finally ops.TfidfIncr.dropState(spark, prefix)
   }
@@ -281,6 +281,9 @@ class TfidfIncrSuite extends SparkSpec {
       val v2 = streaming.TfidfIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
         nBuckets = 4, maxDeltaDays = 3)
       assert(v2 == 4, s"restart should process exactly the new event, got $v2")
+      // a drain with NOTHING new answers the same batch id (not a 2b/2b+1 day)
+      assert(streaming.TfidfIncrStream.drainCdc(spark, inbox, prefix, wh, ckpt,
+        nBuckets = 4, maxDeltaDays = 3) == v2)
       val kept = docs.join(del.select($"doc_id"), Seq("doc_id"), "left_anti")
       val pE = ops.IncrState.freshPrefix("tfidf_cdc_e_")
       val whE = ops.IncrState.newWarehouse()
