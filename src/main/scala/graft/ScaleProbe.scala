@@ -122,8 +122,7 @@ object ScaleProbe {
     // wedges, the same enumeration negated)
     "q_tri_del")
 
-  val tables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
+  val tables: Seq[String] = sources.Catalog.TestTables
 
   /** Entity-id columns shifted per copy (FK and PK together, so each
     * copy is a self-consistent universe). Everything else — measures,
@@ -193,8 +192,10 @@ object ScaleProbe {
     subset.foreach { t =>
       val src = Tables.table(spark, srcDir, t)
       val scaled = (0 until k).map(i => copyOf(t, src, i)).reduce(_ unionByName _)
-      scaled.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+      scaled.write.mode("overwrite").parquet(sources.Catalog.tablePath(outDir, t))
     }
+    // a registration of an overwritten table lists the replaced files
+    sources.Catalog.unregister(spark, outDir, subset)
   }
 
   /** Warm-up + min-of-3 timings with shuffle/spill telemetry, Bench's

@@ -16,11 +16,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     import spark.implicits._
     // Boundary guard: the driver builds this session, which may not pin
-    // the nanosecond-parquet legacy flag Tables.events needs, nor UTC —
-    // events.ts ships as naive timestamp[us] (read as TIMESTAMP_NTZ),
-    // and Tables.events' NTZ→TIMESTAMP normalization is session-timezone
-    // dependent; a non-UTC external session would silently shift every
-    // event instant relative to the oracle.
+    // the nanosecond-parquet legacy flag a ns-encoded events table needs,
+    // nor UTC — events.ts ships as naive timestamp[us] (read as
+    // TIMESTAMP_NTZ), and the NTZ→TIMESTAMP cast of the graft.events
+    // view this session may register is session-timezone dependent; a
+    // non-UTC external session would silently shift every event instant
+    // relative to the oracle.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     val dir = "/root/testdata/sf0.001"

@@ -5,15 +5,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Loaders for the driver test tables (TESTDATA.md / FIXTURES.md).
   *
   * Mirrors the reference's landed-data surface — Glue-crawled S3 objects
-  * queried by Athena (reference src/main.py:4-5, main.tf:304-314) — as
-  * vectorized Parquet scans. Filters/projections applied downstream are
-  * pushed into the scan by Catalyst, the Spark-native analogue of the
-  * reference compiling its filters into the API query string
-  * (reference src/main.py:89-101).
+  * queried by Athena (reference src/main.py:4-5, main.tf:304-314): a
+  * loader registers its table in the catalog once per dir
+  * (`graft.<t>`, `sources.Catalog.table`), which infers the schema once,
+  * and every later call resolves the name with no Spark job. Results are
+  * not memoised: each query still scans the files. Filters/projections
+  * applied downstream are pushed into the scan by Catalyst, the
+  * Spark-native analogue of the reference compiling its filters into the
+  * API query string (reference src/main.py:89-101).
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    sources.Catalog.table(spark, dir, name)
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -22,24 +25,9 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame     = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame   = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
-  /** events.ts has shipped in two physical encodings across testdata
-    * generations: nanosecond int64 (which vanilla Spark 4 refuses —
-    * [PARQUET_TYPE_ILLEGAL] — hence the `nanosAsLong` pin in every
-    * session builder) and naive timestamp[us] (which Spark reads as
-    * TIMESTAMP_NTZ). Normalize BOTH to a µs TimestampType so every
-    * downstream operator and the DuckDB oracle (`CAST(ts AS TIMESTAMP)`)
-    * see identical µs instants; sessions pin UTC so the NTZ cast is an
-    * identity on the instant. A loader must not mutate session state. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampType}
-    val raw = table(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType      => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampType => raw
-      case _             => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
-  }
+  /** `ts` as a µs TimestampType whichever encoding the dir shipped
+    * (the `graft.events` view's normalization). */
+  def events(s: SparkSession, d: String): DataFrame   = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

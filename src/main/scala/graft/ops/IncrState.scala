@@ -426,22 +426,20 @@ object IncrState {
     * per writeDay after the first thanks to the in-memory set). */
   private def stampFormat(s: SparkSession, warehouse: String): Unit = {
     val key = s"stamped:$warehouse"
-    // one stamping thread per JVM: a fold's concurrent table writes all
-    // arrive here at once, and two marker writes must not share the
-    // marker's temp file
-    if (!formatOk.contains(key)) formatOk.synchronized {
-      if (!formatOk.contains(key)) {
-        if (readMarker(s, warehouse, FormatMarker).isEmpty)
-          writeMarker(s, warehouse, FormatMarker, FormatVersion)
-        formatOk.add(key); ()
-      }
+    // a fold's concurrent table writes may all stamp at once: each
+    // writes the same body through its own temp file
+    if (!formatOk.contains(key)) {
+      if (readMarker(s, warehouse, FormatMarker).isEmpty)
+        writeMarker(s, warehouse, FormatMarker, FormatVersion)
+      formatOk.add(key); ()
     }
   }
 
   /** The java.nio path of `p` when `fs` is a local filesystem (raw or
     * checksummed), None otherwise — the switch for the O_EXCL atomic
-    * lease create above. Lease files created through nio carry no .crc
-    * sidecar; ChecksumFileSystem reads them unverified, and rename/
+    * lease create above and the atomic marker replace in `writeMarker`.
+    * Files created through nio carry no .crc sidecar; ChecksumFileSystem
+    * reads them unverified, and rename/
     * delete/setTimes are checksum-agnostic, so the two create paths
     * interoperate on one warehouse. */
   private def localNioPath(fs: org.apache.hadoop.fs.FileSystem,
@@ -782,18 +780,34 @@ object IncrState {
 
   /** Tiny marker file under `warehouse` (the one read/write of every
     * marker: high-water day, day counts, bucket count, format stamp,
-    * drive form), written via temp + rename so a crash mid-write never
-    * leaves a truncated marker in place. */
+    * drive form). Each write goes to its own hidden temp file, which one
+    * overwriting rename puts in place: a crash mid-write never leaves a
+    * truncated marker, concurrent writers never share a file, and a
+    * reader sees the old body or the new one, never no marker. */
   def writeMarker(s: SparkSession, warehouse: String, name: String,
                   body: String): Unit = {
     fence(s, warehouse)
     val p = new org.apache.hadoop.fs.Path(s"$warehouse/$name")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$warehouse/$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    fs.rename(tmp, p)
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
+      s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
+    val bytes = body.getBytes("UTF-8")
+    (localNioPath(fs, p), localNioPath(fs, tmp)) match {
+      case (Some(dst), Some(src)) =>
+        // rename(2) replaces atomically. Written without a .crc sidecar
+        // (read back unverified, like a lease); a sidecar an older
+        // checksummed write left goes first, so no reader pairs it with
+        // the new body
+        java.nio.file.Files.createDirectories(src.getParent)
+        java.nio.file.Files.write(src, bytes)
+        java.nio.file.Files.deleteIfExists(dst.resolveSibling(s".${p.getName}.crc"))
+        java.nio.file.Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      case _ =>
+        val out = fs.create(tmp, false)
+        try out.write(bytes) finally out.close()
+        org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, s.sparkContext.hadoopConfiguration)
+          .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
   }
 
   def readMarker(s: SparkSession, warehouse: String, name: String): Option[String] = {

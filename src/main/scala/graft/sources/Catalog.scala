@@ -1,6 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.plans.logical.View
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** The catalog surface — SURVEY.md §2 "What's missing #2" (round 3).
   *
@@ -10,9 +15,10 @@ import org.apache.spark.sql.SparkSession
   * queries BY NAME (`SELECT … FROM fanstatsai.tweets`). This is that
   * role on the Spark session catalog, in the two scopes Spark offers:
   *
-  *   - `registerExternalTables`: CATALOG-LEVEL external tables
-  *     (`graft.<t>` + the `graft.events` normalizing view) — the
-  *     crawler-registered form. Bytes stay where they landed; the
+  *   - `table` / `registerExternalTables`: CATALOG-LEVEL external
+  *     tables (`graft.<t>` + the `graft.events` normalizing view) — the
+  *     crawler-registered form, and the one loader of the test tables
+  *     (`graft.Tables` reads through it). Bytes stay where they landed; the
   *     catalog maps name → location + schema. These are metastore
   *     objects: every session sharing the metastore sees them WITHOUT
   *     re-running setup (`spark.newSession()` proves it in
@@ -32,8 +38,19 @@ object Catalog {
   /** ≙ the Glue database name (`fanstatsai`, main.tf:301). */
   val Db = "graft"
 
-  private val PathTables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "documents", "embeddings")
+  /** The landed test tables (TESTDATA.md), one `<t>.parquet` per dir. */
+  val TestTables = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Where test table `t` lands under `dir` — the one spelling of the
+    * file layout. */
+  def tablePath(dir: String, t: String): String = s"$dir/$t.parquet"
+
+  // the dir a registration was crawled from, and a per-registration id:
+  // a relation a session cached from an earlier registration of the same
+  // name carries another id, whatever its dir
+  private val DirProp = "graft.source.dir"
+  private val RegProp = "graft.registration"
 
   // last dir registered as temp views per session — makes registerViews
   // an O(1) no-op on re-entry, so a SQL query's timed body pays for the
@@ -41,54 +58,127 @@ object Catalog {
   private val viewDirs = new java.util.WeakHashMap[SparkSession, String]()
 
   /** Register every test table under its session-scoped name
-    * (`graft_<t>`) — idempotent and O(1) when `dir` is unchanged.
-    * `events` goes through Tables.events so the ns→µs timestamp
-    * normalization is part of the cataloged plan, exactly like a
-    * crawler-declared column type. */
+    * (`graft_<t>`) — idempotent and O(1) when `dir` is unchanged. */
   def registerViews(spark: SparkSession, dir: String): Unit = synchronized {
     if (viewDirs.get(spark) == dir) return
-    PathTables.foreach { t =>
-      graft.Tables.table(spark, dir, t).createOrReplaceTempView(s"graft_$t")
-    }
-    graft.Tables.events(spark, dir).createOrReplaceTempView("graft_events")
+    TestTables.foreach(t => table(spark, dir, t).createOrReplaceTempView(s"graft_$t"))
     viewDirs.put(spark, dir): Unit
   }
 
-  /** Register the landed tables as DURABLE external tables
-    * (`graft.<t>`) plus the `graft.events` view (ns→µs normalization
-    * stored as view SQL — a crawler-declared column type). Idempotent;
-    * re-pointing at a different dir replaces the definitions, matching a
-    * crawler re-run. Returns the database name. */
-  def registerExternalTables(spark: SparkSession, dir: String): String = synchronized {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $Db")
-    val canon = new java.io.File(dir).getCanonicalPath
-    def current(tbl: String): Option[String] =
-      if (!spark.catalog.tableExists(tbl)) None
-      else spark.sql(s"SHOW TBLPROPERTIES $tbl ('graft.source.dir')")
-        .collect().headOption.map(_.getString(1))
-        .filterNot(_.contains("does not have property"))
-    def ensure(tbl: String, file: String): Unit =
-      if (!current(tbl).contains(canon)) {
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        spark.sql(s"""CREATE TABLE $tbl USING parquet LOCATION '$canon/$file'
-                      TBLPROPERTIES ('graft.source.dir'='$canon')""")
+  /** `dir` qualified against its filesystem (`/x`, `file:/x` and a path
+    * relative to the working directory name one dir): the identity a
+    * registration records. */
+  private def qualify(spark: SparkSession, dir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+  }
+
+  /** Test table `t` of `dir`, read through its DURABLE catalog
+    * registration (`graft.<t>`; `events` is the `graft.events` view that
+    * normalizes `ts` over `graft.events_raw`). The schema is inferred
+    * once per dir, when the table is registered (≙ one crawler run,
+    * main.tf:304-314); after that a call resolves the name with no Spark
+    * job, no SQL statement, no file listing and no lock. Registering
+    * `dir` re-points the name, like a crawler re-run: frames built before
+    * keep reading the dir they were built on. */
+  def table(spark: SparkSession, dir: String, t: String): DataFrame = {
+    val canon = qualify(spark, dir)
+    resolved(spark, t, canon).getOrElse(synchronized {
+      // this session may hold a relation cached from an earlier
+      // registration (another dir, or this dir before a rewrite)
+      invalidate(spark, t)
+      resolved(spark, t, canon).getOrElse {
+        register(spark, t, canon)
+        // an unlocked resolve that began before the re-point can cache
+        // the old relation once more
+        Iterator.continually { invalidate(spark, t); resolved(spark, t, canon) }
+          .take(4).collectFirst { case Some(df) => df }
+          .getOrElse(throw new IllegalStateException(s"$Db.$t does not resolve to $canon"))
       }
-    PathTables.foreach(t => ensure(s"$Db.$t", s"$t.parquet"))
-    ensure(s"$Db.events_raw", "events.parquet")
-    // persistent view: the normalization travels with the catalog, so a
-    // session that has never seen graft.Tables still reads µs instants.
-    // ts has shipped as ns-int64 or naive timestamp[us] across testdata
-    // generations — emit the matching normalization (see Tables.events).
-    val rawSchema = spark.table(s"$Db.events_raw").schema
-    val tsExpr = rawSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType      => "timestamp_micros(ts div 1000) AS ts"
-      case org.apache.spark.sql.types.TimestampType => "`ts`"
-      case _                                        => "CAST(ts AS TIMESTAMP) AS ts"
+    })
+  }
+
+  /** The registration `graft.<t>` records for `canon` (None when it
+    * records another dir, or it or the database is missing) — a
+    * metadata read, no SQL. */
+  private def recorded(spark: SparkSession, t: String, canon: String): Option[CatalogTable] =
+    try Some(spark.sessionState.catalog.getTableMetadata(TableIdentifier(t, Some(Db))))
+      .filter(_.properties.get(DirProp).contains(canon))
+    catch { case _: AnalysisException => None }
+
+  /** `graft.<t>` resolved for `canon`, when the catalog records that dir
+    * and the session resolves the name to that very registration. */
+  private def resolved(spark: SparkSession, t: String, canon: String): Option[DataFrame] =
+    recorded(spark, t, canon).flatMap { m =>
+      try {
+        val df = spark.table(s"$Db.$t")
+        val regs = df.queryExecution.analyzed.collect {
+          case v: View => v.desc.properties.get(RegProp)
+          case r: LogicalRelation => r.catalogTable.flatMap(_.properties.get(RegProp))
+        }
+        if (regs.nonEmpty && regs.forall(_ == m.properties.get(RegProp))) Some(df) else None
+      } catch { case _: AnalysisException => None } // dropped by a concurrent re-point
     }
-    val cols = rawSchema.fieldNames
-      .map(c => if (c == "ts") tsExpr else s"`$c`")
-    spark.sql(
-      s"CREATE OR REPLACE VIEW $Db.events AS SELECT ${cols.mkString(", ")} FROM $Db.events_raw")
+
+  /** The stored table behind test table `t`. */
+  private def stored(t: String): String = if (t == "events") "events_raw" else t
+
+  /** Drop this session's cached relation for `t` (catalog-only). */
+  private def invalidate(spark: SparkSession, t: String): Unit =
+    spark.sessionState.catalog.invalidateCachedTable(TableIdentifier(stored(t), Some(Db)))
+
+  /** (Re-)register `graft.<t>` for `canon`. `events` lands as
+    * `graft.events_raw` plus the persistent `graft.events` view: the ts
+    * normalization travels with the catalog (≙ a crawler-declared column
+    * type), so a session that never called `table` still reads µs
+    * instants. ts has shipped as ns-int64 (read as a long under the
+    * `nanosAsLong` pin) and as naive timestamp[us] (read as
+    * TIMESTAMP_NTZ); both become a µs TimestampType, and sessions pin UTC
+    * so the NTZ cast keeps the instant. */
+  private def register(spark: SparkSession, t: String, canon: String): Unit = {
+    ensureDb(spark)
+    val props = s"TBLPROPERTIES ('$DirProp'='$canon', '$RegProp'='${java.util.UUID.randomUUID()}')"
+    val tbl = s"$Db.${stored(t)}"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"CREATE TABLE $tbl USING parquet LOCATION '${tablePath(canon, t)}' $props")
+    if (t == "events") {
+      val raw = spark.sessionState.catalog.getTableMetadata(TableIdentifier(stored(t), Some(Db)))
+      val cols = raw.schema.fields.map { f =>
+        if (f.name != "ts") s"`${f.name}`"
+        else f.dataType match {
+          case LongType      => "timestamp_micros(ts div 1000) AS ts"
+          case TimestampType => "`ts`"
+          case _             => "CAST(ts AS TIMESTAMP) AS ts"
+        }
+      }
+      spark.sql(s"CREATE OR REPLACE VIEW $Db.events $props AS SELECT ${cols.mkString(", ")} FROM $tbl")
+    }
+  }
+
+  /** Create the database when missing, under a temp-dir warehouse
+    * location so managed tables never land in the working directory. */
+  private def ensureDb(spark: SparkSession): Unit =
+    if (!spark.catalog.databaseExists(Db))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $Db LOCATION '${dbRoot.resolve(Db)}'")
+  private lazy val dbRoot = graft.ops.IncrState.tempRoot("graft_warehouse_")
+
+  /** Forget the registrations of `tables` that record `dir` — call after
+    * rewriting their files in place, so the next read re-crawls the
+    * schema and the file listing, in every session. */
+  def unregister(spark: SparkSession, dir: String, tables: Seq[String]): Unit = synchronized {
+    val canon = qualify(spark, dir)
+    tables.filter(recorded(spark, _, canon).nonEmpty).foreach { t =>
+      if (t == "events") spark.sql(s"DROP VIEW IF EXISTS $Db.events")
+      spark.sql(s"DROP TABLE IF EXISTS $Db.${stored(t)}")
+    }
+  }
+
+  /** Register every test table of `dir` as a DURABLE external table
+    * (`graft.<t>`, with `graft.events` the normalizing view) — the whole
+    * crawler run. Idempotent; re-pointing at a different dir replaces the
+    * definitions. Returns the database name. */
+  def registerExternalTables(spark: SparkSession, dir: String): String = {
+    TestTables.foreach(table(spark, dir, _))
     Db
   }
 
@@ -954,24 +1044,18 @@ object Catalog {
   /** Land `documents` as a lang-partitioned MANAGED catalog table and
     * return its name. One-time per (JVM, source dir) — reruns hit the
     * tableExists fast path (≙ the crawler registering a partitioned
-    * table once, then queries pruning on it forever). The database
-    * lives under a temp-dir warehouse location so repeated local runs
-    * never pollute the repo tree. */
+    * table once, then queries pruning on it forever). */
   def ensurePartitionedDocs(spark: SparkSession, dir: String): String = synchronized {
     // dir-keyed name: the same JVM may catalog several scale factors.
-    // 64-bit portable hash of the canonical path — a 32-bit hashCode
+    // 64-bit portable hash of the qualified path — a 32-bit hashCode
     // collision would silently serve the other dir's table
-    val canon = new java.io.File(dir).getCanonicalPath
-    val key = java.lang.Long.toHexString(graft.U.h64Local(canon))
+    val key = java.lang.Long.toHexString(graft.U.h64Local(qualify(spark, dir)))
     val tbl = s"$Db.documents_by_lang_$key"
     if (!spark.catalog.tableExists(tbl)) {
-      if (!spark.catalog.databaseExists(Db)) {
-        val wh = java.nio.file.Files.createTempDirectory("graft_warehouse_").toString
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $Db LOCATION '$wh'")
-      }
-      // a dead JVM can leave the managed location on disk while the
-      // in-memory catalog forgot the table (the metastore is
-      // process-scoped; the warehouse is not) — those bytes are
+      ensureDb(spark)
+      // a dead SparkContext can leave the managed location on disk while
+      // the in-memory catalog forgot the table (the metastore dies with
+      // the context; the warehouse does not) — those bytes are
       // unreachable garbage, so clear them before landing
       val loc = new org.apache.hadoop.fs.Path(
         new org.apache.hadoop.fs.Path(spark.catalog.getDatabase(Db).locationUri),

@@ -161,4 +161,75 @@ class CatalogSuite extends SparkSpec {
           s"$v planned a CartesianProduct:\n$plan")
       }
   }
+
+  private val sf01 = new java.io.File(sfDir).getParent + "/sf0.01" // 10× sfDir
+
+  test("external tables: a URI dir registers the dir it names") {
+    try {
+      Catalog.registerExternalTables(spark, "file:" + sfDir)
+      val n = spark.sql("SELECT COUNT(*) FROM graft.lineitem").collect()(0).getLong(0)
+      assert(n == Tables.lineitem(spark, sfDir).count())
+    } finally Catalog.registerExternalTables(spark, sfDir)
+  }
+
+  test("test tables: after a first call, building a query runs no Spark job") {
+    val q = SparkEntry.queries("q_agg_rollup")
+    q(spark, sfDir)
+    val rec = Recorder.during(spark)(q(spark, sfDir))
+    assert(rec.jobs.isEmpty, s"build ran ${rec.jobs.size} jobs: ${rec.jobs}")
+    assert(rec.result.count() > 0)
+  }
+
+  test("test tables: a dir holding only some tables reads through Tables") {
+    val out = java.nio.file.Files.createTempDirectory("graft_partial_").toString
+    try {
+      ScaleProbe.generate(spark, sfDir, out, 2, subset = Seq("lineitem"))
+      assert(Tables.lineitem(spark, out).count() == 2 * Tables.lineitem(spark, sfDir).count())
+      // a rewrite in place is re-crawled, not served from the old listing
+      ScaleProbe.generate(spark, sfDir, out, 3, subset = Seq("lineitem"))
+      assert(Tables.lineitem(spark, out).count() == 3 * Tables.lineitem(spark, sfDir).count())
+    } finally deleteTree(out)
+  }
+
+  test("test tables: a re-point leaves frames built before it on their dir") {
+    val small = Tables.lineitem(spark, sfDir).count()
+    val big = Tables.lineitem(spark, sf01)
+    val nBig = big.count()
+    assert(nBig > small)
+    Tables.lineitem(spark, sfDir) // re-points graft.lineitem
+    assert(big.count() == nBig)
+    assert(Tables.lineitem(spark, sfDir).count() == small)
+  }
+
+  test("test tables: threads looping over two dirs each read their own") {
+    val want = Map(sfDir -> Tables.orders(spark, sfDir).count(),
+      sf01 -> Tables.orders(spark, sf01).count())
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = Seq(sfDir, sf01).map(d => new Thread(() => {
+      try (0 until 10).foreach { _ =>
+        val n = Tables.orders(spark, d).count()
+        if (n != want(d)) errs.add(s"$d: $n != ${want(d)}")
+      } catch { case t: Throwable => errs.add(s"$d: $t"); () }
+    }))
+    threads.foreach(_.start()); threads.foreach(_.join(300000))
+    assert(errs.isEmpty, errs.toArray.mkString("; "))
+  }
+
+  test("test tables: a second session reads the right dir after another re-pointed") {
+    val s2 = spark.newSession()
+    val small = Tables.events(s2, sfDir).count()
+    val big = Tables.events(spark, sf01).count() // re-points in the first session
+    assert(big > small)
+    assert(Tables.events(s2, sf01).count() == big)
+    Tables.events(spark, sfDir)
+    assert(Tables.events(s2, sfDir).count() == small)
+    assert(Tables.events(s2, sf01).count() == big)
+  }
+
+  test("test tables: a loader re-registers after the database is dropped") {
+    val n = Tables.orders(spark, sfDir).count()
+    spark.sql(s"DROP DATABASE ${Catalog.Db} CASCADE")
+    assert(Tables.orders(spark, sfDir).count() == n)
+    Catalog.registerExternalTables(spark, sfDir) // restore for other tests
+  }
 }

@@ -59,4 +59,27 @@ class ContractSuite extends AnyFunSuite {
     } yield s"${Bench.repoRoot.relativize(f)}:${i + 1} $needle"
     assert(offenders.isEmpty, offenders.mkString(s"${offenders.size} call sites:\n", "\n", ""))
   }
+
+  test("one loader: only sources.Catalog spells a test table's file; Tables reads no parquet") {
+    import scala.jdk.CollectionConverters._
+    val tableFile = sources.Catalog.TestTables.mkString("\\b(", "|", ")\\.parquet\\b").r
+    val root = Bench.repoRoot.resolve("src/main/scala")
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.exists(_.getFileName.toString == "Tables.scala"), "the scan missed Tables.scala")
+    val offenders = for {
+      f <- files
+      rel = root.relativize(f).toString
+      if rel != "graft/sources/Catalog.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      if tableFile.findFirstIn(line).nonEmpty ||
+        (rel == "graft/Tables.scala" && line.contains("read.parquet"))
+    } yield s"$rel:${i + 1} ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString(s"${offenders.size} loader sites:\n", "\n", ""))
+  }
 }

@@ -381,4 +381,31 @@ class LeaseSuite extends SparkSpec {
     assert(boom.getMessage == "branch boom")
     assert(settled.get() == 1, "concurrently returned before all branches settled")
   }
+
+  test("marker writes: concurrent writers of one marker never collide; a reader always finds it") {
+    val wh = IS.newWarehouse()
+    // a table-scoped marker (the bucket-count marker's shape) whose
+    // directory the first write creates
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val seen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val misses = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = new Thread(() => {
+      try while (writing.get()) IS.readMarker(spark, wh, "tbl/_m") match {
+        case Some(body) => seen.set(true); assert(body.startsWith("w"), body)
+        case None => if (seen.get()) misses.incrementAndGet()
+      } catch { case t: Throwable => errs.add(t); () }
+    })
+    val writers = (0 until 4).map(w => new Thread(() => {
+      try (0 until 200).foreach(i => IS.writeMarker(spark, wh, "tbl/_m", s"w$w-$i"))
+      catch { case t: Throwable => errs.add(t); () }
+    }))
+    reader.start(); writers.foreach(_.start())
+    writers.foreach(_.join(120000)); writing.set(false); reader.join(120000)
+    assert(errs.isEmpty, s"marker write or read failed: ${errs.peek()}")
+    assert(misses.get() == 0, s"a reader found no marker ${misses.get()} times after the first write")
+    assert(IS.readMarker(spark, wh, "tbl/_m").exists(_.startsWith("w")))
+    val left = new java.io.File(s"$wh/tbl").list().filter(_.endsWith(".tmp"))
+    assert(left.isEmpty, s"temp files left behind: ${left.toSeq}")
+  }
 }
