@@ -40,10 +40,12 @@ object Bench {
     val loadStart = loadAvg()
     val wallStart = System.nanoTime()
     spark.range(1000).selectExpr("sum(id)").collect() // session/scheduler warm-up
-    // Shuffle/spill telemetry per query: the number that says whether a
-    // plan survives a 100x scale-up is not seconds, it's bytes through
-    // the shuffle. Advisory detail (bench_out.json only), not a gate.
-    val shuffles = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
+    // The layered record of each query's steady-state run (Recorder):
+    // totals, driver time, and per action its Catalyst phases, jobs, gap
+    // and exchanges. Bytes through the shuffle, not seconds, say whether
+    // a plan survives a 100x scale-up. Advisory detail (bench_out.json
+    // only), not a gate.
+    val records = scala.collection.mutable.LinkedHashMap[String, Recorder.Recorded[Double]]()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     def timeOnce(name: String, fn: Q): Double =
       try Recorder.materialize(fn(spark, sfDir))
@@ -71,11 +73,10 @@ object Bench {
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     selected.foreach { case (name, fn) =>
       val t1 = timeOnce(name, fn)
-      // steady-state shuffle footprint: measure run 2 only (run 1 also
-      // warms shuffle files)
+      // steady-state record: run 2 only (run 1 also warms shuffle files)
       val run2 = Recorder.during(spark)(if (t1 < 0) -1.0 else timeOnce(name, fn))
       val t2 = run2.result
-      shuffles += name -> (run2.shuffleReadBytes, run2.shuffleWriteBytes, run2.spillBytes)
+      records += name -> run2
       val t3 =
         if (t1 > 0 && t2 > 0 && math.max(t1, t2) / math.min(t1, t2) > 1.5)
           Some(timeOnce(name, fn))
@@ -226,9 +227,12 @@ object Bench {
     // per-query [shuffle_read_mb, shuffle_write_mb, spill_mb] of the
     // steady-state run — the scale-extrapolation evidence
     def mb(v: Long): String = r3(v / 1048576.0)
-    val shufJson = shuffles.map { case (k, (r, w, s)) =>
-      s"\"" + k + "\":[" + mb(r) + "," + mb(w) + "," + mb(s) + "]"
+    val shufJson = records.map { case (k, r) =>
+      s"\"" + k + "\":[" + mb(r.shuffleReadBytes) + "," + mb(r.shuffleWriteBytes) + "," +
+        mb(r.spillBytes) + "]"
     }.mkString("{", ",", "}")
+    val recordsJson = records.map { case (k, r) => s"\"" + k + "\":" + r.json }
+      .mkString("{", ",", "}")
     val offendersJson = gateRatio.map { case (k, r) => s"\"" + k + "\":" + r3(r) }
       .mkString("{", ",", "}")
     val suspectJson = suspectWindow.map { case (k, r) => s"\"" + k + "\":" + r3(r) }
@@ -282,7 +286,7 @@ object Bench {
       System.err.println(s"BENCH WARN: degraded capture window " +
         s"(loadavg ${loadStart.mkString("/")}→${loadEnd.mkString("/")} on $cores cores, " +
         s"run-spread p90 ${r3(pct(0.9))}) — re-measure before trusting regressions")
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"raw":$rawJson,"shuffle_mb":$shufJson,"failed":$failedJson$ratioField$gateField$probeField$windowField,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"raw":$rawJson,"shuffle_mb":$shufJson,"records":$recordsJson,"failed":$failedJson$ratioField$gateField$probeField$windowField,"sf":"$sfDir"}"""
     // A SPARK_GRAFT_ONLY run is a diagnostic, not the capture of record —
     // writing it to bench_out.json once clobbered the committed full-
     // surface capture (ADVICE r11 #1); diagnostics get their own file.
@@ -298,7 +302,7 @@ object Bench {
     // round 17 shipped "queries":{} here and the driver's PERF/scaling
     // analysis came back empty (VERDICT r17 #1); 177 entries is ~4 KB,
     // far inside any sane tail buffer. Only the bulky diagnostics (raw
-    // run arrays, shuffle bytes) stay confined to the line above and
+    // run arrays, shuffle bytes, records) stay confined to the line above and
     // bench_out.json.
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failedJson$ratioField$gateField$probeField$windowField,"sf":"$sfDir","detail":"bench_out.json"}""")
     System.out.flush()

@@ -11,16 +11,17 @@ object CatalogOps {
 
   val qs: Map[String, Q] = Map(
     // Star-join expressed 100% in SQL over catalog names (the
-    // `SELECT … FROM fanstatsai.tweets` shape). Same physical plan as
-    // the DataFrame form: dims auto-broadcast under AQE.
+    // `SELECT … FROM fanstatsai.tweets` shape), once the three tables are
+    // registered for `d`. Same physical plan as the DataFrame form: dims
+    // auto-broadcast under AQE.
     "q_catalog_sql" -> ((s, d) => {
-      Catalog.registerViews(s, d)
-      s.sql("""
+      Seq("customer", "nation", "region").foreach(Catalog.table(s, d, _))
+      s.sql(s"""
         SELECT n_name AS nation, r_name AS region, COUNT(*) AS n_cust,
                SUM(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS bal_cents
-        FROM graft_customer
-        JOIN graft_nation ON c_nationkey = n_nationkey
-        JOIN graft_region ON n_regionkey = r_regionkey
+        FROM ${Catalog.Db}.customer
+        JOIN ${Catalog.Db}.nation ON c_nationkey = n_nationkey
+        JOIN ${Catalog.Db}.region ON n_regionkey = r_regionkey
         GROUP BY n_name, r_name
         ORDER BY nation, region""")
     }),

@@ -179,7 +179,7 @@ object IncrState {
     * them sequentially). The member folds write 2-3 independent tables
     * from one persisted input, and the per-action driver floor
     * (planning, AQE coordination, commit protocol) measured ~45% of
-    * the del exhibits' wall at sf0.1 (JobProfile, round 17) — running
+    * the del exhibits' wall at sf0.1 (a per-job profile, round 17) — running
     * the writes from worker threads overlaps each action's floor with
     * the others' cluster work.
     *

@@ -221,7 +221,7 @@ object TextOps {
     // stream at low t is ~1000× the true-pair count, and attaching a
     // full shingle-set array to every candidate made the d2-side verify
     // exchange the single fattest wire in the engine (measured 2.6 GB of
-    // 2.8 GB total at a 10× sf0.1 corpus — ExchangeAudit). Before any
+    // 2.8 GB total at a 10× sf0.1 corpus, per-exchange). Before any
     // array travels, join only (n_sh, psig, 512-bit bucket bitmap) —
     // ~80 bytes — and apply a DETERMINISTIC overlap upper bound:
     // every shared shingle lands in a bucket set in BOTH bitmaps, and

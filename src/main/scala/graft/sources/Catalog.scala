@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * (`fanstatsai`, reference main.tf:301-303) whose tables a crawler
   * registers from landed S3 prefixes (main.tf:304-314), and which Athena
   * queries BY NAME (`SELECT … FROM fanstatsai.tweets`). This is that
-  * role on the Spark session catalog, in the two scopes Spark offers:
+  * role on the Spark session catalog, in two forms:
   *
   *   - `table` / `registerExternalTables`: CATALOG-LEVEL external
   *     tables (`graft.<t>` + the `graft.events` normalizing view) — the
@@ -25,8 +25,6 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *     CatalogSuite), and against a persistent metastore (Hive, Glue)
   *     they survive JVM restart — the sandbox's in-memory metastore is
   *     the only thing keeping them process-scoped here.
-  *   - `registerViews`: session-scoped temp views (`graft_<t>`) — the
-  *     quick ad-hoc form, one session's namespace.
   *   - `ensurePartitionedDocs`: a MANAGED lang-partitioned table
   *     (`saveAsTable`, hive-style `lang=…/` directories ≙ the
   *     `<platform>/<league>/YYYY/MM/DD/` key layout, reference
@@ -51,19 +49,6 @@ object Catalog {
   // name carries another id, whatever its dir
   private val DirProp = "graft.source.dir"
   private val RegProp = "graft.registration"
-
-  // last dir registered as temp views per session — makes registerViews
-  // an O(1) no-op on re-entry, so a SQL query's timed body pays for the
-  // query, not for re-registering ten views (VERDICT r4 #7)
-  private val viewDirs = new java.util.WeakHashMap[SparkSession, String]()
-
-  /** Register every test table under its session-scoped name
-    * (`graft_<t>`) — idempotent and O(1) when `dir` is unchanged. */
-  def registerViews(spark: SparkSession, dir: String): Unit = synchronized {
-    if (viewDirs.get(spark) == dir) return
-    TestTables.foreach(t => table(spark, dir, t).createOrReplaceTempView(s"graft_$t"))
-    viewDirs.put(spark, dir): Unit
-  }
 
   /** `dir` qualified against its filesystem (`/x`, `file:/x` and a path
     * relative to the working directory name one dir): the identity a

@@ -52,6 +52,10 @@ object GraftShim {
     try spark.sparkContext.listenerBus.waitUntilEmpty()
     catch { case _: java.util.concurrent.TimeoutException => () }
 
+  /** The QueryExecution an execution-end event carries (`private[sql]`). */
+  def queryExecution(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : org.apache.spark.sql.execution.QueryExecution = e.qe
+
   /** Listeners currently registered on the context's listener bus — the
     * probe a caller uses to check it removes what it adds. */
   def listenerCount(spark: SparkSession): Int =

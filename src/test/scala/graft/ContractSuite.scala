@@ -39,10 +39,13 @@ class ContractSuite extends AnyFunSuite {
   test("sessions are built only by graft.Session, listeners added only by graft.Recorder") {
     import scala.jdk.CollectionConverters._
     // call-site needle -> the files allowed to contain it (TopicConfigSuite
-    // checks CloudConf on a bare builder, no session is created)
+    // checks CloudConf on a bare builder, no session is created); the
+    // recorder's one listener sees SQL executions too, so no file
+    // registers a query-execution listener
     val allowed = Map(
       "SparkSession.builder" + "(" -> Set("Session.scala", "TopicConfigSuite.scala"),
-      "addSparkListener" + "(" -> Set("Recorder.scala"))
+      "addSparkListener" + "(" -> Set("Recorder.scala"),
+      "listenerManager.register" + "(" -> Set.empty[String])
     val files = Seq("src/main/scala", "src/test/scala").flatMap { d =>
       val s = java.nio.file.Files.walk(Bench.repoRoot.resolve(d))
       try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList

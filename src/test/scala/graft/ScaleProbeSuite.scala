@@ -94,6 +94,13 @@ class ScaleProbeSuite extends SparkSpec {
     }
     assert(GraftShim.listenerCount(spark) == before,
       s"listener bus grew from $before to ${GraftShim.listenerCount(spark)} across a throwing scope")
+    // a body whose SQL execution fails in a task ends that execution with
+    // an error; the recorder still leaves
+    intercept[Exception] {
+      Recorder.during(spark)(spark.range(10).selectExpr("assert_true(id < 5)").collect())
+    }
+    assert(GraftShim.listenerCount(spark) == before,
+      s"listener bus grew from $before to ${GraftShim.listenerCount(spark)} across a failed execution")
   }
 
   test("probe queries scale ~linearly with zero spill and bounded driver heap") {
