@@ -77,15 +77,13 @@ object AnnIncr extends IncrMember.SliceFold {
   def derivedBits(corpusRows: Long): Int = math.max(4, math.ceil(
     math.log(math.max(corpusRows, 1L).toDouble / TargetOccupancy) / math.log(2.0)).toInt)
 
-  private def confTables(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.ann.tables").map(_.toInt).getOrElse(Dedup.NumTables)
   private def confBitsOverride(s: SparkSession): Option[Int] =
     s.conf.getOption("spark.graft.ann.bits").map(_.toInt)
 
   /** Config for a warehouse with no `_ann_conf` yet (pre-marker reads):
     * override, else the historical default. */
   private def confAnn(s: SparkSession): (Int, Int) =
-    (confTables(s), confBitsOverride(s).getOrElse(4))
+    (Dedup.NumTables, confBitsOverride(s).getOrElse(4))
 
   // PER-PREFIX markers (round 16, the ClusterIncr/QualityIncr house
   // pattern): two ANN indexes sharing one warehouse must not pool their
@@ -195,7 +193,7 @@ object AnnIncr extends IncrMember.SliceFold {
     val counts = readVecCounts(s, prefix, warehouse) + (day -> fresh.count())
     writeVecCounts(s, prefix, warehouse, counts)
     val target = confBitsOverride(s).getOrElse(derivedBits(counts.values.sum))
-    writeAnnConf(s, prefix, warehouse, confTables(s), target) // first fold only
+    writeAnnConf(s, prefix, warehouse, Dedup.NumTables, target) // first fold only
     // a re-code interrupted by a crash reruns to completion before the
     // fold proceeds (the rebuild is a pure function of the vector store,
     // so rerunning from any intermediate state converges)

@@ -358,22 +358,14 @@ object ClusterIncr extends IncrMember.SliceFold {
 
   /** Per-cluster size / similarity-mass report off the persisted
     * assignments — output identical in shape to `q_cluster_kmeans`
-    * (cluster, n, sim_sum, mean_sim). One K-row map-side-combinable
-    * aggregate over the assignment state; the replay dedup rides the
-    * `vec_id` bucketing exchange-free. */
+    * (cluster, n, sim_sum, mean_sim): the serving read
+    * `IncrViews.clusterSql` (one K-row map-side-combinable aggregate
+    * over the assignment state; the replay dedup rides the `vec_id`
+    * bucketing exchange-free) plus the presentation order. */
   def report(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
-    import s.implicits._
     IncrState.ensureRegistered(s, stateTables(prefix)(2), warehouse)
     IncrState.ensureRegistered(s, tombTable(prefix), warehouse)
-    minusTombstones(s, prefix, s.table(asgTable(prefix))
-      .select($"vec_id", $"cl", $"sim_i", $"src_day")
-      .dropDuplicates("vec_id", "src_day"))
-      .groupBy($"cl".as("cluster"))
-      .agg(count(lit(1)).as("n"), sum($"sim_i").as("sim_sum"))
-      .select($"cluster", $"n", $"sim_sum",
-        round($"sim_sum".cast("double") / (lit(1000000.0) * $"n".cast("double")), 6)
-          .as("mean_sim"))
-      .orderBy("cluster")
+    s.sql(IncrViews.clusterSql(s, prefix, warehouse)).orderBy("cluster")
   }
 
   /** Daily loop over `days` slices (vec_id mod days) + the final

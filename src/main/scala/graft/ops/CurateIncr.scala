@@ -51,30 +51,6 @@ object CurateIncr extends IncrMember.SliceFold {
       .withColumn("n_lines", expr("(n_toks + 2) div 3"))
       .withColumn("split", splitOf(col("doc_id")))
 
-  private def reportFrom(md5P: DataFrame, lineP: DataFrame, tfP: DataFrame): DataFrame = {
-    val d1 = md5P
-      .groupBy(splitOf(col("doc_id")).as("split"), col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("sum_toks"),
-        sum(col("n_lines")).as("n_lines"))
-    val d2 = lineP
-      .groupBy(splitOf(col("doc_id")).as("split"), col("lang"))
-      .agg(count(lit(1)).as("n_kept"), sum(col("len")).as("kept_chars"))
-    val d3 = tfP
-      .groupBy(col("split"), col("lang"))
-      .agg(count(lit(1)).as("n_vocab"), sum(col("c")).as("n_tok_occ"))
-    d1.join(d2, Seq("split", "lang"), "full_outer")
-      .join(d3, Seq("split", "lang"), "full_outer")
-      .select(col("split"), col("lang"),
-        coalesce(col("n_docs"), lit(0L)).as("n_docs"),
-        coalesce(col("sum_toks"), lit(0L)).as("sum_toks"),
-        coalesce(col("n_lines"), lit(0L)).as("n_lines"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("kept_chars"), lit(0L)).as("kept_chars"),
-        coalesce(col("n_vocab"), lit(0L)).as("n_vocab"),
-        coalesce(col("n_tok_occ"), lit(0L)).as("n_tok_occ"))
-      .orderBy("split", "lang")
-  }
-
   // ---------- member-level state ----------
   //
   // RETRACTION (VERDICT r13 #1, round 14). Compressing each keeper group
@@ -210,32 +186,14 @@ object CurateIncr extends IncrMember.SliceFold {
     } finally { g.unpersist(blocking = false); () }
   }
 
-  /** Serving report off the member-level state. Keepers re-derive per group over the bucketed
-    * member scans (replay dedup + min, both bucket-local, NO exchange);
-    * tf nets the signed partials and drops fully-retracted rows. */
+  /** Serving report off the member-level state: the serving read
+    * `IncrViews.curateSql` plus the presentation order. Keepers
+    * re-derive per group over the bucketed member scans (replay dedup +
+    * min, both bucket-local, NO exchange); tf nets the signed partials
+    * and drops fully-retracted rows. */
   def reportRetractable(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
     allTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
-    val md5P = minusTombstones(s, prefix,
-      s.table(md5mTable(prefix))
-        .select(col("k_md5"), col("doc_id"), col("lang"), col("n_toks"), col("n_lines"))
-        .dropDuplicates("k_md5", "doc_id"))
-      .groupBy(col("k_md5"))
-      .agg(min(struct(col("doc_id"), col("lang"), col("n_toks"), col("n_lines"))).as("k"))
-      .select(col("k_md5"), col("k.doc_id"), col("k.lang"), col("k.n_toks"), col("k.n_lines"))
-    val lineP = minusTombstones(s, prefix,
-      s.table(linemTable(prefix))
-        .select(col("line"), col("doc_id"), col("idx"), col("lang"), col("len"))
-        .dropDuplicates("line", "doc_id", "idx"))
-      .groupBy(col("line"))
-      .agg(min(struct(col("doc_id"), col("idx"), col("lang"), col("len"))).as("k"))
-      .select(col("line"), col("k.doc_id"), col("k.idx"), col("k.lang"), col("k.len"))
-    val tfP = s.table(tfmTable(prefix))
-      .select(col("split"), col("lang"), col("tok"), col("src_day"), col("c"))
-      .dropDuplicates("split", "lang", "tok", "src_day")
-      .groupBy(col("split"), col("lang"), col("tok"))
-      .agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0)
-    reportFrom(md5P, lineP, tfP)
+    s.sql(IncrViews.curateSql(s, prefix, warehouse)).orderBy("split", "lang")
   }
 
   /** Run the full daily loop over `days` slices (doc_id mod days) and

@@ -56,33 +56,13 @@ object DomainsIncr extends IncrMember.SliceFold {
   private[graft] def retract(s: SparkSession, in: DataFrame, p: String, wh: String, day: Int,
                              nb: Int): Unit = deleteDay(s, in, p, wh, day, nb)
 
-  /** The deny-list dimension — a broadcast dim at real scale, inline
-    * here (identical to the batch query's, ops/TextAnalysis.scala L25). */
-  private def denyList(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq("src1.example.com", "src3.example.com")
-      .toDF("domain").withColumn("blocked", lit(1L))
-  }
-
   /** Fold one day's documents into the statistics state: derive the
     * domain (same expression as the batch query), one partial-aggregable
     * count per (domain, lang), bucketed write. Cost ∝ slice; no join,
     * no history read. */
   def runDay(s: SparkSession, slice: DataFrame, prefix: String,
              warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-      import s.implicits._
-      val Seq(dlT) = stateTables(prefix)
-      val part = slice
-        .withColumn("url", concat(lit("https://"), $"source",
-          lit(".example.com/d/"), $"doc_id".cast("string")))
-        .withColumn("domain", regexp_extract($"url", "https?://([^/]+)/", 1))
-        .groupBy($"domain", $"lang").agg(count(lit(1)).as("n_part"))
-        .withColumn("src_day", lit(day))
-        .withColumn("day", lit(day))
-      IncrState.writeDay(s, part, dlT, warehouse, day, nBuckets)
-      dayDone(s, prefix, warehouse, day)
-    }
+    step(s, slice, prefix, warehouse, day, nBuckets, sign = 1)
 
   /** Retraction (VERDICT r13 #1): fold one day's DELETED documents OUT
     * of the statistics state — the takedown/GDPR path. The state is
@@ -98,14 +78,21 @@ object DomainsIncr extends IncrMember.SliceFold {
     * contract as runDay). */
   def deleteDay(s: SparkSession, deleted: DataFrame, prefix: String,
                 warehouse: String, day: Int, nBuckets: Int = 32): Unit =
+    step(s, deleted, prefix, warehouse, day, nBuckets, sign = -1)
+
+  /** The one day step of fold (`sign` 1) and delete (`sign` -1): the
+    * slice's per-(domain, lang) counts land with that sign. */
+  private def step(s: SparkSession, slice: DataFrame, prefix: String, warehouse: String,
+                   day: Int, nBuckets: Int, sign: Int): Unit =
     IncrState.withLease(s, warehouse, prefix) {
       import s.implicits._
       val Seq(dlT) = stateTables(prefix)
-      val part = deleted
+      val n = count(lit(1))
+      val part = slice
         .withColumn("url", concat(lit("https://"), $"source",
           lit(".example.com/d/"), $"doc_id".cast("string")))
         .withColumn("domain", regexp_extract($"url", "https?://([^/]+)/", 1))
-        .groupBy($"domain", $"lang").agg((-count(lit(1))).as("n_part"))
+        .groupBy($"domain", $"lang").agg((if (sign < 0) -n else n).as("n_part"))
         .withColumn("src_day", lit(day))
         .withColumn("day", lit(day))
       IncrState.writeDay(s, part, dlT, warehouse, day, nBuckets)
@@ -113,28 +100,17 @@ object DomainsIncr extends IncrMember.SliceFold {
     }
 
   /** The full domain report off the persisted state — output identical
-    * to `q_url_domains`. Replay dedup → SIGNED partial net per
-    * (domain, lang) (fold partials positive, delete partials negative;
-    * a fully-retracted group nets to 0 and is dropped, so both n_docs
-    * and the language spread shrink exactly as the batch recompute on
-    * the reduced corpus would) → per-domain sum + language count (every
-    * grouping contains `domain`, which the bucketing satisfies — no
-    * exchange) → broadcast deny join → presentation sort (the one
-    * shuffle, identical to the batch plan's). */
+    * to `q_url_domains`: the serving read `IncrViews.domainsSql` (replay
+    * dedup → SIGNED partial net per (domain, lang), a fully-retracted
+    * group nets to 0 and is dropped, so both n_docs and the language
+    * spread shrink exactly as the batch recompute on the reduced corpus
+    * would → per-domain sum + language count, every grouping contains
+    * `domain`, which the bucketing satisfies — no exchange → broadcast
+    * deny join) plus the presentation sort (the one shuffle, identical
+    * to the batch plan's). */
   def report(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
-    import s.implicits._
     allTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
-    s.table(dlTable(prefix))
-      .select($"domain", $"lang", $"src_day", $"n_part")
-      .dropDuplicates("domain", "lang", "src_day")
-      .groupBy($"domain", $"lang").agg(sum($"n_part").as("n"))
-      .filter($"n" > 0)
-      .groupBy($"domain")
-      .agg(sum($"n").as("n_docs"), count(lit(1)).as("n_langs"))
-      .join(broadcast(denyList(s)), Seq("domain"), "left")
-      .select($"domain", $"n_docs", $"n_langs",
-        coalesce($"blocked", lit(0L)).as("blocked"))
-      .orderBy("domain")
+    s.sql(IncrViews.domainsSql(s, prefix, warehouse)).orderBy("domain")
   }
 
   /** Daily loop over `days` slices (doc_id mod days) + report — the

@@ -8,40 +8,51 @@ import org.apache.spark.sql.SparkSession
   * reach every BATCH operator through the `graft.v_*` views but had no
   * name for the incremental members' reports, which are plain
   * relational programs over the (default-catalog) state tables. These
-  * builders register `v_<prefix>_report` catalog views whose SQL is the
-  * exact serving read of the member's Scala `report` (IncrViewsSuite
-  * pins fresh-session row equality on the same warehouse).
+  * builders register `v_<prefix>_report` catalog views.
+  *
+  * ONE PROGRAM PER READ: for TF-IDF, domains, triangles, k-means and
+  * curation, the `<x>Sql` string below IS the serving read — the
+  * member's `report` is `s.sql(<x>Sql(...))` plus its presentation
+  * ORDER BY, and the view is the same string under CREATE OR REPLACE
+  * VIEW (IncrViewsSuite pins that both plans are one). Each broadcast
+  * of a dimension-sized side (deny list, tombstones) is a
+  * `/*+ BROADCAST */` hint, so the plan-shape bounds hold with
+  * broadcast joins off. Replay dedup is `SELECT DISTINCT` over the
+  * read's columns, so two rows equal on a table's natural key but not
+  * on a value both count: the k-means assignment table holds such rows
+  * between a re-assign's epoch write and its old partitions' drop,
+  * until the pending re-run (ClusterIncrSuite pins both). Two members
+  * keep a separate Scala read:
+  *
+  *   - QUALITY: a permanent view cannot call the native
+  *     `bitmap_andnot`, so the view spells |live \ tomb| as
+  *     |live ∪ tomb| − |tomb| over the built-in
+  *     bitmap_or_agg/bitmap_count; the UNION ALL under the |L∪T| or_agg
+  *     loses the bucketed scans' output partitioning, so the view pays
+  *     ONE exchange the Scala report does not — over the replay-deduped
+  *     bitmap rows, i.e. ≤ buckets × (days + epochs) ROWS regardless of
+  *     corpus, plus the trivial SinglePartition scalar sum
+  *     (QualityIncrSuite pins the Scala plan without it).
+  *   - ANN: `AnnIncr.topK` takes a query DataFrame; the view reads a
+  *     landing table (the INSERT-then-SELECT contract below).
   *
   * Two non-relational inputs need special handling:
   *
   *   - MARKER SCALARS (TF-IDF's n_docs, quality's four counters) live
   *     in warehouse marker files, which Spark's file listing cannot see
-  *     (underscore-prefixed = hidden). They are baked into the view SQL
-  *     as LITERALS at registration — and kept fresh by the member
-  *     contract's fold/delete epilogue (IncrMember.dayDone: a no-op
-  *     catalog probe unless the view exists, then a CREATE OR REPLACE
-  *     with the new literal — pure catalog ops, no jobs).
-  *   - CONDITIONAL STATE (quality/triangle tombstone tables exist only
-  *     once a delete ran): the SQL is generated against the tables
-  *     present at registration, and the delete's epilogue swaps in the
+  *     (underscore-prefixed = hidden). They are baked into the SQL as
+  *     LITERALS when it is built — and the view is kept fresh by the
+  *     member contract's fold/delete epilogue (IncrMember.dayDone: a
+  *     no-op catalog probe unless the view exists, then a CREATE OR
+  *     REPLACE with the new literal — pure catalog ops, no jobs).
+  *   - CONDITIONAL STATE (tombstone tables exist only once a delete
+  *     ran): the SQL is generated against the tables present when it is
+  *     built, and the delete's epilogue swaps the view to the
   *     tombstone-aware form the moment it first matters.
   *
   * Views use ONLY built-in functions (the house rule of
   * Catalog.operatorViews: a permanent view cannot reference a
-  * session-registered function), which for the quality report means
-  * the native `bitmap_andnot` is replaced by the set identity
-  * |live \ tomb| = |live ∪ tomb| − |tomb| over the built-in
-  * bitmap_or_agg/bitmap_count. Plan cost of that trade, measured and
-  * pinned (IncrViewsSuite): the UNION ALL under the |L∪T| or_agg loses
-  * the bucketed scans' output partitioning, so the view pays ONE
-  * exchange the Scala report does not — over the replay-deduped bitmap
-  * rows, i.e. ≤ buckets × (days + epochs) ROWS regardless of corpus
-  * (bytes ∝ the bitmaps themselves), plus the trivial SinglePartition
-  * scalar sum. The TF-IDF view keeps the member plan's shape exactly:
-  * state sides exchange-free over the tok-bucketed scans (the tok join
-  * is a sort-only SMJ), one output-inherent doc_id window exchange,
-  * WindowGroupLimit applied. The Scala reports stay the zero-/minimal-
-  * exchange serving paths; the views are the SQL doorway. */
+  * session-registered function). */
 object IncrViews {
 
   def viewName(prefix: String): String = s"v_${prefix}_report"
@@ -57,57 +68,61 @@ object IncrViews {
   /** n_docs is a literal from the `_doc_counts` marker — re-baked by
     * every fold/delete's re-registration so the view never goes stale.
     *
-    * ROW SET equals the Scala report's; its final ORDER BY doc_id, rk is
-    * intentionally OMITTED here (ADVICE r15): that ordering is pure
-    * presentation — unlike the triangle view's ORDER BY, which is
-    * semantic (top-20) — and a sort baked into a composable view would
-    * charge a range-partition exchange to every downstream query that
-    * doesn't want it (Catalyst's EliminateSorts cannot always remove
-    * it). A SQL user diffing against the Scala report should append
-    * `ORDER BY doc_id, rk` themselves. */
-  def registerTfidf(s: SparkSession, prefix: String, warehouse: String): String = {
+    * The report's ORDER BY doc_id, rk is intentionally OMITTED here
+    * (ADVICE r15): that ordering is pure presentation — unlike the
+    * triangle read's ORDER BY, which is semantic (top-20) — and a sort
+    * baked into a composable view would charge a range-partition
+    * exchange to every downstream query that doesn't want it
+    * (Catalyst's EliminateSorts cannot always remove it). A SQL user
+    * diffing against `TfidfIncr.report` appends `ORDER BY doc_id, rk`,
+    * as the report does. */
+  def tfidfSql(s: SparkSession, prefix: String, warehouse: String): String = {
     val nDocs = TfidfIncr.nDocs(s, prefix, warehouse)
-    create(s, prefix,
-      s"""WITH tf AS (SELECT doc_id, tok, SUM(tf) AS tf
-         |            FROM (SELECT DISTINCT doc_id, tok, src_day, tf
-         |                  FROM ${TfidfIncr.tfTable(prefix)})
-         |            GROUP BY doc_id, tok HAVING SUM(tf) > 0),
-         |     df AS (SELECT tok, SUM(df_part) AS df
-         |            FROM (SELECT DISTINCT tok, src_day, df_part
-         |                  FROM ${TfidfIncr.dfTable(prefix)})
-         |            GROUP BY tok HAVING SUM(df_part) > 0),
-         |     sc AS (SELECT tf.doc_id, tf.tok,
-         |                   ROUND(tf.tf * LN(CAST($nDocs AS DOUBLE) / df.df), 4) AS score
-         |            FROM tf JOIN df ON tf.tok = df.tok)
-         |SELECT doc_id, CAST(rk AS BIGINT) AS rk, tok, score
-         |FROM (SELECT doc_id, tok, score,
-         |             ROW_NUMBER() OVER (PARTITION BY doc_id
-         |               ORDER BY score DESC, tok) AS rk
-         |      FROM sc)
-         |WHERE rk <= 3""".stripMargin)
+    s"""WITH tf AS (SELECT doc_id, tok, SUM(tf) AS tf
+       |            FROM (SELECT DISTINCT doc_id, tok, src_day, tf
+       |                  FROM ${TfidfIncr.tfTable(prefix)})
+       |            GROUP BY doc_id, tok HAVING SUM(tf) > 0),
+       |     df AS (SELECT tok, SUM(df_part) AS df
+       |            FROM (SELECT DISTINCT tok, src_day, df_part
+       |                  FROM ${TfidfIncr.dfTable(prefix)})
+       |            GROUP BY tok HAVING SUM(df_part) > 0),
+       |     sc AS (SELECT tf.doc_id, tf.tok,
+       |                   ROUND(tf.tf * LN(CAST($nDocs AS DOUBLE) / df.df), 4) AS score
+       |            FROM tf JOIN df ON tf.tok = df.tok)
+       |SELECT doc_id, CAST(rk AS BIGINT) AS rk, tok, score
+       |FROM (SELECT doc_id, tok, score,
+       |             ROW_NUMBER() OVER (PARTITION BY doc_id
+       |               ORDER BY score DESC, tok) AS rk
+       |      FROM sc)
+       |WHERE rk <= 3""".stripMargin
   }
+
+  def registerTfidf(s: SparkSession, prefix: String, warehouse: String): String =
+    create(s, prefix, tfidfSql(s, prefix, warehouse))
 
   // ---- L47 incremental domain stats --------------------------------
 
   /** Fully static (no marker scalars, single always-present state
     * table) — the fold/delete re-registration replaces it unchanged. The
     * deny list is the same inline dimension as the batch query's
-    * (ops/TextAnalysis.scala L25), as VALUES. */
+    * (ops/TextAnalysis.scala L25), as VALUES, broadcast. */
+  def domainsSql(s: SparkSession, prefix: String, warehouse: String): String =
+    s"""WITH net AS (SELECT domain, lang, SUM(n_part) AS n
+       |             FROM (SELECT DISTINCT domain, lang, src_day, n_part
+       |                   FROM ${DomainsIncr.dlTable(prefix)})
+       |             GROUP BY domain, lang HAVING SUM(n_part) > 0),
+       |     agg AS (SELECT domain, SUM(n) AS n_docs, COUNT(1) AS n_langs
+       |             FROM net GROUP BY domain),
+       |     deny AS (SELECT * FROM VALUES
+       |                ('src1.example.com', CAST(1 AS BIGINT)),
+       |                ('src3.example.com', CAST(1 AS BIGINT))
+       |              AS t(domain, blocked))
+       |SELECT /*+ BROADCAST(d) */ a.domain, a.n_docs, a.n_langs,
+       |       COALESCE(d.blocked, CAST(0 AS BIGINT)) AS blocked
+       |FROM agg a LEFT JOIN deny d ON a.domain = d.domain""".stripMargin
+
   def registerDomains(s: SparkSession, prefix: String, warehouse: String): String =
-    create(s, prefix,
-      s"""WITH net AS (SELECT domain, lang, SUM(n_part) AS n
-         |             FROM (SELECT DISTINCT domain, lang, src_day, n_part
-         |                   FROM ${DomainsIncr.dlTable(prefix)})
-         |             GROUP BY domain, lang HAVING SUM(n_part) > 0),
-         |     agg AS (SELECT domain, SUM(n) AS n_docs, COUNT(1) AS n_langs
-         |             FROM net GROUP BY domain),
-         |     deny AS (SELECT * FROM VALUES
-         |                ('src1.example.com', CAST(1 AS BIGINT)),
-         |                ('src3.example.com', CAST(1 AS BIGINT))
-         |              AS t(domain, blocked))
-         |SELECT a.domain, a.n_docs, a.n_langs,
-         |       COALESCE(d.blocked, CAST(0 AS BIGINT)) AS blocked
-         |FROM agg a LEFT JOIN deny d ON a.domain = d.domain""".stripMargin)
+    create(s, prefix, domainsSql(s, prefix, warehouse))
 
   // ---- L48 incremental quality report -------------------------------
 
@@ -154,44 +169,45 @@ object IncrViews {
 
   /** No marker scalars; the only registration-time dependence is
     * whether the tombstone table exists (first deleteDay refreshes).
-    * ORDER BY … LIMIT 20 stays in the view — it is the operator's
+    * ORDER BY … LIMIT 20 stays in the SQL — it is the operator's
     * top-k semantics, not presentation. */
-  def registerTriangles(s: SparkSession, prefix: String, warehouse: String): String = {
+  def trianglesSql(s: SparkSession, prefix: String, warehouse: String): String = {
     val hasTomb = s.catalog.tableExists(TriIncr.delTable(prefix))
     val liveCte =
       if (!hasTomb)
         s"live AS (SELECT DISTINCT x, y FROM ${TriIncr.adjTable(prefix)})"
       else
         s"""adj AS (SELECT DISTINCT x, y FROM ${TriIncr.adjTable(prefix)}),
-           |live AS (SELECT a.x, a.y FROM adj a
+           |live AS (SELECT /*+ BROADCAST(t) */ a.x, a.y FROM adj a
            |         LEFT ANTI JOIN ${TriIncr.delTable(prefix)} t
            |           ON a.x = t.x AND a.y = t.y)""".stripMargin
-    create(s, prefix,
-      s"""WITH $liveCte,
-         |     deg AS (SELECT x AS node, COUNT(1) AS degree
-         |             FROM live GROUP BY x),
-         |     tri AS (SELECT node, SUM(tri_part) AS tri
-         |             FROM (SELECT DISTINCT node, src_day, tri_part
-         |                   FROM ${TriIncr.triTable(prefix)})
-         |             GROUP BY node)
-         |SELECT deg.node AS part_key,
-         |       COALESCE(tri.tri, CAST(0 AS BIGINT)) AS tri,
-         |       deg.degree,
-         |       CASE WHEN deg.degree >= 2
-         |            THEN COALESCE(tri.tri, CAST(0 AS BIGINT)) * 2000000
-         |                   div (deg.degree * (deg.degree - 1))
-         |            ELSE CAST(0 AS BIGINT) END AS cc_ppm
-         |FROM deg LEFT JOIN tri ON deg.node = tri.node
-         |ORDER BY tri DESC, part_key LIMIT 20""".stripMargin)
+    s"""WITH $liveCte,
+       |     deg AS (SELECT x AS node, COUNT(1) AS degree
+       |             FROM live GROUP BY x),
+       |     tri AS (SELECT node, SUM(tri_part) AS tri
+       |             FROM (SELECT DISTINCT node, src_day, tri_part
+       |                   FROM ${TriIncr.triTable(prefix)})
+       |             GROUP BY node)
+       |SELECT deg.node AS part_key,
+       |       COALESCE(tri.tri, CAST(0 AS BIGINT)) AS tri,
+       |       deg.degree,
+       |       CASE WHEN deg.degree >= 2
+       |            THEN COALESCE(tri.tri, CAST(0 AS BIGINT)) * 2000000
+       |                   div (deg.degree * (deg.degree - 1))
+       |            ELSE CAST(0 AS BIGINT) END AS cc_ppm
+       |FROM deg LEFT JOIN tri ON deg.node = tri.node
+       |ORDER BY tri DESC, part_key LIMIT 20""".stripMargin
   }
+
+  def registerTriangles(s: SparkSession, prefix: String, warehouse: String): String =
+    create(s, prefix, trianglesSql(s, prefix, warehouse))
 
   // ---- L51 incremental k-means ---------------------------------------
 
   /** No marker scalars; the only registration-time dependence is the
     * vec tombstone table (first deleteDay refreshes). One K-row
-    * aggregate over the replay-deduped assignment state, like the Scala
-    * report. */
-  def registerCluster(s: SparkSession, prefix: String, warehouse: String): String = {
+    * aggregate over the replay-deduped assignment state. */
+  def clusterSql(s: SparkSession, prefix: String, warehouse: String): String = {
     val hasTomb = s.catalog.tableExists(ClusterIncr.delTable(prefix))
     val liveCte =
       if (!hasTomb)
@@ -202,16 +218,18 @@ object IncrViews {
         s"""asg AS (SELECT vec_id, cl, sim_i
            |        FROM (SELECT DISTINCT vec_id, cl, sim_i, src_day
            |              FROM ${ClusterIncr.asgTable(prefix)})),
-           |live AS (SELECT a.vec_id, a.cl, a.sim_i FROM asg a
+           |live AS (SELECT /*+ BROADCAST(t) */ a.vec_id, a.cl, a.sim_i FROM asg a
            |         LEFT ANTI JOIN ${ClusterIncr.delTable(prefix)} t
            |           ON a.vec_id = t.vec_id)""".stripMargin
-    create(s, prefix,
-      s"""WITH $liveCte
-         |SELECT cl AS cluster, COUNT(1) AS n, SUM(sim_i) AS sim_sum,
-         |       ROUND(CAST(SUM(sim_i) AS DOUBLE)
-         |             / (1000000.0 * CAST(COUNT(1) AS DOUBLE)), 6) AS mean_sim
-         |FROM live GROUP BY cl""".stripMargin)
+    s"""WITH $liveCte
+       |SELECT cl AS cluster, COUNT(1) AS n, SUM(sim_i) AS sim_sum,
+       |       ROUND(CAST(SUM(sim_i) AS DOUBLE)
+       |             / (1000000.0 * CAST(COUNT(1) AS DOUBLE)), 6) AS mean_sim
+       |FROM live GROUP BY cl""".stripMargin
   }
+
+  def registerCluster(s: SparkSession, prefix: String, warehouse: String): String =
+    create(s, prefix, clusterSql(s, prefix, warehouse))
 
   // ---- L53 retractable curation (member-level keeper backend) ---------
 
@@ -222,57 +240,60 @@ object IncrViews {
     * member-level backend exists (a compressed keeper could not give
     * the runner-up back). splitOf's h64 appears as its built-in
     * `conv(substring(md5))` equivalent, the Catalog view convention. */
-  def registerCurate(s: SparkSession, prefix: String, warehouse: String): String = {
+  def curateSql(s: SparkSession, prefix: String, warehouse: String): String = {
     val hasTomb = s.catalog.tableExists(CurateIncr.delmTable(prefix))
+    val bc = if (!hasTomb) "" else "/*+ BROADCAST(t) */ "
     val anti = (alias: String) =>
       if (!hasTomb) ""
       else s" LEFT ANTI JOIN ${CurateIncr.delmTable(prefix)} t ON $alias.doc_id = t.doc_id"
     val split = (docId: String) =>
       s"""CASE WHEN CAST(conv(substring(md5(concat('split:', CAST($docId AS STRING))), 1, 15), 16, 10) AS BIGINT) % 1000 < 800 THEN 'train'
-         |     WHEN CAST(conv(substring(md5(concat('split:', CAST($docId AS STRING))), 1, 15), 16, 10) AS BIGINT) % 1000 < 900 THEN 'valid'
-         |     ELSE 'test' END""".stripMargin
-    create(s, prefix,
-      s"""WITH md5k AS (
-         |  SELECT k_md5, k.doc_id AS doc_id, k.lang AS lang,
-         |         k.n_toks AS n_toks, k.n_lines AS n_lines
-         |  FROM (SELECT k_md5,
-         |               MIN(STRUCT(doc_id, lang, n_toks, n_lines)) AS k
-         |        FROM (SELECT m.k_md5, m.doc_id, m.lang, m.n_toks, m.n_lines
-         |              FROM (SELECT DISTINCT k_md5, doc_id, lang, n_toks, n_lines
-         |                    FROM ${CurateIncr.md5mTable(prefix)}) m${anti("m")})
-         |        GROUP BY k_md5)),
-         |linek AS (
-         |  SELECT line, k.doc_id AS doc_id, k.lang AS lang, k.len AS len
-         |  FROM (SELECT line, MIN(STRUCT(doc_id, idx, lang, len)) AS k
-         |        FROM (SELECT l.line, l.doc_id, l.idx, l.lang, l.len
-         |              FROM (SELECT DISTINCT line, doc_id, idx, lang, len
-         |                    FROM ${CurateIncr.linemTable(prefix)}) l${anti("l")})
-         |        GROUP BY line)),
-         |tfk AS (
-         |  SELECT split, lang, tok, SUM(c) AS c
-         |  FROM (SELECT DISTINCT split, lang, tok, src_day, c
-         |        FROM ${CurateIncr.tfmTable(prefix)})
-         |  GROUP BY split, lang, tok HAVING SUM(c) > 0),
-         |d1 AS (SELECT ${split("doc_id")} AS split, lang,
-         |              COUNT(1) AS n_docs, SUM(n_toks) AS sum_toks,
-         |              SUM(n_lines) AS n_lines
-         |       FROM md5k GROUP BY 1, 2),
-         |d2 AS (SELECT ${split("doc_id")} AS split, lang,
-         |              COUNT(1) AS n_kept, SUM(len) AS kept_chars
-         |       FROM linek GROUP BY 1, 2),
-         |d3 AS (SELECT split, lang, COUNT(1) AS n_vocab, SUM(c) AS n_tok_occ
-         |       FROM tfk GROUP BY split, lang)
-         |SELECT split, lang,
-         |       COALESCE(n_docs, CAST(0 AS BIGINT)) AS n_docs,
-         |       COALESCE(sum_toks, CAST(0 AS BIGINT)) AS sum_toks,
-         |       COALESCE(n_lines, CAST(0 AS BIGINT)) AS n_lines,
-         |       COALESCE(n_kept, CAST(0 AS BIGINT)) AS n_kept,
-         |       COALESCE(kept_chars, CAST(0 AS BIGINT)) AS kept_chars,
-         |       COALESCE(n_vocab, CAST(0 AS BIGINT)) AS n_vocab,
-         |       COALESCE(n_tok_occ, CAST(0 AS BIGINT)) AS n_tok_occ
-         |FROM d1 FULL OUTER JOIN d2 USING (split, lang)
-         |        FULL OUTER JOIN d3 USING (split, lang)""".stripMargin)
+       |     WHEN CAST(conv(substring(md5(concat('split:', CAST($docId AS STRING))), 1, 15), 16, 10) AS BIGINT) % 1000 < 900 THEN 'valid'
+       |     ELSE 'test' END""".stripMargin
+    s"""WITH md5k AS (
+       |  SELECT k_md5, k.doc_id AS doc_id, k.lang AS lang,
+       |         k.n_toks AS n_toks, k.n_lines AS n_lines
+       |  FROM (SELECT k_md5,
+       |               MIN(STRUCT(doc_id, lang, n_toks, n_lines)) AS k
+       |        FROM (SELECT ${bc}m.k_md5, m.doc_id, m.lang, m.n_toks, m.n_lines
+       |              FROM (SELECT DISTINCT k_md5, doc_id, lang, n_toks, n_lines
+       |                    FROM ${CurateIncr.md5mTable(prefix)}) m${anti("m")})
+       |        GROUP BY k_md5)),
+       |linek AS (
+       |  SELECT line, k.doc_id AS doc_id, k.lang AS lang, k.len AS len
+       |  FROM (SELECT line, MIN(STRUCT(doc_id, idx, lang, len)) AS k
+       |        FROM (SELECT ${bc}l.line, l.doc_id, l.idx, l.lang, l.len
+       |              FROM (SELECT DISTINCT line, doc_id, idx, lang, len
+       |                    FROM ${CurateIncr.linemTable(prefix)}) l${anti("l")})
+       |        GROUP BY line)),
+       |tfk AS (
+       |  SELECT split, lang, tok, SUM(c) AS c
+       |  FROM (SELECT DISTINCT split, lang, tok, src_day, c
+       |        FROM ${CurateIncr.tfmTable(prefix)})
+       |  GROUP BY split, lang, tok HAVING SUM(c) > 0),
+       |d1 AS (SELECT ${split("doc_id")} AS split, lang,
+       |              COUNT(1) AS n_docs, SUM(n_toks) AS sum_toks,
+       |              SUM(n_lines) AS n_lines
+       |       FROM md5k GROUP BY 1, 2),
+       |d2 AS (SELECT ${split("doc_id")} AS split, lang,
+       |              COUNT(1) AS n_kept, SUM(len) AS kept_chars
+       |       FROM linek GROUP BY 1, 2),
+       |d3 AS (SELECT split, lang, COUNT(1) AS n_vocab, SUM(c) AS n_tok_occ
+       |       FROM tfk GROUP BY split, lang)
+       |SELECT split, lang,
+       |       COALESCE(n_docs, CAST(0 AS BIGINT)) AS n_docs,
+       |       COALESCE(sum_toks, CAST(0 AS BIGINT)) AS sum_toks,
+       |       COALESCE(n_lines, CAST(0 AS BIGINT)) AS n_lines,
+       |       COALESCE(n_kept, CAST(0 AS BIGINT)) AS n_kept,
+       |       COALESCE(kept_chars, CAST(0 AS BIGINT)) AS kept_chars,
+       |       COALESCE(n_vocab, CAST(0 AS BIGINT)) AS n_vocab,
+       |       COALESCE(n_tok_occ, CAST(0 AS BIGINT)) AS n_tok_occ
+       |FROM d1 FULL OUTER JOIN d2 USING (split, lang)
+       |        FULL OUTER JOIN d3 USING (split, lang)""".stripMargin
   }
+
+  def registerCurate(s: SparkSession, prefix: String, warehouse: String): String =
+    create(s, prefix, curateSql(s, prefix, warehouse))
 
   // ---- L45 incremental ANN top-k (VERDICT r15 #4) ---------------------
 

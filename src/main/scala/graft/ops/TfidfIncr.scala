@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** L46: Incremental TF-IDF — the corpus-statistics family joins the
@@ -78,35 +77,7 @@ object TfidfIncr extends IncrMember.SliceFold {
     * scan of raw text — the family's no-runtime-cache discipline). */
   def runDay(s: SparkSession, slice: DataFrame, prefix: String,
              warehouse: String, day: Int, nBuckets: Int = 32): Unit =
-    IncrState.withLease(s, warehouse, prefix) {
-    import s.implicits._
-    val Seq(tfT, dfT) = stateTables(prefix)
-    val tf = slice
-      .select($"doc_id", explode(split($"text", " ")).as("tok"))
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
-      .withColumn("src_day", lit(day))
-    IncrState.writeDay(s, tf.withColumn("day", lit(day)), tfT, warehouse, day, nBuckets)
-    val freshTf = s.table(tfTable(prefix)).filter($"day" === day)
-    // df partial: one row per distinct token of the slice — vocab-sized,
-    // partial-aggregable (tf rows are already distinct on (doc_id, tok)).
-    // The df write and the day's doc count both read the just-written
-    // fresh partition and neither reads the other's output — overlap
-    // them (§2.6; join() below publishes nDay to this thread)
-    var nDay = 0L
-    IncrState.concurrently(Seq(
-      () => IncrState.writeDay(s,
-        freshTf.groupBy($"tok").agg(count(lit(1)).as("df_part"))
-          .withColumn("src_day", lit(day)).withColumn("day", lit(day)),
-        dfT, warehouse, day, nBuckets),
-      // the day's document count, read off the fresh partition (empty
-      // ReadSchema scan) into the O(days) marker — serving never scans
-      // for n_docs
-      () => nDay = freshTf.select($"doc_id").distinct().count()))
-    IncrState.writeDayCounts(s, warehouse, docCountsMarker(prefix),
-      IncrState.readDayCounts(s, warehouse, docCountsMarker(prefix)) + (day -> nDay))
-    // keeps the SQL report view's baked n_docs literal current
-    dayDone(s, prefix, warehouse, day)
-  }
+    step(s, slice, prefix, warehouse, day, nBuckets, sign = 1)
 
   /** Retraction (VERDICT r13 #1, round 14): fold one day's DELETED
     * documents OUT of the statistics state — the takedown/GDPR path.
@@ -126,77 +97,60 @@ object TfidfIncr extends IncrMember.SliceFold {
     * fold or delete event, same as runDay). */
   def deleteDay(s: SparkSession, deleted: DataFrame, prefix: String,
                 warehouse: String, day: Int, nBuckets: Int = 32): Unit =
+    step(s, deleted, prefix, warehouse, day, nBuckets, sign = -1)
+
+  /** The one day step of fold (`sign` 1) and delete (`sign` -1): every
+    * partial of the slice — tf, df and the day's doc count — lands with
+    * that sign. */
+  private def step(s: SparkSession, slice: DataFrame, prefix: String, warehouse: String,
+                   day: Int, nBuckets: Int, sign: Int): Unit =
     IncrState.withLease(s, warehouse, prefix) {
     import s.implicits._
+    def signed(n: Column): Column = if (sign < 0) -n else n
     val Seq(tfT, dfT) = stateTables(prefix)
-    val tf = deleted
+    val tf = slice
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
-      .groupBy($"doc_id", $"tok").agg((-count(lit(1))).as("tf"))
+      .groupBy($"doc_id", $"tok").agg(signed(count(lit(1))).as("tf"))
       .withColumn("src_day", lit(day))
     IncrState.writeDay(s, tf.withColumn("day", lit(day)), tfT, warehouse, day, nBuckets)
     val freshTf = s.table(tfTable(prefix)).filter($"day" === day)
-    // negative df partial: the fresh rows are one per (deleted doc,
-    // distinct token), so count = the df this slice contributed at fold
-    // time (identical text ⇒ identical token set). Same overlap as the
-    // fold: the df write and the doc count are independent reads of the
-    // just-written partition (§2.6)
-    var nDel = 0L
+    // df partial: one row per distinct token of the slice — vocab-sized,
+    // partial-aggregable (tf rows are already distinct on (doc_id, tok));
+    // on a delete, count = the df this slice contributed at fold time
+    // (identical text ⇒ identical token set). The df write and the day's
+    // doc count both read the just-written fresh partition and neither
+    // reads the other's output — overlap them (§2.6; join() below
+    // publishes nDay to this thread)
+    var nDay = 0L
     IncrState.concurrently(Seq(
       () => IncrState.writeDay(s,
-        freshTf.groupBy($"tok").agg((-count(lit(1))).as("df_part"))
+        freshTf.groupBy($"tok").agg(signed(count(lit(1))).as("df_part"))
           .withColumn("src_day", lit(day)).withColumn("day", lit(day)),
         dfT, warehouse, day, nBuckets),
-      () => nDel = freshTf.select($"doc_id").distinct().count()))
+      // the day's document count, read off the fresh partition (empty
+      // ReadSchema scan) into the O(days) marker — serving never scans
+      // for n_docs
+      () => nDay = freshTf.select($"doc_id").distinct().count()))
     IncrState.writeDayCounts(s, warehouse, docCountsMarker(prefix),
-      IncrState.readDayCounts(s, warehouse, docCountsMarker(prefix)) + (day -> -nDel))
+      IncrState.readDayCounts(s, warehouse, docCountsMarker(prefix)) + (day -> sign * nDay))
+    // keeps the SQL report view's baked n_docs literal current
     dayDone(s, prefix, warehouse, day)
   }
 
-  /** Serving read-views: dedup on the natural key over the tok-bucketed
-    * scans (a day replayed after a compaction re-lands identical rows
-    * beside its epoch copy until the next compaction collapses them),
-    * then net the SIGNED partials (fold rows positive, delete rows
-    * negative; a retracted document nets to 0 and drops out) — two
-    * HashAggregates per bucket, NO exchange, because the bucketing on
-    * `tok` satisfies any grouping that contains `tok`. */
-  private def tfView(s: SparkSession, prefix: String): DataFrame = {
-    import s.implicits._
-    s.table(tfTable(prefix)).select($"doc_id", $"tok", $"tf", $"src_day")
-      .dropDuplicates("doc_id", "tok", "src_day")
-      .groupBy($"doc_id", $"tok").agg(sum($"tf").as("tf"))
-      .filter($"tf" > 0)
-  }
-
-  private def dfTotals(s: SparkSession, prefix: String): DataFrame = {
-    import s.implicits._
-    s.table(dfTable(prefix)).select($"tok", $"src_day", $"df_part")
-      .dropDuplicates("tok", "src_day")
-      .groupBy($"tok").agg(sum($"df_part").as("df"))
-      .filter($"df" > 0)
-  }
-
-  /** The full TF-IDF report off the persisted state — output identical
-    * to `q_text_tfidf` (same expression, same tie-break). n_docs comes
-    * from the `_doc_counts` marker as a LITERAL; tf→df is a
-    * bucket-aligned join; the per-document top-k window is the one
-    * shuffle, exactly as in the batch plan (output-inherent). */
   /** Live document count of the member's corpus, off the O(days)
     * marker (fold entries positive, delete entries negative). */
   private[ops] def nDocs(s: SparkSession, prefix: String, warehouse: String): Long =
     IncrState.readDayCounts(s, warehouse, docCountsMarker(prefix)).values.sum
 
+  /** The full TF-IDF report off the persisted state — output identical
+    * to `q_text_tfidf` (same expression, same tie-break): the serving
+    * read `IncrViews.tfidfSql` (n_docs from the `_doc_counts` marker as
+    * a LITERAL; replay dedup and the signed tf/df nets ride the tok
+    * bucketing; the per-document top-k window is the one shuffle,
+    * exactly as in the batch plan) plus the presentation order. */
   def report(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
-    import s.implicits._
     allTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
-    val nDocs = this.nDocs(s, prefix, warehouse)
-    val w = Window.partitionBy($"doc_id").orderBy($"score".desc, $"tok")
-    tfView(s, prefix).join(dfTotals(s, prefix), "tok")
-      .withColumn("score",
-        round($"tf" * log(lit(nDocs).cast("double") / $"df"), 4))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= 3)
-      .select($"doc_id", $"rk", $"tok", $"score")
-      .orderBy("doc_id", "rk")
+    s.sql(IncrViews.tfidfSql(s, prefix, warehouse)).orderBy("doc_id", "rk")
   }
 
   /** Daily loop over `days` slices (doc_id mod days) + report — the

@@ -247,25 +247,14 @@ object TriIncr extends IncrMember.SliceFold {
 
   /** The per-vertex triangle profile off the persisted state — output
     * identical to `q_graph_triangles` (part_key, tri, degree, cc_ppm,
-    * top-20). Degree is one bucket-local count over the live adjacency;
-    * tri is the netted signed partial sum (bucket-local likewise); the
-    * only shuffles are the profile join and the presentation top-k. */
+    * top-20): the serving read `IncrViews.trianglesSql`, whose
+    * ORDER BY … LIMIT 20 is the top-k itself. Degree is one
+    * bucket-local count over the live adjacency; tri is the netted
+    * signed partial sum (bucket-local likewise); the only shuffles are
+    * the profile join and the top-k. */
   def report(s: SparkSession, prefix: String, warehouse: String): DataFrame = {
-    import s.implicits._
     allTables(prefix).foreach(IncrState.ensureRegistered(s, _, warehouse))
-    val deg = liveAdj(s, prefix).groupBy($"x".as("node")).agg(count(lit(1)).as("degree"))
-    val tri = s.table(triTable(prefix))
-      .select($"node", $"src_day", $"tri_part")
-      .dropDuplicates("node", "src_day")
-      .groupBy($"node").agg(sum($"tri_part").as("tri"))
-    deg.join(tri, Seq("node"), "left")
-      .select($"node".as("part_key"),
-        coalesce($"tri", lit(0L)).as("tri"), $"degree",
-        when($"degree" >= 2,
-          expr("coalesce(tri, 0L) * 2000000 div (degree * (degree - 1))"))
-          .otherwise(lit(0L)).as("cc_ppm"))
-      .orderBy($"tri".desc, $"part_key")
-      .limit(20)
+    s.sql(IncrViews.trianglesSql(s, prefix, warehouse))
   }
 
   /** The exhibit's edge set: the part co-occurrence graph of every

@@ -18,7 +18,4 @@ object AnnIncrStream extends MemberStream(graft.ops.AnnIncr) {
     StructField("label", IntegerType)))
 
   protected def inboxSchema: StructType = embSchema
-
-  /** The CDC inbox schema: the embedding columns + the op discriminator. */
-  val cdcSchema: StructType = IncrInboxStream.cdcSchema(embSchema)
 }

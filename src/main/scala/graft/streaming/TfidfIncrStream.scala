@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The incremental TF-IDF fold DRIVEN AS A STREAM (L46) on the shared
   * drive (see IncrInboxStream): each inbox slice of documents folds
@@ -11,12 +11,5 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * as folded (the negative tf/df partials re-derive from the slice). */
 object TfidfIncrStream extends MemberStream(graft.ops.TfidfIncr) {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  protected def inboxSchema: StructType = docSchema
+  protected def inboxSchema: StructType = CurateIncrStream.docSchema
 }

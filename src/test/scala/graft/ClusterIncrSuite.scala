@@ -57,6 +57,38 @@ class ClusterIncrSuite extends SparkSpec {
     } finally ops.ClusterIncr.dropState(spark, prefix)
   }
 
+  test("half-swapped epoch: the report counts distinct assignment rows; the pending re-run settles it") {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sfDir)
+    val prefix = ops.IncrState.freshPrefix("cluster_incr_h_")
+    val wh = ops.IncrState.newWarehouse()
+    try {
+      (0 to 1).foreach(d => ops.ClusterIncr.runDay(spark,
+        emb.filter(pmod($"vec_id", lit(2L)) === d), prefix, wh, d, nBuckets = 4))
+      ops.ClusterIncr.reassign(spark, prefix, wh, nBuckets = 4)
+      val settled = canon(ops.ClusterIncr.report(spark, prefix, wh))
+      def members() = ops.ClusterIncr.report(spark, prefix, wh)
+        .agg(sum($"n")).as[Long].head()
+      val nVecs = members()
+      // a crash between a re-assign's epoch write and its old-partition
+      // drop: a newer epoch whose rows equal the old ones on the natural
+      // key (vec_id, src_day) but not on the assignment
+      val asg = s"${prefix}_asg"
+      ops.IncrState.writeMarker(spark, wh, s"_${prefix}_reassign_pending", "1")
+      ops.IncrState.writeDay(spark,
+        spark.table(asg).select($"vec_id", (($"cl" + 1) % ops.ClusterIncr.K).as("cl"),
+          $"sim_i", $"src_day").withColumn("day", lit(-2)).localCheckpoint(),
+        ops.IncrState.StateTable(asg, "vec_id", Seq("vec_id", "src_day")), wh, -2, 4)
+      // the serving read (one SQL program with the view) dedups on EVERY
+      // column: in the window each vector counts once per distinct row
+      assert(members() == 2 * nVecs, "half-swapped epoch not read as distinct rows")
+      assert(ops.ClusterIncr.maybeReassign(spark, prefix, wh,
+        thresholdPpm = Long.MaxValue, nBuckets = 4), "pending marker ignored")
+      assert(canon(ops.ClusterIncr.report(spark, prefix, wh)) == settled,
+        "the re-run swap did not drop the half-swapped epoch")
+    } finally ops.ClusterIncr.dropState(spark, prefix)
+  }
+
   test("fold reads only the day's slice; the epoch reads state, never the raw corpus") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)

@@ -233,6 +233,67 @@ class IncrViewsSuite extends SparkSpec {
     }
   }
 
+  test("one program per read: each report is its view's plan under the presentation sort") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    val docs = Tables.documents(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
+    val e0 = Tables.lineitem(spark, sfDir)
+      .select($"l_orderkey".as("ok"), $"l_partkey".as("pk")).distinct()
+    val edges = e0.as("a").join(e0.as("b"), $"a.ok" === $"b.ok" && $"a.pk" < $"b.pk")
+      .select($"a.pk".as("u"), $"b.pk".as("v")).distinct()
+    val members = Seq("tfidf" -> ops.TfidfIncr, "domains" -> ops.DomainsIncr,
+      "tri" -> ops.TriIncr, "cluster" -> ops.ClusterIncr, "curate" -> ops.CurateIncr)
+    val p = members.map { case (m, _) => m -> ops.IncrState.freshPrefix(s"${m}_one_") }.toMap
+    val wh = ops.IncrState.newWarehouse()
+    // the presentation ORDER BY is the one operator the view leaves out
+    // (the triangle read's ORDER BY … LIMIT 20 is the top-k itself)
+    def onePlan(m: String, view: String, report: org.apache.spark.sql.DataFrame): Unit = {
+      val served = report.queryExecution.optimizedPlan match {
+        case Sort(_, true, child, _) => child
+        case plan => plan
+      }
+      val viaView = spark.sql(s"SELECT * FROM $view").queryExecution.optimizedPlan
+      assert(served.sameResult(viaView),
+        s"$m report and its view are two programs:\n$served\nvs\n$viaView")
+    }
+    try {
+      (0 to 1).foreach { d =>
+        val (dHalf, vHalf) = (pmod($"doc_id", lit(2L)) === d, pmod($"vec_id", lit(2L)) === d)
+        ops.TfidfIncr.runDay(spark, docs.filter(dHalf), p("tfidf"), wh, d, nBuckets = 4)
+        ops.DomainsIncr.runDay(spark, docs.filter(dHalf), p("domains"), wh, d, nBuckets = 4)
+        ops.TriIncr.runDay(spark, edges.filter(pmod($"u" + $"v", lit(2L)) === d),
+          p("tri"), wh, d, nBuckets = 4)
+        ops.ClusterIncr.runDay(spark, emb.filter(vHalf), p("cluster"), wh, d, nBuckets = 4)
+        ops.CurateIncr.runDayRetractable(spark, docs.filter(dHalf), p("curate"), wh, d,
+          nBuckets = 4)
+      }
+      // one delete each: the keyed members' tombstone anti-join (a
+      // broadcast hint) is part of the compared plan
+      ops.TfidfIncr.deleteDay(spark, docs.filter(pmod($"doc_id", lit(7L)) === 3),
+        p("tfidf"), wh, 2, nBuckets = 4)
+      ops.TriIncr.deleteDay(spark, edges.filter(pmod($"u", lit(13L)) === 3),
+        p("tri"), wh, 2, nBuckets = 4)
+      ops.ClusterIncr.deleteDay(spark, emb.filter(pmod($"vec_id", lit(11L)) === 5),
+        p("cluster"), wh, 2, nBuckets = 4)
+      ops.CurateIncr.deleteDayRetractable(spark, docs.filter(pmod($"doc_id", lit(7L)) === 3),
+        p("curate"), wh, 2, nBuckets = 4)
+      onePlan("tfidf", ops.IncrViews.registerTfidf(spark, p("tfidf"), wh),
+        ops.TfidfIncr.report(spark, p("tfidf"), wh))
+      onePlan("domains", ops.IncrViews.registerDomains(spark, p("domains"), wh),
+        ops.DomainsIncr.report(spark, p("domains"), wh))
+      onePlan("tri", ops.IncrViews.registerTriangles(spark, p("tri"), wh),
+        ops.TriIncr.report(spark, p("tri"), wh))
+      onePlan("cluster", ops.IncrViews.registerCluster(spark, p("cluster"), wh),
+        ops.ClusterIncr.report(spark, p("cluster"), wh))
+      onePlan("curate", ops.IncrViews.registerCurate(spark, p("curate"), wh),
+        ops.CurateIncr.reportRetractable(spark, p("curate"), wh))
+    } finally members.foreach { case (m, member) =>
+      ops.IncrViews.dropView(spark, p(m))
+      member.dropState(spark, p(m))
+    }
+  }
+
   test("v_*_topk == AnnIncr.topK via the INSERT-then-SELECT contract (VERDICT r15 #4)") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
