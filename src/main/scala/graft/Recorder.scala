@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
@@ -63,11 +64,12 @@ final class Recorder private () extends SparkListener {
     case _ =>
   }
 
-  private def recorded[T](result: T, start: Long, end: Long): Recorder.Recorded[T] = synchronized {
+  private def recorded[T](result: T, start: Long, end: Long,
+                          compiles: Long): Recorder.Recorded[T] = synchronized {
     val js = jobs.values.toSeq.sortBy(_.start)
     Recorder.Recorded(result, input, shuffleRead, shuffleWrite, spill, js,
       executions.values.toSeq.map(ex => ex.copy(jobs = js.filter(_.execution == ex.id))),
-      start, end)
+      start, end, compiles)
   }
 }
 
@@ -95,16 +97,18 @@ object Recorder {
   /** A body's result with the task totals (bytes), jobs and executions
     * of its scope, whose span is `start`-`end` in epoch ms. The driver
     * time is the scope's wall minus the union of all its job spans:
-    * build plus gaps. */
+    * build plus gaps. `compiles` counts the generated classes compiled
+    * during the scope (each a codegen-cache miss); the counter is
+    * JVM-global, so a concurrent scope's compiles count here too. */
   final case class Recorded[T](result: T, inputBytes: Long, shuffleReadBytes: Long,
                                shuffleWriteBytes: Long, spillBytes: Long,
                                jobs: Seq[Job], executions: Seq[Execution],
-                               start: Long, end: Long) {
+                               start: Long, end: Long, compiles: Long) {
     def driverMs: Long = (end - start) - union(jobs)
 
-    /** The layered record as one JSON object: the scope's totals and
-      * driver time, its jobs outside any execution, and per execution its
-      * phases, jobs, job-span union, gap and exchanges. A job is
+    /** The layered record as one JSON object: the scope's totals, codegen
+      * compiles and driver time, its jobs outside any execution, and per
+      * execution its phases, jobs, job-span union, gap and exchanges. A job is
       * `[id, start offset ms, duration ms, stages, tasks]` (the offset from
       * its execution's start, or the scope's); an exchange is
       * `[bytes, rows, child node]`. */
@@ -122,7 +126,7 @@ object Recorder {
       }
       s"""{"wall_ms":${end - start},"driver_ms":$driverMs,"input_bytes":$inputBytes,""" +
       s""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,""" +
-      s""""spill_bytes":$spillBytes,"jobs":${arr(jobs.filterNot(j => ids(j.execution)), start)},""" +
+      s""""spill_bytes":$spillBytes,"codegen_compiles":$compiles,"jobs":${arr(jobs.filterNot(j => ids(j.execution)), start)},""" +
       s""""executions":${execs.mkString("[", ",", "]")}}"""
     }
   }
@@ -174,11 +178,12 @@ object Recorder {
     GraftShim.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(r)
     try {
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val start = System.currentTimeMillis()
       val result = body
       val end = System.currentTimeMillis()
       GraftShim.drainListenerBus(spark)
-      r.recorded(result, start, end)
+      r.recorded(result, start, end, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled)
     } finally spark.sparkContext.removeSparkListener(r)
   }
 

@@ -209,15 +209,18 @@ object IncrViews {
     * aggregate over the replay-deduped assignment state. */
   def clusterSql(s: SparkSession, prefix: String, warehouse: String): String = {
     val hasTomb = s.catalog.tableExists(ClusterIncr.delTable(prefix))
+    // one row per (vec_id, src_day): the newest epoch's (the smallest
+    // day), so a re-assign caught between its epoch write and its old
+    // partitions' drop counts each vector once (rows of one day that share
+    // the key are equal, so MIN_BY per column reads one row; fixed-width
+    // buffers keep it a hash aggregate)
+    val asgCte =
+      s"""asg AS (SELECT vec_id, MIN_BY(cl, day) AS cl, MIN_BY(sim_i, day) AS sim_i
+         |        FROM ${ClusterIncr.asgTable(prefix)} GROUP BY vec_id, src_day)""".stripMargin
     val liveCte =
-      if (!hasTomb)
-        s"""live AS (SELECT vec_id, cl, sim_i
-           |         FROM (SELECT DISTINCT vec_id, cl, sim_i, src_day
-           |               FROM ${ClusterIncr.asgTable(prefix)}))""".stripMargin
+      if (!hasTomb) s"$asgCte,\nlive AS (SELECT vec_id, cl, sim_i FROM asg)"
       else
-        s"""asg AS (SELECT vec_id, cl, sim_i
-           |        FROM (SELECT DISTINCT vec_id, cl, sim_i, src_day
-           |              FROM ${ClusterIncr.asgTable(prefix)})),
+        s"""$asgCte,
            |live AS (SELECT /*+ BROADCAST(t) */ a.vec_id, a.cl, a.sim_i FROM asg a
            |         LEFT ANTI JOIN ${ClusterIncr.delTable(prefix)} t
            |           ON a.vec_id = t.vec_id)""".stripMargin

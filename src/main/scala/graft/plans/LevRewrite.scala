@@ -1,10 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Catalyst optimizer rule: bound edit-distance predicates.
@@ -32,7 +29,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * The rewrite only fires on non-negative integer literal thresholds and
   * is idempotent (the thresholded form no longer matches the pattern).
   */
-object LevRewrite extends Rule[LogicalPlan] with PredicateHelper {
+object LevRewrite extends SessionRule with PredicateHelper {
 
   /** An unbounded levenshtein call, seen through the LongType cast the
     * analyzer inserts when the threshold literal is a BIGINT. */
@@ -78,24 +75,4 @@ object LevRewrite extends Rule[LogicalPlan] with PredicateHelper {
       val next = rewrite(cond)
       if (next fastEquals cond) j else j.copy(condition = Some(next))
   }
-
-  /** Install on a live session through the public experimental hook
-    * (idempotent). `spark.sql.extensions` only applies at session build
-    * time, so this is the path for an already-running session. */
-  def enable(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this)) spark.experimental.extraOptimizations = cur :+ this
-  }
-
-  def disable(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == this)
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` — the library's
-  * session-extension entry point for cluster deployments (injected at
-  * session build, applies to every query including pure SQL users). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectOptimizerRule(_ => LevRewrite)
 }

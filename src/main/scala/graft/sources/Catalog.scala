@@ -65,8 +65,11 @@ object Catalog {
     * main.tf:304-314); after that a call resolves the name with no Spark
     * job, no SQL statement, no file listing and no lock. Registering
     * `dir` re-points the name, like a crawler re-run: frames built before
-    * keep reading the dir they were built on. */
+    * keep reading the dir they were built on. It also installs
+    * `plans.OnePartition` on the session (idempotent), so a query over a
+    * tiny dir runs with no shuffle jobs. */
   def table(spark: SparkSession, dir: String, t: String): DataFrame = {
+    graft.plans.OnePartition.enable(spark)
     val canon = qualify(spark, dir)
     resolved(spark, t, canon).getOrElse(synchronized {
       // this session may hold a relation cached from an earlier

@@ -18,14 +18,14 @@ object GraftShim {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
-  /** Materialize the optimizer rules an extensions object would inject —
-    * lets tests verify the `spark.sql.extensions` contract without
-    * building a whole new SparkContext (buildOptimizerRules is
-    * private[sql]). */
+  /** Materialize the optimizer rules an extensions object would inject,
+    * operator-optimization and pre-CBO rules alike — lets tests verify
+    * the `spark.sql.extensions` contract without building a whole new
+    * SparkContext (the builders are private[sql]). */
   def optimizerRulesOf(ext: org.apache.spark.sql.SparkSessionExtensions,
                        spark: SparkSession): Seq[org.apache.spark.sql.catalyst.rules.Rule[
                          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    ext.buildOptimizerRules(spark)
+    ext.buildOptimizerRules(spark) ++ ext.buildPreCBORules(spark)
 
   /** Pin a DataFrame's current contents as a persisted RDD WITHOUT the
     * InternalRow→Row→InternalRow round-trip `df.rdd` +

@@ -85,4 +85,29 @@ class ContractSuite extends AnyFunSuite {
     } yield s"$rel:${i + 1} ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString(s"${offenders.size} loader sites:\n", "\n", ""))
   }
+
+  test("one installer for graft's optimizer rules: only graft/plans assigns extraOptimizations") {
+    import scala.jdk.CollectionConverters._
+    val assign = "extraOptimizations\\s*=(?!=)".r
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { d =>
+      val s = java.nio.file.Files.walk(Bench.repoRoot.resolve(d))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    val planDir = Bench.repoRoot.resolve("src/main/scala/graft/plans")
+    val offenders = for {
+      f <- files if !f.startsWith(planDir)
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      if assign.findFirstIn(line).nonEmpty
+    } yield s"${Bench.repoRoot.relativize(f)}:${i + 1} ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString(s"${offenders.size} installers:\n", "\n", ""))
+    // a session built with spark.sql.extensions gets every graft rule
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new plans.GraftExtensions()(ext)
+    val rules = org.apache.spark.sql.graftshim.GraftShim.optimizerRulesOf(ext, SparkSpec.session)
+    Seq(plans.LevRewrite, plans.OnePartition).foreach(r =>
+      assert(rules.exists(_ eq r), s"GraftExtensions does not inject ${r.ruleName}"))
+  }
 }

@@ -1,14 +1,19 @@
 package graft
 
-import graft.plans.LevRewrite
+import graft.plans.{LevRewrite, OnePartition}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-/** The SparkSessionExtensions surface: graft's injected optimizer rule
-  * rewrites unbounded edit-distance predicates into Spark's early-exit
-  * thresholded kernel plus a length-difference short-circuit — the
-  * optimization fuzzyPairs hand-codes, applied automatically to
-  * migrated SQL. */
-class ExtensionsSuite extends SparkSpec {
+/** The SparkSessionExtensions surface: graft's optimizer rules.
+  * LevRewrite rewrites unbounded edit-distance predicates into Spark's
+  * early-exit thresholded kernel plus a length-difference short-circuit
+  * — the optimization fuzzyPairs hand-codes, applied automatically to
+  * migrated SQL. OnePartition runs a plan whose input is under AQE's
+  * minimum partition size as one stage. */
+class ExtensionsSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val names = Seq("spark", "sparks", "spork", "catalyst",
     "catalysts", "tungsten", "ab", "yz", "window", "windows")
@@ -99,5 +104,85 @@ class ExtensionsSuite extends SparkSpec {
     new graft.plans.GraftExtensions()(ext)
     val rules = org.apache.spark.sql.graftshim.GraftShim.optimizerRulesOf(ext, spark)
     assert(rules.exists(_ eq LevRewrite), "injected optimizer rule missing")
+  }
+
+  private val coalesceOn = "spark.sql.adaptive.coalescePartitions.enabled"
+  private val minPartition = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  private def shuffles(df: DataFrame): Int =
+    collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }.size
+
+  private def coalesced(p: LogicalPlan): Boolean =
+    p.exists { case Repartition(1, false, _) => true; case _ => false }
+
+  test("OnePartition: a tiny aggregate query runs as one job with no shuffle exchange") {
+    val q = () => SparkEntry.queries("q_agg_approx_pct")(spark, sfDir)
+    val df = q() // the first read of a dir registers its tables (one job)
+    val rec = Recorder.during(spark)(Recorder.materialize(q()))
+    assert(rec.jobs.size == 1, s"jobs: ${rec.jobs}")
+    df.collect()
+    assert(shuffles(df) == 0, s"shuffle left in:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("OnePartition: AQE coalescing off, or an input above the threshold, leaves the plan as it is") {
+    Tables.lineitem(spark, sfDir) // installs the rule
+    def q = Tables.lineitem(spark, sfDir).groupBy("l_returnflag").agg(sum("l_quantity"))
+      .orderBy("l_returnflag")
+    assert(coalesced(q.queryExecution.optimizedPlan), "test precondition: the rule did not fire")
+    Seq(coalesceOn -> "false", minPartition -> "1k").foreach { case (k, v) =>
+      withConf(k -> v) {
+        val plan = q.queryExecution.optimizedPlan
+        assert(!coalesced(plan), s"fired with $k=$v:\n$plan")
+        assert(OnePartition(plan) fastEquals plan, s"the rule changed the plan with $k=$v")
+        assert(shuffles(q) >= 2, s"exchanges lost with $k=$v")
+      }
+    }
+  }
+
+  test("OnePartition: rand(), spark_partition_id() and a cross join keep their exchanges") {
+    import spark.implicits._
+    val li = Tables.lineitem(spark, sfDir)
+    val plans = Map(
+      "rand" -> li.withColumn("r", rand(7)).groupBy("l_returnflag").agg(sum("r")),
+      "spark_partition_id" -> li.select(spark_partition_id().as("p")).groupBy("p").count(),
+      "cross join" -> li.crossJoin(Tables.nation(spark, sfDir))
+        .groupBy($"n_name").agg(sum("l_quantity")))
+    plans.foreach { case (name, df) =>
+      assert(!coalesced(df.queryExecution.optimizedPlan), s"$name: the rule fired")
+      assert(shuffles(df) >= 1, s"$name: exchange lost:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("OnePartition: applying the rule twice gives the plan of applying it once") {
+    Seq("q_agg_approx_pct", "q_intersect", "q_union_all", "q_xml_funcs").foreach { k =>
+      val once = SparkEntry.queries(k)(spark, sfDir).queryExecution.optimizedPlan
+      assert(coalesced(once), s"$k: test precondition: the rule did not fire")
+      assert(OnePartition(once) fastEquals once, s"$k: the rule re-fired on its own output")
+    }
+  }
+
+  test("OnePartition: perfbench's analyst_sql sample returns the same rows with and without it") {
+    // the sample analyst_sql runs (every 18th query and view of the
+    // interactive modules); a view is read through its body SQL
+    sources.Catalog.registerExternalTables(spark, sfDir)
+    val items: Seq[(String, () => DataFrame)] =
+      Seq("q_agg_approx_pct", "q_agg_rollup", "q_intersect", "q_map_funcs", "q_union_all",
+        "q_xml_funcs").map(k => k -> (() => SparkEntry.queries(k)(spark, sfDir))) :+
+        ("v_agg_entropy" -> (() => spark.sql(sources.Catalog.operatorViews("v_agg_entropy")._2)))
+    items.foreach { case (name, df) =>
+      val on = df()
+      assert(coalesced(on.queryExecution.optimizedPlan), s"$name: the rule did not fire")
+      val off = withConf(coalesceOn -> "false")(canon(df()))
+      assert(off.nonEmpty && canon(on) == off, s"$name: rows differ with the rule")
+    }
   }
 }

@@ -464,8 +464,19 @@ class PlanSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     // the A-ES top-K per group must NOT rank the whole corpus: Spark's
     // WindowGroupLimit pushes a per-partition partial top-K below the
     // group exchange, so the shuffle carries ≤ K·partitions rows per
-    // group instead of every doc
-    val p = planOf("q_sample_weighted")
+    // group instead of every doc. At sf0.001 plans.OnePartition runs the
+    // query as one stage: no group exchange, so no partial phase to push
+    // below it. The two-phase shape is the plan of an input above AQE's
+    // minimum partition size, which the lowered threshold stands in for.
+    val tiny = planOf("q_sample_weighted")
+    assert(!tiny.contains("Exchange hashpartitioning"), s"tiny input still shuffles:\n$tiny")
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    val p = try planOf("q_sample_weighted") finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
     assert(p.contains("WindowGroupLimit"),
       s"no partial group-limit before the rank shuffle:\n$p")
     assert(p.contains("Partial"), s"group-limit not two-phase:\n$p")

@@ -37,4 +37,17 @@ class RecorderSuite extends SparkSpec {
     assert(assigned.sorted == rec.jobs.map(_.id).sorted,
       s"jobs ${rec.jobs.map(j => j.id -> j.execution)} vs assigned $assigned")
   }
+
+  test("record: a query shape's first run compiles its classes; an identical rerun compiles none") {
+    // a constant no earlier plan inlined makes the generated code new
+    val k = 1000003L + (System.nanoTime() % 1000000L)
+    def run() = Recorder.during(spark)(Recorder.materialize(
+      spark.range(0, 1000, 1, 2).selectExpr(s"id * $k AS x").filter(s"x % 7 = ${k % 7}")))
+    val first = run()
+    assert(first.compiles >= 1, s"first run compiled ${first.compiles} classes")
+    val second = run()
+    assert(second.compiles == 0, s"identical rerun compiled ${second.compiles} classes")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(first.json)
+    assert(node.get("codegen_compiles").asLong == first.compiles)
+  }
 }
